@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -111,7 +112,7 @@ object SketchKernels {
     * md5 kernels below must agree bit-for-bit with the HOF formulation in
     * graft.ops.Dedup (and hence the DuckDB oracle), so they share this
     * tokenizer rather than the trimAll-based one above. */
-  private def columnTokens(text: UTF8String): Array[String] = {
+  private[functions] def columnTokens(text: UTF8String): Array[String] = {
     val s = text.trim().toLowerCase.toString
     // limit -1: Spark's `split` keeps trailing empty strings; Java's
     // default drops them (differs when text ends in non-space whitespace,
@@ -119,7 +120,7 @@ object SketchKernels {
     ws.split(s, -1)
   }
 
-  private val md5Local =
+  private[functions] val md5Local =
     new ThreadLocal[java.security.MessageDigest] {
       override def initialValue(): java.security.MessageDigest =
         java.security.MessageDigest.getInstance("MD5")
@@ -149,10 +150,14 @@ object SketchKernels {
     * This chain sat under every hash60 consumer (gram digests, KMV,
     * CMS x depth rows, shard shuffle, stratified split), several of
     * which run it inside single-task fixture scans. */
-  def md5Prefix(s: UTF8String, hexChars: Int): Long = {
+  def md5Prefix(s: UTF8String, hexChars: Int): Long =
+    md5Prefix(s.getBytes, hexChars)
+
+  /** [[md5Prefix]] of a binary value: its bytes digest as they are. */
+  def md5Prefix(bytes: Array[Byte], hexChars: Int): Long = {
     val md = md5Local.get()
     md.reset()
-    val d = md.digest(s.getBytes)
+    val d = md.digest(bytes)
     var v = 0L
     var i = 0
     while (i < hexChars) {
@@ -790,7 +795,9 @@ case class L2ArgminExpr(left: Expression, right: Expression)
 
 /** `md5_prefix(s, hexChars)` — first hexChars hex digits of md5(s) as a
   * long; the native form of `conv(substring(md5(s),1,hexChars),16,10)`
-  * (value-identical — see [[SketchKernels.md5Prefix]]). */
+  * (value-identical — see [[SketchKernels.md5Prefix]]). A string child
+  * digests its UTF-8 bytes, a binary child its bytes as they are — what
+  * Spark's `md5` does with each. */
 case class Md5PrefixExpr(child: Expression, hexChars: Int)
     extends UnaryExpression {
   require(hexChars >= 1 && hexChars <= 15,
@@ -798,15 +805,17 @@ case class Md5PrefixExpr(child: Expression, hexChars: Int)
   override def checkInputDataTypes():
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
-      case org.apache.spark.sql.types.StringType =>
+      case org.apache.spark.sql.types.StringType | BinaryType =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case t =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"md5_prefix requires a string child, got ${t.simpleString(10)}")
+          s"md5_prefix requires a string or binary child, got ${t.simpleString(10)}")
     }
   override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.md5Prefix(input.asInstanceOf[UTF8String], hexChars)
+  override def nullSafeEval(input: Any): Any = input match {
+    case b: Array[Byte] => SketchKernels.md5Prefix(b, hexChars)
+    case s => SketchKernels.md5Prefix(s.asInstanceOf[UTF8String], hexChars)
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => s"""
       ${ev.value} = graft.functions.SketchKernels.md5Prefix($c, $hexChars);""")
@@ -906,6 +915,11 @@ object GraftFunctions {
     column(GramDigestsExpr(expression(c), n, md5Keys))
   def gram_strings(c: Column, n: Int): Column =
     column(GramStringsExpr(expression(c), n))
+  def band_hit(keys: Column, sets: Broadcast[StaticKernels.BandSets]): Column =
+    column(BandHitExpr(expression(keys), sets))
+  def dsir_sum(text: Column, n: Int, salt: String,
+               terms: Broadcast[Array[Long]]): Column =
+    column(DsirSumExpr(expression(text), n, salt, terms))
 
   /** Register as SQL functions (graft_minhash_sig / graft_simhash64). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

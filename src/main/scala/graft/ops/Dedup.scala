@@ -447,14 +447,6 @@ object Dedup {
     df.withColumn(outCol,
       graft.functions.GraftFunctions.simhash64(col(textCol), 2))
 
-  /** Pure-functions._ variant of [[withSimHash]] (two staged projections so
-    * the vote aggregate runs once though the fold references it 64x). */
-  def withSimHashHof(df: DataFrame, textCol: String = "text",
-                     outCol: String = "simhash"): DataFrame =
-    df.withColumn("__votes", simHashVotes(col(textCol)))
-      .withColumn(outCol, votesToHash(col("__votes")))
-      .drop("__votes")
-
   /** 64-bit SimHash as a single Column (convenience for small inputs; at
     * scale prefer [[withSimHash]] whose staged projection guarantees the
     * vote pass runs once). */
@@ -605,17 +597,6 @@ object Dedup {
   private[graft] def gateBands(docs: DataFrame, idCol: String, textCol: String,
                         bands: Int, rowsPerBand: Int, shingleSize: Int,
                         md5Keys: Boolean): DataFrame = {
-    val sig =
-      if (md5Keys) graft.functions.GraftFunctions.minhash_sig_md5(
-        col(textCol), bands * rowsPerBand, shingleSize)
-      else graft.functions.GraftFunctions.minhash_sig(
-        col(textCol), bands * rowsPerBand, shingleSize)
-    def key(b: Int): Column =
-      if (md5Keys) md5(array_join(
-        transform(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
-          e => e.cast("string")), ","))
-      else xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
-        lit(b))
     // NO Par.fanOutReady here (round-15 A/B): the signature kernel IS
     // per-row heavy (t56's build+probe sigs ran ~1.2 s on one core at
     // sf0.1), but the 32-way spread regressed the key 2.7 -> 3.5 s
@@ -638,13 +619,36 @@ object Dedup {
       // [""] row agrees). Measured: t46 2.34 -> 1.80 s, t56 2.96 ->
       // 2.65 s raw while same-run untouched keys read 1.3-1.4x high
       // (host) — ~0.6x host-adjusted.
-      .filter(size(split(lower(trim(col(textCol))), "\\s+"))
-        >= shingleSize)
-      .select(col(idCol).as("id"), sig.as("sig"))
-      .select(col("id"),
-        posexplode(array((0 until bands).map(key): _*)))
+      .filter(shingles(col(textCol), shingleSize))
+      .select(col(idCol).as("id"),
+        gateSig(col(textCol), bands, rowsPerBand, shingleSize, md5Keys)
+          .as("sig"))
+      .select(col("id"), posexplode(
+        bandKeys(col("sig"), bands, rowsPerBand, md5Keys)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
   }
+
+  /** A document has at least one word `shingleSize`-shingle. */
+  private def shingles(text: Column, shingleSize: Int): Column =
+    size(split(lower(trim(text)), "\\s+")) >= shingleSize
+
+  private def gateSig(text: Column, bands: Int, rowsPerBand: Int,
+                      shingleSize: Int, md5Keys: Boolean): Column =
+    if (md5Keys) graft.functions.GraftFunctions.minhash_sig_md5(
+      text, bands * rowsPerBand, shingleSize)
+    else graft.functions.GraftFunctions.minhash_sig(
+      text, bands * rowsPerBand, shingleSize)
+
+  /** Element b: band b's key over the signature's rows
+    * [b·rowsPerBand, (b+1)·rowsPerBand). */
+  private def bandKeys(sig: Column, bands: Int, rowsPerBand: Int,
+                       md5Keys: Boolean): Column =
+    array((0 until bands).map { b =>
+      if (md5Keys) md5(array_join(
+        transform(slice(sig, b * rowsPerBand + 1, rowsPerBand),
+          e => e.cast("string")), ","))
+      else xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand), lit(b))
+    }: _*)
 
   /** Static band index for the streaming/batch near-dup ingest gate:
     * the distinct (band, band_hash) set of a reference corpus. Build
@@ -776,12 +780,19 @@ object Dedup {
     * pass with flag 0 (no evidence either way). Band params must match
     * the ones the index was built with.
     *
-    * Scale shape: incoming docs band map-side (native signature kernel),
-    * meet the index in a band-keyed left-semi shuffle join (nothing is
-    * broadcast — at 100 TB the index is corpus-sized), and only (id)
-    * rows cross the flag join back. Works identically on a batch frame
-    * and inside `foreachBatch` on a microbatch — the streaming runner
-    * ([[graft.streaming.Streams]].nearDupGateWriter) applies it
+    * Scale shape: when the index fits
+    * `spark.sql.autoBroadcastJoinThreshold` (the size at which a join
+    * against it would broadcast it), its (band, band_hash) set ships
+    * once to the executors ([[graft.functions.StaticCache]]: frozen for
+    * a checkpointed index, collected per call otherwise) and the gate is
+    * one map-only projection — the native signature kernel in its own
+    * Project, then a per-row band lookup — one output row per input
+    * row, no join, no shuffle. A corpus-sized index takes the band-keyed
+    * left-semi shuffle join instead, where only (id) rows cross the
+    * flag join back (that path flags per id: copies of an id share a
+    * flag). Works identically on a batch frame and inside `foreachBatch`
+    * on a microbatch — the streaming runner
+    * ([[graft.streaming.Streams.runNearDupGateOnce]]) applies it
     * per-microbatch against the checkpointed index. */
   def nearDupFlag(docs: DataFrame, index: DataFrame,
                   idCol: String = "doc_id", textCol: String = "text",
@@ -802,15 +813,53 @@ object Dedup {
                               idCol: String, textCol: String, bands: Int,
                               rowsPerBand: Int, shingleSize: Int,
                               md5Keys: Boolean): DataFrame = {
-    val hits = gateBands(docs, idCol, textCol, bands, rowsPerBand,
-        shingleSize, md5Keys)
-      .join(index, Seq("band", "band_hash"), "left_semi")
-      .select(col("id")).distinct()
-      .withColumn("__hit", lit(1L))
-    docs.join(hits, docs(idCol) === hits("id"), "left")
-      .select(docs.columns.map(docs(_)) :+
-        coalesce(col("__hit"), lit(0L)).as("is_near_dup"): _*)
+    val indexBytes = index.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (indexBytes >= 0 && indexBytes <= index.sparkSession.sessionState
+        .conf.autoBroadcastJoinThreshold) {
+      // the signature is a Project of its own: inside the when() below
+      // each band key would re-run the kernel (conditional branches are
+      // not subexpression-eliminated)
+      val sig = "__nd_sig"
+      val flag = when(shingles(col(textCol), shingleSize),
+          graft.functions.GraftFunctions.band_hit(
+            bandKeys(col(sig), bands, rowsPerBand, md5Keys),
+            bandSets(index)))
+        .otherwise(lit(0L))
+      docs.select(col("*"), gateSig(col(textCol), bands, rowsPerBand,
+          shingleSize, md5Keys).as(sig))
+        .select(docs.columns.map(col) :+ flag.as("is_near_dup"): _*)
+    } else {
+      val hits = gateBands(docs, idCol, textCol, bands, rowsPerBand,
+          shingleSize, md5Keys)
+        .join(index, Seq("band", "band_hash"), "left_semi")
+        .select(col("id")).distinct()
+        .withColumn("__hit", lit(1L))
+      docs.join(hits, docs(idCol) === hits("id"), "left")
+        .select(docs.columns.map(docs(_)) :+
+          coalesce(col("__hit"), lit(0L)).as("is_near_dup"): _*)
+    }
   }
+
+  /** A band index as per-band key sets: element b holds band b's
+    * band_hash values (boxed longs, or UTF8Strings for the md5 family). */
+  private val bandSetsCache =
+    new graft.functions.StaticCache[graft.functions.StaticKernels.BandSets]
+
+  private def bandSets(index: DataFrame): org.apache.spark.broadcast
+      .Broadcast[graft.functions.StaticKernels.BandSets] =
+    bandSetsCache(index) { index =>
+      val rows = index.select(col("band"), col("band_hash")).collect()
+      val width = if (rows.isEmpty) 0 else rows.map(_.getInt(0)).max + 1
+      val sets = Array.fill(width)(new java.util.HashSet[AnyRef]())
+      rows.foreach { r =>
+        sets(r.getInt(0)).add(r.get(1) match {
+          case s: String =>
+            org.apache.spark.unsafe.types.UTF8String.fromString(s)
+          case v => v.asInstanceOf[AnyRef]
+        })
+      }
+      sets
+    }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. '23, "SemDeDup:
     * Data-efficient learning at web-scale through semantic

@@ -41,15 +41,6 @@ object TextOps {
         when(meanWordLen.between(2, 12), 0.1).otherwise(0.0))), 4)
   }
 
-  /** Character n-gram shingles of the lowercased, whitespace-collapsed text. */
-  def charShingles(text: Column, n: Int): Column = {
-    val norm = lower(regexp_replace(trim(text), "\\s+", " "))
-    filter(
-      transform(sequence(lit(1), greatest(length(norm) - (n - 1), lit(1))),
-        i => norm.substr(i, lit(n))),
-      s => length(s) === n)
-  }
-
   /** Word n-gram shingles, in position order. Built with the same
     * chained zip_with-over-shifted-slices discipline as
     * [[wordShingleHashes]]: every lambda reads ONLY its input elements.
@@ -135,11 +126,6 @@ object TextOps {
     * (case-folded, whitespace-collapsed) — the exact-dup key. */
   def docFingerprint(text: Column): Column =
     md5(lower(regexp_replace(trim(text), "\\s+", " ")))
-
-  /** 64-bit rolling-style fingerprint as a long (xxhash64 of normalized
-    * text) — cheaper join key than the hex digest at 100 TB. */
-  def docFingerprint64(text: Column): Column =
-    xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
 
   /** First 32 bits of md5(s) as an unsigned long in [0, 2^32) — the
     * deterministic, cross-engine-recomputable uniform hash used for
@@ -1893,11 +1879,11 @@ object TextOps {
     *
     * Scale shape: both corpora explode to gram rows map-side
     * ([[ngramRows]]), each collapsing to a `buckets`-row count table
-    * (map-side partial agg) that joins back BROADCAST onto the raw
-    * gram rows; the only corpus-sized shuffle is the per-doc
-    * aggregate, which ships (id, decimal) rows. The feature space is
-    * fixed at `buckets` regardless of corpus size — the reason DSIR
-    * scales where exact-vocabulary importance weights don't. */
+    * (map-side partial agg) — the [[dsirProfile]]; scoring is then
+    * one map-only projection ([[dsirScore]]), nothing corpus-sized
+    * shuffles. The feature space is fixed at `buckets` regardless of
+    * corpus size — the reason DSIR scales where exact-vocabulary
+    * importance weights don't. */
   def dsirWeights(raw: DataFrame, target: DataFrame, n: Int = 2,
                   buckets: Int = 4096, salt: String = "dsir",
                   idCol: String = "doc_id",
@@ -1942,28 +1928,73 @@ object TextOps {
     * probe-forever half: per document, the sum over its gram
     * occurrences of the add-one-smoothed log likelihood ratio (see
     * [[dsirWeights]] for the arithmetic contract; (n, buckets, salt)
-    * MUST match the profile's or the buckets silently disagree).
-    * Stateless per input frame, so the streaming runner applies it
-    * per-microbatch against the frozen profile unchanged (s09). */
+    * MUST match the profile's or the buckets silently disagree). One
+    * output row per input row, in input order: (idCol, n_grams,
+    * log_weight). Stateless per input frame, so the streaming runner
+    * applies it per-microbatch against the frozen profile unchanged
+    * (s09).
+    *
+    * Scale shape: the profile's `buckets` ln() terms (each cast to
+    * decimal(27,12) by Spark) ship once to the
+    * executors ([[graft.functions.StaticCache]]: frozen for a
+    * checkpointed profile, collected per call otherwise), and a native
+    * kernel sums each document's own grams against them as unscaled
+    * longs — one map-only projection, no gram rows, no join, no
+    * shuffle. The sum is exact or loud: past the 64-bit unscaled range
+    * it throws, naming dsirScore. */
   def dsirScore(docs: DataFrame, profile: DataFrame, n: Int = 2,
                 buckets: Int = 4096, salt: String = "dsir",
                 idCol: String = "doc_id",
-                textCol: String = "text"): DataFrame = {
-    val perDoc = dsirBucketRows(docs, n, buckets, salt, textCol,
-        Seq(idCol))
-      .join(broadcast(profile), Seq("__b"))
-      .withColumn("__lw", log(
-        ((col("__ct") + 1).cast("double") *
-          (col("__nr") + buckets).cast("double")) /
-        ((col("__cr") + 1).cast("double") *
-          (col("__nt") + buckets).cast("double")))
-        .cast("decimal(27,12)"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_grams"),
-        round(sum(col("__lw")).cast("double"), 6).as("__w"))
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        col("__w").as("log_weight"))
+                textCol: String = "text"): DataFrame =
+    withDsirScore(docs, Seq(idCol), profile, n, buckets, salt, textCol)
+
+  /** `frame`'s `keep` columns plus [[dsirScore]]'s (n_grams, log_weight)
+    * over its `textCol`. The kernel's struct is a Project of its own, so
+    * its two fields read one evaluation. */
+  private[graft] def withDsirScore(frame: DataFrame, keep: Seq[String],
+                                   profile: DataFrame, n: Int,
+                                   buckets: Int, salt: String,
+                                   textCol: String): DataFrame = {
+    val k = keep.map(col)
+    frame.select(k :+ graft.functions.GraftFunctions.dsir_sum(col(textCol),
+        n, salt, dsirTerms(profile, buckets)).as("__dsir"): _*)
+      .select(k :+
+        coalesce(col("__dsir.n_grams"), lit(0L)).as("n_grams") :+
+        round(col("__dsir.sum").cast("double"), 6).as("log_weight"): _*)
+  }
+
+  /** A [[dsirProfile]] as its per-bucket terms: element b is bucket b's
+    * ln(p_target / p_raw) cast to decimal(27,12), as an unscaled long.
+    * The profile must hold each of the `buckets` buckets exactly once. */
+  private val dsirTermsCache = new graft.functions.StaticCache[Array[Long]]
+
+  private def dsirTerms(profile: DataFrame, buckets: Int)
+    : org.apache.spark.broadcast.Broadcast[Array[Long]] = {
+    val terms = dsirTermsCache(profile) { p =>
+      val terms = new Array[Long](buckets)
+      val seen = new Array[Boolean](buckets)
+      val rows = p.select(col("__b"), log(
+          ((col("__ct") + 1).cast("double") *
+            (col("__nr") + buckets).cast("double")) /
+          ((col("__cr") + 1).cast("double") *
+            (col("__nt") + buckets).cast("double")))
+          .cast("decimal(27,12)"))
+        .collect()
+      rows.foreach { r =>
+        val b = r.getLong(0)
+        require(b >= 0 && b < buckets && !seen(b.toInt),
+          s"dsirScore: profile bucket $b is not one of 0..${buckets - 1} " +
+            "exactly once")
+        seen(b.toInt) = true
+        terms(b.toInt) =
+          r.getDecimal(1).setScale(12).unscaledValue.longValueExact
+      }
+      require(rows.length == buckets, s"dsirScore: the profile has " +
+        s"${rows.length} buckets, the score asks for $buckets")
+      terms
+    }
+    require(terms.value.length == buckets, s"dsirScore: the profile has " +
+      s"${terms.value.length} buckets, the score asks for $buckets")
+    terms
   }
 }

@@ -98,16 +98,6 @@ object Segmentation {
       .select(col("UniquePatronId"),
         coalesce(col("PersonaName"), lit("Undefined")).as("PersonaName"))
 
-  /** Seg:184-217 end-to-end into the bridge fact: join the persona names to
-    * DimPatronSegmentation ids; unique (UniquePatronId, SegmentationId). */
-  def factSegmentation(ratios: DataFrame, dimUniquePatron: DataFrame,
-                       dimSegmentation: DataFrame): DataFrame =
-    classify(ratios, dimUniquePatron)
-      .join(broadcast(dimSegmentation.select(col("Id").as("SegmentationId"),
-        col("PersonaName"))), Seq("PersonaName"))
-      .select(col("UniquePatronId"), col("SegmentationId"))
-      .distinct()
-
   /** Seg:391-399 — ClientMinimarketSpend top-10 snapshot: rank minimarkets
     * per (client, territory, persona) by spend share, keep MMRank <= 10. */
   def topMinimarkets(spend: DataFrame, k: Int = 10): DataFrame =

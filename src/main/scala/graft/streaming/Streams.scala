@@ -975,13 +975,13 @@ object Streams {
     * (native signature kernel) and screened against a STATIC corpus band
     * index ([[graft.ops.Dedup.nearDupIndex]], built once and
     * materialized), each row emerging with an `is_near_dup` flag. The
-    * per-doc flag needs an aggregate over the doc's exploded bands, so
-    * the gate runs the documented Spark shape for stream-static
-    * screening with per-batch joins: `foreachBatch`, applying the batch
-    * gate ([[graft.ops.Dedup.nearDupFlag]]) to every microbatch — each
-    * batch is one band-keyed semi-join against the index, stateless
-    * across batches, and the paced stream's union must equal the batch
-    * gate over the same files (StreamingSpec-pinned; benched as s05).
+    * gate runs `foreachBatch`, applying the batch gate
+    * ([[graft.ops.Dedup.nearDupFlag]]) to every microbatch — each batch
+    * is one map-only band lookup against the index (a checkpointed index
+    * is collected on the first batch only; an index past the broadcast
+    * threshold takes a band-keyed semi-join), stateless across batches, and the paced stream's
+    * union must equal the batch gate over the same files
+    * (StreamingSpec-pinned; benched as s05).
     * `sink` receives each flagged microbatch (the bench passes a noop
     * writer; a deployment appends to the ingest table). */
   def runNearDupGateOnce(spark: SparkSession, dir: String,
@@ -1080,18 +1080,6 @@ object Streams {
     q.awaitTermination()
   }
 
-  /** Streaming DSIR ingest gate — the s05/s07 build-once/probe-forever
-    * discipline applied to the data-selection model: incoming documents
-    * are scored per microbatch against a FROZEN
-    * [[graft.ops.TextOps.dsirProfile]] (built once from the raw/target
-    * model corpora and materialized), each row emerging with its
-    * (n_grams, log_weight) — a deployment thresholds on log_weight to
-    * keep target-like documents at ingest. Per batch: one broadcast
-    * profile join + one doc-keyed aggregate ([[graft.ops.TextOps
-    * .dsirScore]]), stateless across batches, so the paced stream's
-    * union equals the batch scorer over the same files
-    * (StreamingSpec-pinned; benched as s09). (n, buckets, salt) MUST
-    * match the profile build or the buckets silently disagree. */
   /** Composed per-document ingest screen — every doc-modality gate in
     * ONE pass over an incoming frame: per document its quality score
     * and PII count (pure projections), its near-dup flag against the
@@ -1099,31 +1087,34 @@ object Streams {
     * log-weight against the frozen bucket profile
     * ([[graft.ops.TextOps.dsirScore]]) — the columns an ingest policy
     * thresholds on, in one frame, so a deployment runs ONE stream
-    * instead of three. Stateless per input frame (both statics are
-    * build-once), so paced == batch by construction
+    * instead of three. One output row per input row, so repeated and
+    * null ids come through as they went in. Stateless per input frame
+    * (both statics are build-once), so paced == batch by construction
     * (StreamingSpec-pinned); each component's arithmetic is separately
     * oracle-gated (t46 family, t01/t37, t66/t67).
     *
-    * Scale shape: the union of the components' shapes — two per-row
-    * projections, one band-keyed join against the index, one broadcast
-    * profile join + doc-keyed aggregate; the flag/score frames re-join
-    * the input on its id, nothing corpus-sized broadcasts. */
+    * Scale shape: one map-only projection over `docs` — no join, no
+    * shuffle, no per-batch broadcast. Both statics ship once to the
+    * executors and native kernels probe them per row; a checkpointed
+    * static (`localCheckpoint()`, as the build-once discipline asks) is
+    * collected on the first call only, so every later microbatch is one
+    * job over its own rows. A band index past
+    * `spark.sql.autoBroadcastJoinThreshold` is the exception: the
+    * near-dup flag then takes the band-keyed semi-join
+    * ([[graft.ops.Dedup.nearDupFlag]]). */
   def ingestScreen(docs: DataFrame, bandIndex: DataFrame,
                    dsirProfile: DataFrame,
                    bands: Int = 8, rowsPerBand: Int = 4,
                    shingleSize: Int = 3, n: Int = 2,
                    buckets: Int = 4096,
-                   salt: String = "dsir"): DataFrame =
-    graft.ops.Dedup.nearDupFlag(docs, bandIndex,
-        bands = bands, rowsPerBand = rowsPerBand,
-        shingleSize = shingleSize)
-      .join(graft.ops.TextOps.dsirScore(
-          docs.select(col("doc_id"), col("text")), dsirProfile,
-          n, buckets, salt),
-        Seq("doc_id"))
-      .withColumn("quality",
-        graft.ops.TextOps.qualityScore(col("text")))
+                   salt: String = "dsir"): DataFrame = {
+    val flagged = graft.ops.Dedup.nearDupFlag(docs, bandIndex,
+      bands = bands, rowsPerBand = rowsPerBand, shingleSize = shingleSize)
+    graft.ops.TextOps.withDsirScore(flagged, flagged.columns.toSeq,
+        dsirProfile, n, buckets, salt, "text")
+      .withColumn("quality", graft.ops.TextOps.qualityScore(col("text")))
       .withColumn("pii", graft.ops.TextOps.piiCount(col("text")))
+  }
 
   /** Stream-static as-of enrichment — [[graft.ops.Temporal.asofJoin]]
     * applied per microbatch: each paced batch of purchase events is
@@ -1203,6 +1194,19 @@ object Streams {
     q.awaitTermination()
   }
 
+  /** Streaming DSIR ingest gate — the s05/s07 build-once/probe-forever
+    * discipline applied to the data-selection model: incoming documents
+    * are scored per microbatch against a FROZEN
+    * [[graft.ops.TextOps.dsirProfile]] (built once from the raw/target
+    * model corpora and materialized), each row emerging with its
+    * (n_grams, log_weight) — a deployment thresholds on log_weight to
+    * keep target-like documents at ingest. Per batch: one map-only
+    * projection ([[graft.ops.TextOps.dsirScore]]) against the profile's
+    * terms (collected on the first batch only when the profile is a
+    * checkpoint); stateless across batches, so the paced stream's union
+    * equals the batch scorer over the same files
+    * (StreamingSpec-pinned; benched as s09). (n, buckets, salt) MUST
+    * match the profile build or the buckets silently disagree. */
   def runDsirGateOnce(spark: SparkSession, dir: String,
                       profile: DataFrame, sink: DataFrame => Unit,
                       filesPerTrigger: Int = 1, n: Int = 2,

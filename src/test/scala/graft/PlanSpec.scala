@@ -340,21 +340,64 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("t66: DSIR scoring broadcasts the bucket-count tables and the " +
-      "totals scalar; gram rows are never broadcast") {
-    // with auto-broadcast off, the only broadcasts are the explicit
-    // hints: the buckets-row dist table (hash join onto the gram rows)
-    // and the 1-row totals (the lone nested-loop); everything
-    // corpus-sized meets in shuffled joins/aggregates
+  test("t66: DSIR scoring is one map-only projection over the documents: " +
+      "no gram rows, no join, no broadcast") {
+    // with auto-broadcast off, the profile's own totals broadcast runs
+    // in the job that collects its terms; the scoring plan is the scan,
+    // the per-document kernel and the output sort's range exchange
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val p = plan("t66_dsir_weights")
       assert(!p.contains("CartesianProduct"), p.take(2000))
-      assert("BroadcastExchange".r.findAllIn(p).size >= 2, p.take(2500))
-      assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1,
-        p.take(2500))
+      assert(!p.contains("BroadcastExchange"), p.take(2500))
+      assert(!p.contains("Join") && !p.contains("Generate"), p.take(2500))
+      assert("Exchange".r.findAllIn(p).size === 1, p.take(2500))
+      assert(p.contains("dsir_sum("), p.take(2500))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("ingestScreen against checkpointed statics: after the first call a " +
+      "microbatch is ONE job with no Exchange, and minhash_sig runs once " +
+      "per row") {
+    import org.apache.spark.sql.functions.col
+    import graft.ops.{Dedup, TextOps}
+    import graft.streaming.Streams
+    val docs = graft.etl.Tables.documents(spark, d)
+    val idx = Dedup.nearDupIndex(docs.select(col("doc_id"), col("text")))
+      .localCheckpoint()
+    val prof = TextOps.dsirProfile(docs, docs.filter(col("lang") === "en"))
+      .localCheckpoint()
+    def batch(lo: Long) =
+      docs.filter(col("doc_id") >= lo && col("doc_id") < lo + 20)
+    // the first call freezes both statics
+    Streams.ingestScreen(batch(0), idx, prof).collect()
+    val sc = spark.sparkContext
+    val tag = "graft.spec.ingestScreen"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(tag) != null)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "on")
+    try {
+      val screened = Streams.ingestScreen(batch(20), idx, prof)
+      assert(screened.collect().nonEmpty)
+      org.apache.spark.ListenerDrain(sc)
+      assert(jobs.get === 1, "a microbatch after the first must run one job")
+      val p = screened.queryExecution.executedPlan.toString
+      // "Exchange" covers BroadcastExchange and ShuffleExchange alike
+      assert(!p.contains("Exchange") && !p.contains("Join"), p.take(2500))
+      // the signature is its own Project: once in the plan, not once per
+      // band key inside the flag's CASE WHEN
+      assert("minhash_sig\\(".r.findAllIn(p).size === 1, p.take(2500))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("t101: the CMS grid aggregates with a map-side partial and the " +

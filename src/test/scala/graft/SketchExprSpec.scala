@@ -291,4 +291,31 @@ class SketchExprSpec extends SparkSpec {
           s"(got ${got.length}, want ${want.length})")
     }
   }
+
+  test("md5_prefix over a binary column == conv(substring(md5(bin),1,n)," +
+      "16,10), interpreted and codegen'd") {
+    // shapes: empty, a zero byte, sign-bit bytes, multi-byte UTF-8, and
+    // lengths 0..99 of patterned bytes for varied leading nibbles
+    val base = Seq(Array.emptyByteArray, Array[Byte](0),
+      Array[Byte](-1, 0, 127, -128),
+      "héllo wörld ✓".getBytes(java.nio.charset.StandardCharsets.UTF_8)) ++
+      (0 until 100).map(i => Array.tabulate(i)(j => (j * 31 + i).toByte))
+    val df = base.map(Tuple1(_)).toDF("b")
+    // a projection straight over the local rows is folded on the driver
+    // (interpreted); above an exchange it runs in generated code
+    for (frame <- Seq(df, df.repartition(2)); n <- Seq(8, 15)) {
+      val got = frame.select(col("b"),
+          GraftFunctions.md5_prefix(col("b"), n).as("kernel"),
+          conv(substring(md5(col("b")), 1, n), 16, 10).cast("long")
+            .as("chain"))
+        .collect()
+      assert(got.length === base.length)
+      got.foreach(r => assert(r.getLong(1) == r.getLong(2),
+        s"n=$n bytes=${r.getAs[Array[Byte]](0).mkString(",")}: kernel " +
+          s"${r.getLong(1)} != chain ${r.getLong(2)}"))
+    }
+    val nr = Seq(Tuple1(Option.empty[Array[Byte]])).toDF("b")
+      .select(GraftFunctions.md5_prefix(col("b"), 8)).collect()
+    assert(nr.head.isNullAt(0))
+  }
 }

@@ -1319,4 +1319,47 @@ class StreamingSpec extends SparkSpec {
     }
     assert(chain(e2).contains("88-half-life horizon"), chain(e2).take(300))
   }
+
+  test("ingestScreen: one row per input row — a repeated id and a null " +
+      "id come through as they went in, each scored on its own text") {
+    import graft.ops.{Dedup, TextOps}
+    val d = "/root/testdata/sf0.01"
+    val docs = graft.etl.Tables.documents(spark, d)
+    val idx = Dedup.nearDupIndex(docs.select(col("doc_id"), col("text")))
+      .localCheckpoint()
+    val prof = TextOps.dsirProfile(docs, docs.filter(col("lang") === "en"))
+      .localCheckpoint()
+    // docs 0-2, a second copy of doc 0 and a null-id copy of doc 0
+    val doc0 = docs.filter(col("doc_id") === 0)
+    val input = docs.filter(col("doc_id") <= 2).unionByName(doc0)
+      .unionByName(doc0.withColumn("doc_id", lit(null).cast("long")))
+    type Screened = (Option[Long], Long, Long, Option[Double], Double, Long)
+    def rows(b: org.apache.spark.sql.DataFrame): Seq[Screened] =
+      b.select(col("doc_id"), col("is_near_dup"), col("n_grams"),
+          col("log_weight"), col("quality"), col("pii").cast("long"))
+        .collect().toSeq.map(r => (
+          if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getLong(1),
+          r.getLong(2), if (r.isNullAt(3)) None else Some(r.getDouble(3)),
+          r.getDouble(4), r.getLong(5)))
+    val out = rows(Streams.ingestScreen(input, idx, prof))
+    assert(out.size === 5, s"5 rows in, ${out.size} out")
+    assert(out.map(_._1).sortBy(_.getOrElse(-1L)) ===
+      Seq(None, Some(0L), Some(0L), Some(1L), Some(2L)))
+    // every copy of doc 0 carries doc 0's own screen, id aside
+    val alone = rows(Streams.ingestScreen(doc0, idx, prof)).head
+    val copies = out.filter(r => r._1.forall(_ == 0L))
+    assert(copies.size === 3)
+    copies.foreach(r => assert(r.copy(_1 = Some(0L)) === alone))
+    // n_grams counts the text's own bigrams, not those of every copy
+    val text0 = doc0.select(col("text")).head().getString(0)
+    assert(alone._3 === text0.trim.toLowerCase.split("\\s+").length - 1L)
+    assert(alone._4.isDefined && alone._2 === 1L)
+    // the standalone scorer obeys the same one-row-per-row contract
+    val ds = TextOps.dsirScore(input, prof).collect()
+    assert(ds.length === 5)
+    val zeros = ds.filter(r => r.isNullAt(0) || r.getLong(0) == 0L)
+    assert(zeros.length === 3)
+    zeros.foreach(r => assert((r.getLong(1), r.getDouble(2)) ===
+      ((alone._3, alone._4.get))))
+  }
 }

@@ -608,4 +608,52 @@ class TextDedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toList
     assert(dp === List((1L, 2L)), s"expected one (1,2) pair: $dp")
   }
+
+  test("nearDupFlag: the frozen band lookup == the band-keyed semi-join " +
+      "on both hash families (sf0.01); the index size picks the path") {
+    val corpus = graft.etl.Tables.documents(spark, "/root/testdata/sf0.01")
+      .select(col("doc_id"), col("text"))
+    // incoming: the corpus itself (hits, and short docs that pass with
+    // 0), its t46 twins (mostly hits) and fresh text (misses)
+    val twins = corpus.select((col("doc_id") + 100000L).as("doc_id"),
+      concat_ws(" ",
+        slice(split(trim(col("text")), "\\s+"), 2, 1000000)).as("text"))
+    val fresh = spark.range(0, 50).select(
+      (col("id") + 900000L).as("doc_id"),
+      concat_ws(" ", concat(lit("zz"), col("id")),
+        concat(lit("yy"), col("id")), concat(lit("xx"), col("id")),
+        concat(lit("ww"), col("id"))).as("text"))
+    val incoming = corpus.unionByName(twins).unionByName(fresh)
+    def flags(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.select(col("doc_id"), col("is_near_dup"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def plan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString
+    type Gate = (org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame
+    // the xxhash64 index is checkpointed (frozen once), the md5 one is
+    // not (collected per call): both StaticCache branches
+    val families: Seq[(String, org.apache.spark.sql.DataFrame, Gate)] = Seq(
+      ("xxhash64", Dedup.nearDupIndex(corpus).localCheckpoint(),
+        (df, ix) => Dedup.nearDupFlag(df, ix)),
+      ("md5", Dedup.nearDupIndexMd5(corpus),
+        (df, ix) => Dedup.nearDupFlagMd5(df, ix)))
+    for ((family, idx, gate) <- families) {
+      val lookup = gate(incoming, idx)
+      assert(!plan(lookup).contains("Join"),
+        s"$family: a small index must take the lookup:\n${plan(lookup)}")
+      val got = flags(lookup)
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      val want = try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val semi = gate(incoming, idx)
+        assert(plan(semi).contains("LeftSemi"),
+          s"$family: past the threshold the gate must semi-join")
+        flags(semi)
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      assert(got === want, s"$family: lookup and semi-join flags diverged")
+      assert(got.values.toSet === Set(0L, 1L), s"$family: need hits and misses")
+      assert((900000L until 900050L).forall(got(_) == 0L))
+    }
+  }
 }

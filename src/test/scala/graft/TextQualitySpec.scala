@@ -877,4 +877,102 @@ class TextQualitySpec extends SparkSpec {
         s"fast-sum diverged past 1e-6 at round-6 output: $e vs $f")
     }
   }
+
+  /** The gram-row formulation [[TextOps.dsirScore]] replaced: explode
+    * every document to gram rows, broadcast-join the profile on the
+    * bucket, sum the decimal(27,12) terms per document id and left-join
+    * back. Ids must be unique (the aggregate is keyed on them). */
+  private def dsirScoreReference(docs: org.apache.spark.sql.DataFrame,
+                                 profile: org.apache.spark.sql.DataFrame,
+                                 n: Int, buckets: Int)
+    : org.apache.spark.sql.DataFrame = {
+    val perDoc = TextOps.ngramRows(docs, n, "text", Seq("doc_id"))
+      .withColumn("__b",
+        pmod(TextOps.md5U32(concat(lit("dsir"), col("ngram"))),
+          lit(buckets)))
+      .join(broadcast(profile), Seq("__b"))
+      .withColumn("__lw", log(
+        ((col("__ct") + 1).cast("double") *
+          (col("__nr") + buckets).cast("double")) /
+        ((col("__cr") + 1).cast("double") *
+          (col("__nt") + buckets).cast("double")))
+        .cast("decimal(27,12)"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_grams"),
+        round(sum(col("__lw")).cast("double"), 6).as("__w"))
+    docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
+        col("__w").as("log_weight"))
+  }
+
+  private def dsirRows(df: org.apache.spark.sql.DataFrame)
+    : Map[Long, (Long, Option[Double])] =
+    df.collect().map(r => r.getLong(0) ->
+      ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2)))))
+      .toMap
+
+  test("dsirScore: the per-document kernel sum == the gram-row " +
+      "explode/broadcast-join/aggregate formulation, unseen buckets and " +
+      "gramless docs included") {
+    val corpus = graft.etl.Tables.documents(spark, "/root/testdata/sf0.01")
+      .select(col("doc_id"), col("lang"), col("text"))
+    // a profile from a tenth of the corpus leaves most of the 4096
+    // buckets unseen by both model corpora
+    val prof = TextOps.dsirProfile(corpus.filter(col("doc_id") % 10 === 0),
+      corpus.filter(col("lang") === "en" && col("doc_id") % 10 === 1))
+      .localCheckpoint()
+    val crafted = Seq[(Long, String)](
+      (900001L, "solo"),                          // one token: no bigram
+      (900002L, ""),                              // empty text
+      (900003L, null),                            // null text
+      (900004L, "zqxv wbkj qqzx jjvk xxqz vvbk"), // words no corpus has
+      (900005L, "  Mixed\tCASE  whitespace\nand trailing "))
+      .toDF("doc_id", "text")
+    val docs = corpus.select(col("doc_id"), col("text"))
+      .unionByName(crafted).localCheckpoint()
+    val unseen = TextOps.ngramRows(docs, 2, "text", Seq("doc_id"))
+      .withColumn("__b",
+        pmod(TextOps.md5U32(concat(lit("dsir"), col("ngram"))), lit(4096)))
+      .join(prof.filter(col("__ct") === 0 && col("__cr") === 0), "__b")
+      .count()
+    assert(unseen > 0, "the fixture must reach buckets the profile never saw")
+    val got = dsirRows(TextOps.dsirScore(docs, prof))
+    val want = dsirRows(dsirScoreReference(docs, prof, 2, 4096))
+    assert(got.size === 505)
+    assert(got === want)
+    for (id <- Seq(900001L, 900002L, 900003L))
+      assert(got(id) === ((0L, None)), s"doc $id has no gram")
+    assert(got(900004L)._1 === 5L && got(900005L)._1 === 4L)
+  }
+
+  test("dsirScore: the sum is exact or loud — exact to the last digit " +
+      "below the 64-bit unscaled range, a throw naming dsirScore past it") {
+    // one bucket whose term is ln(9e18 · 9e18) ≈ 87.3: the largest a
+    // profile of long counts can give
+    val big = 9000000000000000000L
+    val prof = Seq((0L, big, 0L, 0L, big))
+      .toDF("__b", "__ct", "__cr", "__nt", "__nr")
+    def doc(grams: Int) = Seq((1L, Seq.fill(grams)("a").mkString(" ")))
+      .toDF("doc_id", "text")
+    // 100k grams ≈ 8.7e6: inside the range, equal to the decimal sum
+    val in = doc(100000)
+    assert(dsirRows(TextOps.dsirScore(in, prof, n = 1, buckets = 1)) ===
+      dsirRows(dsirScoreReference(in, prof, 1, 1)))
+    // 120k grams ≈ 1.05e7 > 2^63 / 10^12
+    val err = intercept[Exception](
+      TextOps.dsirScore(doc(120000), prof, n = 1, buckets = 1).collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+    assert(msgs.exists(_.contains("dsirScore")), msgs.mkString(" | "))
+  }
+
+  test("dsirScore: a profile with the wrong bucket count fails loudly") {
+    val prof = Seq((0L, 1L, 1L, 1L, 1L), (1L, 1L, 1L, 1L, 1L))
+      .toDF("__b", "__ct", "__cr", "__nt", "__nr")
+    val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
+    val err = intercept[IllegalArgumentException](
+      TextOps.dsirScore(docs, prof, buckets = 4096))
+    assert(err.getMessage.contains("dsirScore"))
+  }
 }
