@@ -8,51 +8,37 @@ import org.apache.spark.sql.functions._
   * completed pass PLUS a final min-of-N line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   *
-  * Survivability protocol (round-4 post-mortem: a 43-minute run on a
-  * degraded host died of executor-heartbeat timeout and, because the one
-  * JSON line printed only after ALL passes, the round's entire bench
-  * signal was lost):
+  * Survivability protocol (each rule answers a lost or poisoned record
+  * of an earlier round):
   *   - each completed pass prints its own JSON line immediately
   *     ({"metric":"pass","pass":N,...} — same shape as the total line),
   *     so killing the process at any point after pass 1 still leaves a
   *     parseable result in the log tail;
   *   - every query runs under a watchdog (SPARK_GRAFT_BENCH_CAP seconds,
   *     default 120): on timeout its Spark job group is cancelled and the
-  *     query records -1 for the pass;
-  *   - a query that throws records -1 (previously its elapsed-to-failure
-  *     time was silently folded into the total);
+  *     query records -1 for the pass; a query that throws records -1;
   *   - -1 entries are excluded from every total; a query that never
   *     succeeded appears as -1 in "queries" so breakage is visible;
   *   - reps auto-downshift: if a completed pass exceeds
-  *     SPARK_GRAFT_BENCH_BUDGET wall seconds (default 720 — raised in
-  *     round 13 to 600 when the honest noop-write action pushed a
-  *     healthy full pass to ~400 s wall, and again in round 16 when a
-  *     healthy-START pass measured 637 s: the suite grew, and a budget
-  *     under the healthy wall forces EVERY record to min-of-1 +
-  *     salvage), remaining passes are skipped — a 10-50x-degraded
-  *     host yields one honest pass instead of a dead process;
-  *   - pass-START health gate (round-13 post-mortem: the official r13
-  *     record was one pass begun at host_factor 4.66 — contention
-  *     inflated early queries 10-20x and poisoned every trend drawn
-  *     from it): a pass whose start kernel breaches
+  *     SPARK_GRAFT_BENCH_BUDGET wall seconds (default 720, above the
+  *     ~640 s healthy pass so a healthy host keeps min-of-N), remaining
+  *     passes are skipped — a 10-50x-degraded host yields one honest
+  *     pass instead of a dead process;
+  *   - pass-START health gate: a pass whose start kernel breaches
   *     SPARK_GRAFT_BENCH_MAX_START_FACTOR (default 2.0) waits
   *     SPARK_GRAFT_BENCH_GATE_WAIT s (default 60) and re-measures, up
   *     to SPARK_GRAFT_BENCH_GATE_TRIES times (default 5); if the gate
   *     exhausts, the pass runs anyway and its line (and, when EVERY
   *     pass exhausted, the total/compact record) carries
   *     degraded_start=true so trend tooling can refuse the record;
-  *   - single-pass -1 rescue (round-7 post-mortem: the downshifted pass
-  *     made q07's one capped attempt the final record): when only one
-  *     pass ran and it left -1 entries, exactly those queries are
-  *     retried once (a "retry" JSON line) before the total line;
-  *   - contention salvage (round 16: the driver's official record was
-  *     health-degraded three rounds running — r13 start, r14/r15
-  *     mid-pass — leaving the 2x anchor gate unevaluated): each key's
-  *     min carries PROVENANCE (the kernels bracketing its family
-  *     segment in the pass the min came from). Keys whose every
-  *     observation ran between degraded kernels are re-measured after
-  *     the rep loop — health-gated, budget-bounded
-  *     (SPARK_GRAFT_BENCH_SALVAGE tries, default 2;
+  *   - single-pass -1 rescue: when only one pass ran and it left -1
+  *     entries, exactly those queries are retried once (a "retry" JSON
+  *     line) before the total line;
+  *   - contention salvage: each key's min carries PROVENANCE (the
+  *     kernels bracketing its family segment in the pass the min came
+  *     from). Keys whose every observation ran between degraded kernels
+  *     are re-measured after the rep loop — health-gated,
+  *     budget-bounded (SPARK_GRAFT_BENCH_SALVAGE tries, default 2;
   *     SPARK_GRAFT_BENCH_SALVAGE_BUDGET wall seconds, default 420) —
   *     under fresh bracket kernels ("salvage" JSON lines). The total
   *     line reports all_keys_clean / unclean_keys / per-key
@@ -60,10 +46,9 @@ import org.apache.spark.sql.functions._
   *     trend tooling can trust a record whose every reported key is
   *     clean-backed even when no full pass was clean end to end.
   *
-  * Timing protocol (round-3 verdict: identical code swung 3-8x between
-  * rounds, so single-shot numbers are JIT/GC noise): one untimed warm-up
-  * (scan-agg-join round trip + the q48/q49/q50 fixture exports, so no
-  * pass pays one-time materialization I/O), then up to
+  * Timing protocol (single-shot numbers are JIT/GC noise): one untimed
+  * warm-up (scan-agg-join round trip, the fixture exports, the frozen
+  * statics of the scale and streaming keys), then up to
   * SPARK_GRAFT_BENCH_REPS (default 2) full passes, reporting the
   * per-query MIN across passes. The staging memos (t03/t14 verified
   * pairs, Seg-family ratios) are cleared before each pass so every pass
@@ -71,27 +56,18 @@ import org.apache.spark.sql.functions._
   * its own "seg_staging" entry (inside the gated total — the work is
   * real) so q34/q41/q43/q44 time only their incremental cost.
   *
-  * Host-health calibration (round-5 verdict: rounds 4 and 5 both lost or
-  * distorted the bench signal to 10-45x host degradation that only a
-  * judge re-run detected): every pass times a fixed deterministic
+  * Host-health calibration: every pass times a fixed deterministic
   * in-memory kernel (50M-row hash -> 9973-key agg -> sort, no I/O, no
-  * cache reuse) at pass START ("host_factor") AND at pass END
-  * ("host_factor_end"), both kernel_s / HOST_KERNEL_REF_SEC in its JSON
-  * line — a mid-pass host collapse (round 7: 1.419 at start, then 346 s
-  * wall for ~95 s of work) shows up as end >> start in the record
-  * itself. Round 15 adds FAMILY-BOUNDARY kernels (after the gated
-  * family, after the scale family): the r14 driver record started at
-  * 1.844 and ended 1.953 — both under the gate — while mid-pass
-  * contention inflated its t101-t105 block 20-40x, invisible to
-  * start/end sampling. Each pass line carries the full
-  * "host_factor_segments" vector and a "degraded_mid" flag (any
-  * segment above the start-gate threshold); the record-level
-  * degraded_mid means NO full pass was clean end to end, and
-  * tools/bench_trend.py refuses such records for trending exactly as
-  * it refuses degraded_start. The reference seconds are pinned from a healthy
-  * round-6 build box, so per-query numbers are comparable across rounds
-  * after dividing by the pass's host_factor: ~1.0 = healthy host, >>1 =
-  * the host (not the code) is slow. See README "Benchmark protocol".
+  * cache reuse) at pass START ("host_factor"), at each family boundary
+  * (after the gated family, after the scale family) and at pass END
+  * ("host_factor_end"), each kernel_s / HOST_KERNEL_REF_SEC. The pass
+  * line carries the full "host_factor_segments" vector and a
+  * "degraded_mid" flag (any segment above the start-gate threshold), so
+  * a mid-pass host collapse shows in the record itself; the
+  * record-level degraded_mid means NO full pass was clean end to end,
+  * and tools/bench_trend.py refuses such records for trending exactly
+  * as it refuses degraded_start. ~1.0 = healthy host, >>1 = the host
+  * (not the code) is slow.
   *
   * `value` sums the mins of the oracle-verified queries only — directly
   * comparable to BASELINE.md and earlier rounds. The xxhash64 scale-path
@@ -99,7 +75,8 @@ import org.apache.spark.sql.functions._
   * under the separate "scale_queries" key: same pipeline shapes, the
   * hash family a cluster would actually run (Verify can't check them —
   * DuckDB cannot recompute xxhash64 — so they must not inflate or
-  * deflate the gated total).
+  * deflate the gated total). The streaming keys (StreamingQueries.all)
+  * report under "streaming_queries" the same way.
   */
 object Bench {
   /** Seconds the calibration kernel takes on a healthy build box
@@ -149,16 +126,8 @@ object Bench {
     val capSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_CAP", "120").toDouble
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "720").toDouble
-    // Pass-START health gate (round-13 post-mortem: the official r13
-    // record was a single pass STARTED at host_factor 4.66 — external
-    // contention inflated its early queries 10-20x over clean-pass
-    // numbers, poisoning every cross-round trend drawn from it). The
-    // budget downshift already refuses to CONTINUE on a degraded host;
-    // this refuses to START recording into one: a pass whose start
-    // kernel reads above MAX_START_FACTOR waits GATE_WAIT seconds and
-    // re-measures, up to GATE_TRIES times, before running anyway —
-    // bounded, so a permanently-busy host still yields a record, with
-    // degraded_start=true marking it untrustworthy for trending.
+    // pass-START health gate: the budget downshift refuses to CONTINUE
+    // on a degraded host, this refuses to START recording into one
     val maxStartFactor =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_START_FACTOR", "2.0").toDouble
     val gateWaitSec =
@@ -244,25 +213,22 @@ object Bench {
       } else (System.nanoTime() - t0) / 1e9
     }
 
-    def timePass(qs: Seq[(String, (SparkSession, String) => DataFrame)])
-        : Seq[(String, Double)] =
-      qs.map { case (name, fn) =>
+    // `only` is re-evaluated just before each key runs (not once up
+    // front) so a stateful predicate — the salvage wall-budget check —
+    // can cut the pass short between keys
+    def timePass(qs: Seq[(String, (SparkSession, String) => DataFrame)],
+        only: String => Boolean = _ => true): Seq[(String, Double)] =
+      qs.flatMap { case (name, fn) =>
         // noop WRITE, not count() — the hostKernelAction rationale
         // applied to the queries themselves: under count() Catalyst
-        // prunes every column no aggregate needs and ELIMINATES
-        // cardinality-preserving operators outright (left joins on
-        // unique keys, projections), so a projection-shaped operator
-        // times as a bare scan. Round-13 catch: t54's 0.1 s "cost" was
-        // count() dropping the entire excision chain via left-join
-        // elimination — the real number is ~1.6 s. The noop sink
-        // computes every output column and row, which is what a
-        // pipeline consumer pays. (Numbers before the round-13 record
-        // are count()-timed: projection-heavy keys read low there —
-        // cross-round trend comparisons must use the same action.)
-        name -> timed(name) {
+        // prunes unneeded columns and ELIMINATES cardinality-preserving
+        // operators (t54 timed 0.1 s under count(), ~1.6 s for real).
+        // The noop sink computes every output column and row, which is
+        // what a pipeline consumer pays.
+        if (!only(name)) None
+        else Some(name -> timed(name) {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          ()
-        }
+        })
       }
 
     val main = (("seg_staging" ->
@@ -274,14 +240,19 @@ object Bench {
     val scale = DataQueries.benchOnly.toSeq.sortBy(_._1)
       .filter(p => keep(p._1))
 
-    /** Streaming surface timing (reported under "streaming_queries", not
-      * the gated total): the events fixture driven through the
-      * readStream -> transform -> writeStream path one-shot
-      * (Trigger.AvailableNow) into the noop sink, so the measured cost is
-      * the streaming engine + stateful operators, not a sink. s01 is the
-      * watermarked tumbling rollup (t10's stream twin), s02 the
-      * stream-stream interval attribution join (t20's) — the two stateful
-      * shapes a cluster would actually run. */
+    // Streaming keys (StreamingQueries.all, reported under
+    // "streaming_queries", not the gated total) run on their own session
+    // (shared SparkContext, isolated SQLConf), so a watchdog-abandoned
+    // stream thread can never leak its settings into the timed batch
+    // queries. Their frozen statics are built here, untimed; after this
+    // the statics memo builds nothing, so a key whose static failed
+    // records -1 instead of timing an in-pass build.
+    val streamSpark = StreamingQueries.session(spark)
+    StreamingQueries.warmStatics(streamSpark, sfDir).foreach {
+      case (name, e) => System.err.println(s"[bench] stream static " +
+        s"'$name' failed at warm-up (keys that read it record -1): " +
+        e.getMessage)
+    }
     // Streams self-cap: the watchdog's job-group cancel can't reach a
     // stream's microbatch thread (job groups are thread-local), so an
     // overlong stream is stopped here and recorded as a failure (-1)
@@ -292,182 +263,13 @@ object Bench {
     // count and max/sum triggerExecution ms per stream.
     val streamDetail =
       scala.collection.concurrent.TrieMap.empty[String, String]
-    // State-store partitioning for the streaming entries: a stateful
-    // operator spins up (and commits) one state store per shuffle
-    // partition per microbatch, so at this input scale the session-wide
-    // 32 is pure overhead — the s02 interval join carries 4 stores per
-    // partition. The knob is the deployment-level setting a cluster
-    // would tune per stream; streams run on their OWN SparkSession
-    // (spark.newSession(): shared SparkContext, isolated SQLConf), so
-    // the main session's shuffle setting is never mutated — previously a
-    // watchdog-abandoned stream thread could leak the 8-partition value
-    // into subsequent timed batch queries.
-    val streamShuffle =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    val streamSpark = spark.newSession()
-    // conf inheritance across newSession() is not guaranteed for
-    // builder-time options; set what the streams need explicitly
-    streamSpark.conf.set("spark.sql.shuffle.partitions", streamShuffle)
-    streamSpark.conf.set("spark.sql.session.timeZone", "UTC")
-    streamSpark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // state-store provider A/B knob (PLANS.md "s03 state-store provider"
-    // records the controlled HDFS-default vs RocksDB measurement); the
-    // default stays Spark's default provider
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PROVIDER").foreach(p =>
-      streamSpark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p))
-    // s05's static corpus band index: built ONCE, untimed (a deployment
-    // prebuilds it — the gate's steady-state cost is the per-batch
-    // band + semi-join, not the index build), shared across passes via
-    // the localCheckpoint
-    val gateIndexMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def gateIndex(s: SparkSession, d: String): DataFrame = synchronized {
-      gateIndexMemo.getOrElseUpdate(d, graft.ops.Dedup.nearDupIndex(
-        graft.etl.Tables.documents(s, d)).localCheckpoint())
-    }
-    // s06's frozen reference profile: same discipline — a deployment
-    // freezes it long before the stream runs
-    val refProfileMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def refProfile(s: SparkSession, d: String): DataFrame = synchronized {
-      refProfileMemo.getOrElseUpdate(d,
-        graft.streaming.Streams.referenceProfile(
-          graft.etl.Tables.documents(s, d)).localCheckpoint())
-    }
-    // s07's frozen coarse-quantizer statics (centroids + assigned corpus
-    // index): same discipline as the s05 band index — a deployment
-    // trains and materializes both long before the stream runs, so the
-    // benched cost is the per-batch assign + within-list screen only
-    val semGateMemo =
-      scala.collection.mutable.Map.empty[String, (DataFrame, DataFrame)]
-    def semGateStatics(s: SparkSession, d: String): (DataFrame, DataFrame) =
-      synchronized {
-        semGateMemo.getOrElseUpdate(d, {
-          val emb = graft.etl.Tables.embeddings(s, d)
-            .select(col("vec_id"), col("embedding"))
-          val cents = emb.filter(col("vec_id") % 50 === 0)
-            .select(col("vec_id").as("centroid_id"),
-              col("embedding").as("cvec"))
-            .localCheckpoint()
-          (cents,
-            graft.ops.Dedup.semanticIndex(emb, cents).localCheckpoint())
-        })
-      }
-    // s08's frozen per-list embedding profile: the s06 discipline on
-    // the embedding modality
-    val embProfileMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def embProfile(s: SparkSession, d: String): DataFrame = synchronized {
-      embProfileMemo.getOrElseUpdate(d, {
-        val (cents, _) = semGateStatics(s, d)
-        graft.ops.Similarity.embeddingProfile(
-          graft.etl.Tables.embeddings(s, d)
-            .select(col("vec_id"), col("embedding")), cents)
-          .localCheckpoint()
-      })
-    }
-    // s09's frozen DSIR profile (raw model = the corpus, target model =
-    // its English slice): built and materialized untimed, the same
-    // discipline as the band/quantizer indexes
-    val dsirProfileMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def dsirProf(s: SparkSession, d: String): DataFrame = synchronized {
-      dsirProfileMemo.getOrElseUpdate(d, {
-        val docs = graft.etl.Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("text"))
-        graft.ops.TextOps.dsirProfile(docs,
-          docs.filter(col("lang") === "en"), n = 2, buckets = 4096)
-          .localCheckpoint()
-      })
-    }
-    // s11's frozen static right side: the view-event history snapshot
-    // each purchase microbatch as-of joins against — materialized
-    // untimed, the same discipline as the other stream statics
-    val viewsStaticMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def viewsStatic(s: SparkSession, d: String): DataFrame = synchronized {
-      viewsStaticMemo.getOrElseUpdate(d,
-        graft.etl.Tables.events(s, d)
-          .filter(col("event_type") === "view")
-          .select(col("event_id").as("view_id"), col("user_id"),
-            col("ts").as("view_ts"), col("value").as("view_value"))
-          .localCheckpoint())
-    }
-    // s21's frozen incident windows: every error event opens a
-    // 30-minute window — materialized untimed like the other statics
-    val incidentsStaticMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def incidentsStatic(s: SparkSession, d: String): DataFrame =
-      synchronized {
-        incidentsStaticMemo.getOrElseUpdate(d,
-          graft.etl.Tables.events(s, d)
-            .filter(col("event_type") === "error")
-            .select(col("event_id").as("error_id"),
-              col("ts").as("inc_start"),
-              (col("ts") + expr("INTERVAL 30 minutes")).as("inc_end"))
-            .localCheckpoint())
-      }
-    // s12's frozen benchmark BM25 index: every 50th doc as the
-    // held-out "benchmark" corpus (fan-out per incoming doc = sum of
-    // matched bench dfs — the benchmark size IS the cost knob),
-    // built and materialized untimed like the other stream statics
-    val bm25IndexMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def bm25Idx(s: SparkSession, d: String): DataFrame = synchronized {
-      bm25IndexMemo.getOrElseUpdate(d, graft.ops.TextOps.bm25Index(
-        graft.etl.Tables.documents(s, d)
-          .filter(col("doc_id") % 50 === 0)).localCheckpoint())
-    }
-    // s18's frozen transition-probability baseline: the reference-
-    // period matrix (even users — a deliberately different population
-    // than the full stream, so some drift flags genuinely fire), the
-    // s06 frozen-profile discipline on behavior statistics
-    val transBaseMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def transBase(s: SparkSession, d: String): DataFrame = synchronized {
-      transBaseMemo.getOrElseUpdate(d,
-        graft.ops.Temporal.transitionMatrix(
-            graft.etl.Tables.events(s, d)
-              .filter(col("user_id") % 2 === 0),
-            "user_id", "ts", "event_type", "event_id")
-          .localCheckpoint())
-    }
-    // warm-up failure must FAIL the dependent benches, not silently move
-    // the index/profile build inside the timed region (getOrElseUpdate
-    // would rebuild on first use): s05/s06/s07/s08 check the flag and
-    // record -1
-    var streamStaticWarm = false
-    try { gateIndex(streamSpark, sfDir); refProfile(streamSpark, sfDir)
-      semGateStatics(streamSpark, sfDir)
-      embProfile(streamSpark, sfDir)
-      dsirProf(streamSpark, sfDir)
-      viewsStatic(streamSpark, sfDir)
-      incidentsStatic(streamSpark, sfDir)
-      bm25Idx(streamSpark, sfDir)
-      transBase(streamSpark, sfDir)
-      graft.etl.Tables.exportedEmbsParts(streamSpark, sfDir)
-      streamStaticWarm = true
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] stream-static warm-up failed " +
-          s"(s05/s06/s07/s08/s09/s12/s18 will record -1): ${e.getMessage}")
-    }
-    def requireStreamStaticWarm(): Unit =
-      if (!streamStaticWarm) throw new IllegalStateException(
-        "stream-static warm-up failed; refusing to time an in-pass build")
-    def runStream(name: String, df: DataFrame, mode: String): Unit =
-      runStreamQuery(name, () =>
-        df.writeStream.format("noop").outputMode(mode)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
     def runStreamQuery(name: String,
-        start: () => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+        start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
       // drop any previous pass's entry first: a stream that fails or
       // exceeds the cap must not report the prior pass's batch stats
       // next to its own -1 timing
       streamDetail.remove(name)
-      val q = start()
+      val q = start
       try {
         // in-stream cap with headroom UNDER the watchdog: the watchdog's
         // job-group cancel can't reach the microbatch thread, so this
@@ -488,298 +290,14 @@ object Bench {
         streamDetail(name) = s"""{"batches":${durs.size},""" +
           s""""max_batch_ms":${durs.max},"sum_batch_ms":${durs.sum}}"""
     }
-    import graft.streaming.Streams
-    val streaming: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-      "s01_hourly_rollup" -> ((s, d) =>
-        runStream("s01_hourly_rollup",
-          Streams.hourlyRollup(Streams.eventsStreamAuto(s, d)), "append")),
-      "s02_attribution_join" -> ((s, d) => {
-        val src = Streams.eventsStreamAuto(s, d)
-        runStream("s02_attribution_join", Streams.attributionJoin(
-          src.filter(col("event_type") === "click"),
-          src.filter(col("event_type") === "purchase")), "append")
-      }),
-      // steady-state complement to the s01 one-shot: same rollup, but
-      // paced one file per microbatch over the 8-part export, so the
-      // per-batch (state churn) cost shows up as ~9 batches in
-      // streaming_detail instead of being averaged into 2
-      "s03_steady_rollup" -> ((s, d) =>
-        runStream("s03_steady_rollup",
-          Streams.hourlyRollup(Streams.eventsStreamPaced(s,
-            graft.etl.Tables.exportedEventsParts(s, d))), "append")),
-      // ingest quality gate: per-source quality/PII screen as a running
-      // aggregate over the paced 8-part document export (complete mode,
-      // one state row per source)
-      "s04_quality_gate" -> ((s, d) =>
-        runStream("s04_quality_gate",
-          Streams.qualityScreen(Streams.docsStreamPaced(s,
-            graft.etl.Tables.exportedDocsParts(s, d))), "complete")),
-      // near-dup ingest gate: paced documents banded per microbatch and
-      // screened against the static corpus band index (built once,
-      // untimed — a deployment prebuilds it) via foreachBatch — the
-      // stream-static MinHash gate shape, stateless across batches
-      "s05_neardup_gate" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val idx = gateIndex(s, d)
-        runStreamQuery("s05_neardup_gate", () =>
-          Streams.docsStreamPaced(s, graft.etl.Tables.exportedDocsParts(s, d))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.Dedup.nearDupFlag(b, idx)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
-      // distribution-drift monitor: per-source running means vs the
-      // frozen (untimed) reference profile — complete mode, one state
-      // row per source, the s04 gate generalized to drift
-      "s06_drift_monitor" -> ((s, d) => {
-        requireStreamStaticWarm()
-        runStream("s06_drift_monitor",
-          Streams.driftMonitor(Streams.docsStreamPaced(s,
-            graft.etl.Tables.exportedDocsParts(s, d)), refProfile(s, d)),
-          "complete")
-      }),
-      // semantic ingest gate: paced embeddings assigned to the frozen
-      // coarse quantizer per microbatch and screened within-list against
-      // the static assigned-corpus index (both built once, untimed) via
-      // foreachBatch — the s05 discipline on the embedding modality,
-      // stateless across batches
-      "s07_semantic_gate" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val (cents, idx) = semGateStatics(s, d)
-        runStreamQuery("s07_semantic_gate", () =>
-          Streams.embsStreamPaced(s, graft.etl.Tables.exportedEmbsParts(s, d))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.Dedup.semanticDupFlag(b, idx, cents, tau = 0.99)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
-      // embedding-space drift monitor: paced embeddings quantized
-      // against the frozen centroids per microbatch, per-list running
-      // count + mean cosine vs the frozen (untimed) profile — complete
-      // mode, one state row per list, the s06 gate on the embedding
-      // modality
-      "s08_embedding_drift" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val (cents, _) = semGateStatics(s, d)
-        runStream("s08_embedding_drift",
-          graft.ops.Similarity.embeddingDriftMonitor(
-            Streams.embsStreamPaced(s,
-              graft.etl.Tables.exportedEmbsParts(s, d)),
-            cents, embProfile(s, d)),
-          "complete")
-      }),
-      // DSIR ingest gate: paced documents scored per microbatch against
-      // the frozen (untimed) bucket profile via foreachBatch — one
-      // broadcast join + one doc-keyed aggregate per batch, stateless
-      // across batches, the s05 discipline on the data-selection model
-      "s09_dsir_gate" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val prof = dsirProf(s, d)
-        runStreamQuery("s09_dsir_gate", () =>
-          Streams.docsStreamPaced(s,
-              graft.etl.Tables.exportedDocsParts(s, d))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.TextOps.dsirScore(b, prof)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
-      // composed ingest screen: quality + PII + near-dup flag + DSIR
-      // score in ONE foreachBatch pass against both frozen statics —
-      // the production shape (one stream instead of three); per batch
-      // the union of the component costs, stateless across batches
-      "s10_ingest_screen" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val idx = gateIndex(s, d)
-        val prof = dsirProf(s, d)
-        runStreamQuery("s10_ingest_screen", () =>
-          Streams.docsStreamPaced(s,
-              graft.etl.Tables.exportedDocsParts(s, d))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              Streams.ingestScreen(b, idx, prof)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
-      // stream-static as-of enrichment: each paced purchase microbatch
-      // picks the latest same-user view from the frozen (untimed)
-      // history snapshot — per batch the t70 join-free union+window
-      // shape, stateless across batches
-      "s11_asof_enrich" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val views = viewsStatic(s, d)
-        runStreamQuery("s11_asof_enrich", () =>
-          Streams.eventsStreamPaced(s,
-              graft.etl.Tables.exportedEventsParts(s, d))
-            .filter(col("event_type") === "purchase")
-            .select(col("event_id").as("purchase_id"), col("user_id"),
-              col("ts"))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.Temporal.asofJoin(b, views, Seq("user_id"),
-                  "ts", "view_ts", Seq("view_id", "view_value"),
-                  tie = "view_id")
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
-      // lexical-decontamination gate: paced documents BM25-scored per
-      // microbatch against the frozen benchmark index (built once,
-      // untimed) via foreachBatch — stateless, the s05 discipline on
-      // scored retrieval; production double-sum accumulator (the
-      // bench measures the gate, the t84 oracle owns the arithmetic)
-      "s12_bm25_gate" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val idx = bm25Idx(s, d)
-        runStreamQuery("s12_bm25_gate", () =>
-          Streams.docsStreamPaced(s, graft.etl.Tables.exportedDocsParts(s, d))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.TextOps.bm25ScreenFlag(b, idx, tau = 9.0,
-                  exactSums = false)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
-      // streaming cardinality monitor: the HLL sketch as a complete-mode
-      // running aggregate over the paced 8-part event export — bounded
-      // state (512 ints per event type) however many users stream past
-      "s13_cardinality_monitor" -> ((s, d) =>
-        runStream("s13_cardinality_monitor",
-          Streams.cardinalityMonitor(Streams.eventsStreamPaced(s,
-            graft.etl.Tables.exportedEventsParts(s, d))),
-          "complete")),
-      // length-drift gate: sampled token-count quantiles per source as
-      // ONE stateful aggregation (expression-interpolated — streaming
-      // forbids a second agg), <= k pairs of state per source forever
-      "s14_length_gate" -> ((s, d) =>
-        runStream("s14_length_gate",
-          Streams.lengthDriftGate(Streams.docsStreamPaced(s,
-            graft.etl.Tables.exportedDocsParts(s, d))),
-          "complete")),
-      // streaming funnel: out-of-order-tolerant custom state — events
-      // buffer until the watermark passes them, then fold into the
-      // chain; the flush sentinel part fires the tail timeout
-      "s15_funnel" -> ((s, d) =>
-        runStream("s15_funnel",
-          Streams.funnelWithState(Streams.eventsStreamPaced(s,
-              graft.etl.Tables.exportedEventsPartsFlush(s, d)),
-            Seq("signup", "view", "purchase")).toDF(),
-          "update")),
-      // item-frequency monitor: the Count-Min grid as the one stateful
-      // aggregate (<= 4x1024 cells per event type forever), each
-      // trigger's complete grid probed for a 4-item watch list in
-      // foreachBatch — the per-item replay-storm gate next to s13's
-      // per-type cardinality gate
-      "s16_frequency_monitor" -> ((s, d) => {
-        import s.implicits._
-        val watch = Seq(("click", "1"), ("click", "2"), ("view", "3"),
-          ("purchase", "4")).toDF("event_type", "probe")
-        runStreamQuery("s16_frequency_monitor", () =>
-          Streams.startFrequencyMonitor(s,
-            graft.etl.Tables.exportedEventsParts(s, d), watch,
-            maxCount = 1000L,
-            sink = _.write.format("noop").mode("overwrite").save()))
-      }),
-      // s16's grid under a 1-day half-life: the long-running form —
-      // forward-weighted 2^day decimal cells, same bounded state, the
-      // foreachBatch probe rescaled as of the fixture window's end so
-      // month-old floods stop alarming while fresh ones still do
-      "s19_decayed_frequency" -> ((s, d) => {
-        import s.implicits._
-        val watch = Seq(("click", "1"), ("click", "2"), ("view", "3"),
-          ("purchase", "4")).toDF("event_type", "probe")
-        runStreamQuery("s19_decayed_frequency", () =>
-          Streams.startDecayedFrequencyMonitor(s,
-            graft.etl.Tables.exportedEventsParts(s, d), watch,
-            maxDecayed = 100.0,
-            t0Micros = 1704067200000000L, halfLifeSeconds = 86400L,
-            asOfMicros = 1706659200000000L,
-            sink = _.write.format("noop").mode("overwrite").save()))
-      }),
-      // s13's cardinality monitor under epoch slicing: one p=9 register
-      // set per (type, day) as the one stateful aggregate (<= 88 x 512
-      // ints per type forever), each trigger's grid recombined with
-      // recency weights in foreachBatch so month-old cardinality storms
-      // un-alarm while fresh ones fire — the s19 decay discipline
-      // applied to distinct counts
-      "s20_decayed_cardinality" -> ((s, d) =>
-        runStreamQuery("s20_decayed_cardinality", () =>
-          Streams.startDecayedCardinalityMonitor(s,
-            graft.etl.Tables.exportedEventsParts(s, d),
-            minDistinct = 2.0, maxRepeatFactor = 500.0,
-            activityFloor = 1.0,
-            t0Micros = 1704067200000000L, halfLifeSeconds = 86400L,
-            asOfMicros = Some(1706659200000000L),
-            sink = _.write.format("noop").mode("overwrite").save()))),
-      // stream-static range join: each paced purchase microbatch x the
-      // frozen incident windows (every containing window, the
-      // many-match contract) — the s11 discipline on t121's operator
-      "s21_range_join" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val incidents = incidentsStatic(s, d)
-        runStreamQuery("s21_range_join", () =>
-          Streams.eventsStreamPaced(s,
-              graft.etl.Tables.exportedEventsParts(s, d))
-            .filter(col("event_type") === "purchase")
-            .select(col("event_id").as("purchase_id"), col("ts"))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.Temporal.rangeJoinBucketed(b, incidents,
-                  "ts", "inc_start", "inc_end", bucketSeconds = 1800L)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
-      // streaming transition extraction: buffer-until-watermark pair
-      // emission (the s15 discipline on consecutive-event pairs); the
-      // flush sentinel part advances the watermark so the tails emit
-      "s17_transitions" -> ((s, d) =>
-        runStream("s17_transitions",
-          Streams.transitionsWithState(Streams.eventsStreamPaced(s,
-            graft.etl.Tables.exportedEventsPartsFlush(s, d))).toDF(),
-          "append")),
-      // transition-probability drift gate: s17's pair extraction with
-      // each microbatch folded into the running (prev, next) grid and
-      // alarmed against the frozen (untimed) reference-period matrix —
-      // the s06 drift discipline on t108's behavior statistics
-      "s18_transition_drift" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val base = transBase(s, d)
-        runStreamQuery("s18_transition_drift", () =>
-          Streams.startTransitionDriftMonitor(s,
-            graft.etl.Tables.exportedEventsPartsFlush(s, d), base,
-            tol = 0.1,
-            sink = _.write.format("noop").mode("overwrite").save()))
-      }))
-    // `only` is re-evaluated just before each stream runs (not once up
-    // front) so a stateful predicate — the salvage wall-budget check —
-    // can cut the pass short between streams
     def timeStreamingPass(only: String => Boolean = _ => true)
         : Seq[(String, Double)] =
-      streaming.filter(p => keep(p._1)).flatMap { case (name, fn) =>
-        if (!only(name)) None
-        else Some(name -> timed(name) { fn(streamSpark, sfDir) })
+      StreamingQueries.all.filter(p => keep(p._1)).flatMap {
+        case (name, start) =>
+          if (!only(name)) None
+          else Some(name -> timed(name) {
+            runStreamQuery(name, start(streamSpark, sfDir))
+          })
       }
     def streamDetailJson(only: String => Boolean = _ => true): String =
       streamDetail.toSeq.filter(p => only(p._1)).sortBy(_._1)
@@ -830,16 +348,11 @@ object Bench {
                     degradedStart: Boolean = false,
                     midFactors: Seq[Double] = Nil,
                     isRetry: Boolean = false) {
-      /** Mid-pass health (round-14 verdict item 2: the official r14
-        * record passed the 2.0 START gate at 1.844 and ended at 1.953,
-        * yet mid-pass contention inflated its t101-t105 block 20-40x —
-        * a start-only gate cannot see a collapse BETWEEN its kernels).
-        * The pass re-runs the calibration kernel at each family
-        * boundary (main->scale, scale->streaming) plus the existing
-        * end kernel; any segment above the start-gate threshold (or a
-        * failed kernel, -1) marks the pass degraded_mid, and trend
-        * tooling refuses records with no clean pass the same way it
-        * refuses degraded_start records. */
+      /** Mid-pass health: a start-only gate cannot see a collapse
+        * BETWEEN its kernels, so any boundary or end segment above the
+        * start-gate threshold (or a failed kernel, -1) marks the pass
+        * degraded_mid; trend tooling refuses records with no clean pass
+        * the same way it refuses degraded_start records. */
       def degradedMid(maxFactor: Double): Boolean =
         (midFactors :+ hostFactorEnd).exists(f => f < 0 || f > maxFactor)
       /** The family's timings (0=gated main, 1=scale, 2=streaming). */
@@ -936,19 +449,12 @@ object Bench {
     var continue = true
     def runPass(): Double = {
       pass += 1
-      // host-health calibration at pass START and again at pass END
-      // (round-7 post-mortem: a host that measures healthy at pass start
-      // can collapse mid-pass — 1.419 at start, then 346 s of wall for
-      // ~95 s of work — and a start-only factor makes that invisible in
-      // the record). The kernel runs under the same watchdog/cap as the
+      // the calibration kernels run under the same watchdog/cap as the
       // queries — on a wedged host a hang or throw records factor=-1
-      // instead of killing the whole pass before any line is emitted.
+      // instead of killing the whole pass before any line is emitted
       val (hostFactor, gateWaits, degradedStart) = gatedStartFactor()
       // the wall clock starts AFTER the start gate: its bounded sleeps
-      // are deliberate idling, not pass work — counting them would
-      // inflate "wall" and could trip the budget downshift (min-of-3 ->
-      // min-of-1, the round-7/9 noise regime) on a pass whose measured
-      // work was healthy (round-14 review finding)
+      // are idling, not pass work, and must not trip the budget downshift
       val w0 = System.nanoTime()
       // cold staging per pass: drop the t03/t14 verified-pairs checkpoint
       // AND every persisted frame (segStaging etc.), so each pass pays
@@ -958,11 +464,8 @@ object Bench {
       CoreQueries.clearStagingCache()
       spark.catalog.clearCache()
       val pm = timePass(main)
-      // family-boundary kernels: a start-healthy host that collapses
-      // mid-pass (the r14 t101-t105 block, 20-40x inflated while start
-      // AND end kernels read under the gate) is caught at the nearest
-      // boundary; ~0.7 s each on a healthy host, same watchdog as the
-      // queries
+      // family-boundary kernels (~0.7 s each on a healthy host) catch a
+      // start-healthy host that collapses mid-pass at the nearest boundary
       val fMid1 = boundaryKernelFactor()
       val ps = timePass(scale)
       val fMid2 = boundaryKernelFactor()
@@ -1023,11 +526,8 @@ object Bench {
       runPass()
     }
 
-    // -1 rescue for single-pass records (round-7 post-mortem: when the
-    // budget downshifts to ONE pass, any query whose single attempt was
-    // capped or threw becomes a permanent -1 in the official record —
-    // q07 ended round 7 with no number at all). If only one pass ran and
-    // it left -1 entries, retry exactly those queries once; minOver then
+    // -1 rescue for single-pass records: if only one pass ran and it
+    // left -1 entries, retry exactly those queries once; the min then
     // folds a successful retry in, and a query that fails twice stays -1.
     // Staging memos are NOT cleared: a retried staging CONSUMER runs
     // against the warm staging it would have had mid-pass (comparable
@@ -1044,8 +544,7 @@ object Bench {
         failed(p0.streaming))
       System.err.println(s"[bench] single-pass run left -1 entries; " +
         s"retrying once: ${(fm ++ fs ++ ft).toSeq.sorted.mkString(", ")}")
-      val rp = Pass(timePass(main.filter(p => fm(p._1))),
-        timePass(scale.filter(p => fs(p._1))),
+      val rp = Pass(timePass(main, fm), timePass(scale, fs),
         timeStreamingPass(ft), hostFactor = kernelFactor(),
         hostFactorEnd = -1.0, isRetry = true)
       passes :+= rp
@@ -1135,23 +634,18 @@ object Bench {
         if ((un0 ++ un1).exists(k =>
           k.startsWith("t03") || k.startsWith("t14")))
           DataQueries.clearStagingCache()
-        def budgeted(qs: Seq[(String, (SparkSession, String) => DataFrame)],
-            sel: Set[String]): Seq[(String, Double)] =
-          qs.filter(p => sel(p._1)).flatMap { case (name, fn) =>
-            if (overBudget) {
-              System.err.println(s"[bench] salvage budget exhausted " +
-                s"before $name — stays unclean")
-              None
-            } else Some(name -> timed(name) {
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              ()
-            })
+        def budgeted(sel: Set[String])(name: String): Boolean =
+          sel(name) && {
+            val over = overBudget
+            if (over) System.err.println(s"[bench] salvage budget " +
+              s"exhausted before $name — stays unclean")
+            !over
           }
-        val pm = budgeted(main, un0)
+        val pm = timePass(main, budgeted(un0))
         val fMid1 = boundaryKernelFactor()
-        val ps = budgeted(scale, un1)
+        val ps = timePass(scale, budgeted(un1))
         val fMid2 = boundaryKernelFactor()
-        val pt = timeStreamingPass(k => un2(k) && !overBudget)
+        val pt = timeStreamingPass(budgeted(un2))
         val p = Pass(pm, ps, pt, f0, boundaryKernelFactor(), waits,
           degradedStart = false, midFactors = Seq(fMid1, fMid2),
           isRetry = true)

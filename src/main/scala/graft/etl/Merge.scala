@@ -122,14 +122,6 @@ object Merge {
         Window.partitionBy(part: _*).orderBy(priority)))
       .filter(col("__rk") <= keepRank).drop("__rk")
 
-  /** O40 — top-k rows per group (patron_segmentation.sql:391-399
-    * `MMRank <= 10`). */
-  def topKPerGroup(df: DataFrame, part: Seq[Column], ord: Seq[Column],
-                   k: Int): DataFrame =
-    df.withColumn("__rn", row_number().over(
-        Window.partitionBy(part: _*).orderBy(ord: _*)))
-      .filter(col("__rn") <= k).drop("__rn")
-
   /** O41 — most-frequent value per group (mode), count-then-rank like
     * cuisine_type.sql:28-46. Ties break by value ascending (the reference
     * leaves ties to ORDER BY stability; we make it deterministic). */

@@ -23,7 +23,14 @@ object Tables {
     * Keyed by session and dropped whenever a different session shows
     * up, so sequential test suites (each with its own session) never
     * see a frame bound to a stopped context (the mediaStaticMemo
-    * ADVICE wart, avoided here by construction). */
+    * ADVICE wart, avoided here by construction).
+    *
+    * Assumes static fixtures: the file listing is frozen at first
+    * resolution, so a base table rewritten under `dir` later in the same
+    * session reads the stale listing (or fails on deleted files). Code
+    * that rewrites a base table mid-session must read it with
+    * `spark.read.parquet` directly; the export memos below key on
+    * fixture mtime for exactly that reason. */
   @volatile private var relMemo: (SparkSession,
     java.util.concurrent.ConcurrentHashMap[String, DataFrame]) = null
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {

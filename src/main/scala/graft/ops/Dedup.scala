@@ -792,7 +792,7 @@ object Dedup {
     * flag join back (that path flags per id: copies of an id share a
     * flag). Works identically on a batch frame and inside `foreachBatch`
     * on a microbatch — the streaming runner
-    * ([[graft.streaming.Streams.runNearDupGateOnce]]) applies it
+    * ([[graft.streaming.Streams.startNearDupGate]]) applies it
     * per-microbatch against the checkpointed index. */
   def nearDupFlag(docs: DataFrame, index: DataFrame,
                   idCol: String = "doc_id", textCol: String = "text",
@@ -998,7 +998,7 @@ object Dedup {
     * shuffle join, so candidates are bounded by list populations —
     * never all-pairs — and the tau screen cuts them before the distinct;
     * only (id) rows cross the flag join back. Stateless across batches:
-    * the streaming runner ([[graft.streaming.Streams]].runSemanticGateOnce)
+    * the streaming runner ([[graft.streaming.Streams.startSemanticGate]])
     * applies it per-microbatch against the frozen index (StreamingSpec
     * pins paced == batch; t57 oracle; benched as s07). */
   def semanticDupFlag(vecs: DataFrame, index: DataFrame,

@@ -1443,12 +1443,14 @@ object Similarity {
     // ways, and Double.compare puts -0.0 before 0.0 on BOTH forms).
     // Values identical — the t69 oracle replays ranking unchanged.
     // Null cosines (null embeddings) are dropped BEFORE the aggregate:
-    // the old row_number window ranked __cos desc NULLS LAST (a null
-    // never made the beam), but the ascending (negCos, nid) struct sort
-    // puts nulls FIRST — without this filter a null vector would
-    // silently enter every beam (round-16 ADVICE). Fixture vectors are
-    // non-null, so plans gain one codegen Filter and results are
-    // byte-identical (t69 oracle unchanged).
+    // the ascending (negCos, nid) struct sort puts nulls FIRST, so
+    // without this filter a null vector would silently enter every beam
+    // (round-16 ADVICE). This is not exactly the old row_number window's
+    // __cos desc NULLS LAST: in a group with fewer than `beam` non-null
+    // cosines, the window filled the trailing slots with null-cosine
+    // neighbors, which are now dropped. Fixture vectors are non-null, so
+    // that edge is unreachable there: plans gain one codegen Filter and
+    // results are byte-identical (t69 oracle unchanged).
     def topBeam(scored: DataFrame): DataFrame =
       scored.filter(col("__cos").isNotNull).groupBy(col("query_id"))
         .agg(slice(sort_array(collect_set(struct(

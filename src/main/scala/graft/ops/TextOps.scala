@@ -1824,7 +1824,7 @@ object TextOps {
     * row + (bm25_top round 4, is_contaminated); docs sharing no
     * term with the benchmark carry a null top and pass with 0. The
     * t84 oracle replays the index arithmetic, the max and the flag;
-    * the streaming twin ([[graft.streaming.Streams.runBm25GateOnce]],
+    * the streaming twin ([[graft.streaming.Streams.startBm25Gate]],
     * s12) screens each paced microbatch stateless against the same
     * frozen index, so paced == batch by construction.
     *

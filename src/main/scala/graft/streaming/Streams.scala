@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface — net-new relative to the reference (a
@@ -122,6 +123,20 @@ object Streams {
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(dir)
 
+  /** The one per-microbatch wiring every gate and monitor below starts
+    * through: each microbatch of `source` goes through `step` into
+    * `sink`, under AvailableNow (bounded input, then stop). Returns the
+    * started query so the caller owns termination — a spec awaits it,
+    * the bench's capped runner stops it at its deadline. */
+  private def startPerBatch(source: DataFrame, sink: DataFrame => Unit,
+                            outputMode: String = "append")(
+      step: DataFrame => DataFrame): StreamingQuery =
+    source.writeStream
+      .outputMode(outputMode)
+      .foreachBatch { (batch: DataFrame, _: Long) => sink(step(batch)) }
+      .trigger(Trigger.AvailableNow())
+      .start()
+
   /** Streaming cardinality monitor — the HyperLogLog sketch run as a
     * per-key running aggregate: per event type, row count and the
     * approximate distinct-user estimate ([[graft.ops.Stats.hllDistinctBy]],
@@ -159,7 +174,7 @@ object Streams {
     * discovered on Tuesday queries Monday's state), and grids persisted
     * per window merge by summing cells. Complete mode; estimates are a
     * downstream batch step on the aggregate-sized grid (streaming
-    * forbids the probe's second aggregate) — [[runFrequencyMonitorOnce]]
+    * forbids the probe's second aggregate) — [[startFrequencyMonitor]]
     * wires it per trigger. Null items fold to one sentinel identity
     * (the s13 rule: a null-spewing producer is exactly the storm shape
     * this exists to flag). Write-once: same function on a batch frame
@@ -176,36 +191,19 @@ object Streams {
     * (event_type, probe, est_count, alarm) rows, alarm =
     * est_count > maxCount — the replay-storm / bot-flood per-item gate.
     * The estimate NEVER undercounts (CMS guarantee), so an alarm can
-    * only be early, never missed, at any width. */
-  def runFrequencyMonitorOnce(spark: SparkSession, dir: String,
-                              watch: DataFrame, maxCount: Long,
-                              sink: DataFrame => Unit,
-                              filesPerTrigger: Int = 1,
-                              depth: Int = 4, width: Int = 1024): Unit =
-    startFrequencyMonitor(spark, dir, watch, maxCount, sink,
-      filesPerTrigger, depth, width).awaitTermination()
-
-  /** [[runFrequencyMonitorOnce]] without the await — returns the started
-    * query so a caller (the bench's capped runner) can own termination.
-    * ONE wiring of the grid + probe + alarm, however it is driven. */
+    * only be early, never missed, at any width. Returns the started
+    * query; the caller owns termination. */
   def startFrequencyMonitor(spark: SparkSession, dir: String,
                             watch: DataFrame, maxCount: Long,
                             sink: DataFrame => Unit,
                             filesPerTrigger: Int = 1,
                             depth: Int = 4, width: Int = 1024)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    frequencyGrid(eventsStreamPaced(spark, dir, filesPerTrigger),
-        depth, width)
-      .writeStream
-      .outputMode("complete")
-      .foreachBatch { (grid: DataFrame, _: Long) =>
-        sink(graft.ops.Stats.cmsEstimate(grid, watch, Seq("event_type"),
-            depth, width)
-          .withColumn("alarm", col("est_count") > maxCount))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    startPerBatch(frequencyGrid(eventsStreamPaced(spark, dir,
+        filesPerTrigger), depth, width), sink, "complete")(grid =>
+      graft.ops.Stats.cmsEstimate(grid, watch, Seq("event_type"), depth,
+          width)
+        .withColumn("alarm", col("est_count") > maxCount))
 
   /** [[frequencyGrid]] with exponential decay
     * ([[graft.ops.Stats.cmsDecayedSketchBy]]): the long-running form of
@@ -235,20 +233,13 @@ object Streams {
                                    sink: DataFrame => Unit,
                                    filesPerTrigger: Int = 1,
                                    depth: Int = 4, width: Int = 1024)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    decayedFrequencyGrid(eventsStreamPaced(spark, dir, filesPerTrigger),
-        t0Micros, halfLifeSeconds, depth, width)
-      .writeStream
-      .outputMode("complete")
-      .foreachBatch { (grid: DataFrame, _: Long) =>
-        sink(graft.ops.Stats.cmsDecayedEstimate(grid, watch,
-            Seq("event_type"), asOfMicros, t0Micros, halfLifeSeconds,
-            depth, width)
-          .withColumn("alarm", col("est_decayed") > maxDecayed))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    startPerBatch(decayedFrequencyGrid(eventsStreamPaced(spark, dir,
+        filesPerTrigger), t0Micros, halfLifeSeconds, depth, width), sink,
+        "complete")(grid =>
+      graft.ops.Stats.cmsDecayedEstimate(grid, watch, Seq("event_type"),
+          asOfMicros, t0Micros, halfLifeSeconds, depth, width)
+        .withColumn("alarm", col("est_decayed") > maxDecayed))
 
   /** [[cardinalityMonitor]]'s sketch under epoch slicing
     * ([[graft.ops.Stats.hllEpochSketchBy]]) — the long-running form of
@@ -295,33 +286,27 @@ object Streams {
                                      asOfMicros: Option[Long],
                                      sink: DataFrame => Unit,
                                      filesPerTrigger: Int = 1, p: Int = 9)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    epochCardinalityGrid(eventsStreamPaced(spark, dir, filesPerTrigger),
-        t0Micros, halfLifeSeconds, p)
-      .writeStream
-      .outputMode("complete")
-      .foreachBatch { (grid: DataFrame, _: Long) =>
-        val asOf = asOfMicros.getOrElse {
-          // aggregate-sized grid; an all-null max (no data yet) reads
-          // as-of t0 — the estimate frame is empty then anyway
-          val maxEpoch = grid.agg(max(col("epoch"))).first()
-          t0Micros + (if (maxEpoch.isNullAt(0)) 0L
-                      else maxEpoch.getLong(0)) *
-            halfLifeSeconds * 1000000L
-        }
-        sink(graft.ops.Stats.hllDecayedDistinct(grid, Seq("event_type"),
-            asOf, t0Micros, halfLifeSeconds, p)
-          // double /0 is Infinity (not an error even under ANSI), and
-          // Infinity > maxRepeatFactor — a zero-distinct active type
-          // alarms through either arm, as it should
-          .withColumn("alarm", col("rows_decayed") >= activityFloor &&
-            (col("est_decayed") < minDistinct ||
-              col("rows_decayed") / col("est_decayed") >
-                maxRepeatFactor)))
-        ()
+      : StreamingQuery =
+    startPerBatch(epochCardinalityGrid(eventsStreamPaced(spark, dir,
+        filesPerTrigger), t0Micros, halfLifeSeconds, p), sink,
+        "complete") { grid =>
+      val asOf = asOfMicros.getOrElse {
+        // aggregate-sized grid; an all-null max (no data yet) reads
+        // as-of t0 — the estimate frame is empty then anyway
+        val maxEpoch = grid.agg(max(col("epoch"))).first()
+        t0Micros + (if (maxEpoch.isNullAt(0)) 0L
+                    else maxEpoch.getLong(0)) *
+          halfLifeSeconds * 1000000L
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      graft.ops.Stats.hllDecayedDistinct(grid, Seq("event_type"), asOf,
+          t0Micros, halfLifeSeconds, p)
+        // double /0 is Infinity (not an error even under ANSI), and
+        // Infinity > maxRepeatFactor — a zero-distinct active type
+        // alarms through either arm, as it should
+        .withColumn("alarm", col("rows_decayed") >= activityFloor &&
+          (col("est_decayed") < minDistinct ||
+            col("rows_decayed") / col("est_decayed") > maxRepeatFactor))
+    }
 
   /** Streaming length-drift gate — sampled token-count quantiles per
     * source at ingest: a [[graft.functions.KMinPairs]] bottom-k-by-hash
@@ -766,36 +751,22 @@ object Streams {
                                   sink: DataFrame => Unit,
                                   filesPerTrigger: Int = 1,
                                   watermark: String = "60 days")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     var grid: Option[DataFrame] = None
-    transitionsWithState(
-        eventsStreamPaced(spark, dir, filesPerTrigger), watermark).toDF()
-      .writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val delta = b.groupBy(col("prev_type"), col("next_type"))
-          .agg(count(lit(1)).as("n_transitions"))
-        val next = grid.fold(delta)(g =>
-          g.unionByName(delta)
-            .groupBy(col("prev_type"), col("next_type"))
-            .agg(sum(col("n_transitions")).as("n_transitions")))
-          .localCheckpoint()
-        grid = Some(next)
-        sink(transitionDrift(transitionGridProbs(next), baseline, tol))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    startPerBatch(transitionsWithState(
+        eventsStreamPaced(spark, dir, filesPerTrigger), watermark).toDF(),
+        sink) { b =>
+      val delta = b.groupBy(col("prev_type"), col("next_type"))
+        .agg(count(lit(1)).as("n_transitions"))
+      val next = grid.fold(delta)(g =>
+        g.unionByName(delta)
+          .groupBy(col("prev_type"), col("next_type"))
+          .agg(sum(col("n_transitions")).as("n_transitions")))
+        .localCheckpoint()
+      grid = Some(next)
+      transitionDrift(transitionGridProbs(next), baseline, tol)
+    }
   }
-
-  /** [[startTransitionDriftMonitor]] with the await — the one-shot
-    * runner. */
-  def runTransitionDriftOnce(spark: SparkSession, dir: String,
-                             baseline: DataFrame, tol: Double = 0.1,
-                             sink: DataFrame => Unit,
-                             filesPerTrigger: Int = 1,
-                             watermark: String = "60 days"): Unit =
-    startTransitionDriftMonitor(spark, dir, baseline, tol, sink,
-      filesPerTrigger, watermark).awaitTermination()
 
   /** Stream-stream interval join: purchases attributed to the clicks of
     * the same user within the preceding `horizon`. Both sides carry a
@@ -877,7 +848,7 @@ object Streams {
           .publishAll(targetRoot, Map("user_totals" -> merged)).get
         ()
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     readTarget()
@@ -946,7 +917,7 @@ object Streams {
         }
         ()
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     readAll()
@@ -964,7 +935,7 @@ object Streams {
       .format("memory")
       .queryName(sinkName)
       .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     spark.table(sinkName)
@@ -974,34 +945,23 @@ object Streams {
     * MinHash dedup family: incoming documents are banded per microbatch
     * (native signature kernel) and screened against a STATIC corpus band
     * index ([[graft.ops.Dedup.nearDupIndex]], built once and
-    * materialized), each row emerging with an `is_near_dup` flag. The
-    * gate runs `foreachBatch`, applying the batch gate
-    * ([[graft.ops.Dedup.nearDupFlag]]) to every microbatch — each batch
-    * is one map-only band lookup against the index (a checkpointed index
-    * is collected on the first batch only; an index past the broadcast
-    * threshold takes a band-keyed semi-join), stateless across batches, and the paced stream's
-    * union must equal the batch gate over the same files
-    * (StreamingSpec-pinned; benched as s05).
-    * `sink` receives each flagged microbatch (the bench passes a noop
-    * writer; a deployment appends to the ingest table). */
-  def runNearDupGateOnce(spark: SparkSession, dir: String,
-                         index: org.apache.spark.sql.DataFrame,
-                         sink: DataFrame => Unit,
-                         filesPerTrigger: Int = 1,
-                         bands: Int = 8, rowsPerBand: Int = 4,
-                         shingleSize: Int = 3): Unit = {
-    val q = docsStreamPaced(spark, dir, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ops.Dedup.nearDupFlag(batch, index,
-          bands = bands, rowsPerBand = rowsPerBand,
-          shingleSize = shingleSize))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    * materialized), each row emerging with an `is_near_dup` flag. Each
+    * microbatch goes through the batch gate
+    * ([[graft.ops.Dedup.nearDupFlag]]): one map-only band lookup against
+    * the index (a checkpointed index is collected on the first batch
+    * only; an index past the broadcast threshold takes a band-keyed
+    * semi-join), stateless across batches, so the paced stream's union
+    * equals the batch gate over the same files (StreamingSpec-pinned;
+    * benched as s05). `sink` receives each flagged microbatch (the bench
+    * passes a noop writer; a deployment appends to the ingest table). */
+  def startNearDupGate(spark: SparkSession, dir: String,
+                       index: DataFrame, sink: DataFrame => Unit,
+                       filesPerTrigger: Int = 1,
+                       bands: Int = 8, rowsPerBand: Int = 4,
+                       shingleSize: Int = 3): StreamingQuery =
+    startPerBatch(docsStreamPaced(spark, dir, filesPerTrigger), sink)(
+      graft.ops.Dedup.nearDupFlag(_, index, bands = bands,
+        rowsPerBand = rowsPerBand, shingleSize = shingleSize))
 
   /** Streaming semantic ingest gate — the s05 discipline applied to the
     * embedding modality: incoming vectors are screened per microbatch
@@ -1009,40 +969,25 @@ object Streams {
     * ([[graft.ops.Dedup.semanticIndex]], built once and materialized)
     * with the within-cluster cosine threshold, each row emerging with an
     * `is_semantic_dup` flag. The per-doc flag needs an aggregate over
-    * the batch's candidate pairs, so the gate runs the documented Spark
-    * shape for stream-static screening with per-batch joins:
-    * `foreachBatch`, applying the batch gate
-    * ([[graft.ops.Dedup.semanticDupFlag]]) to every microbatch — each
-    * batch is one centroid_id-keyed join against the index, stateless
-    * across batches, and the paced stream's union must equal the batch
-    * gate over the same files (StreamingSpec-pinned; benched as s07).
-    * `centroids` MUST be the frame `index` was built with. `sink`
-    * receives each flagged microbatch (the bench passes a noop writer;
-    * a deployment appends kept rows to the ingest table). `nprobe > 1`
+    * the batch's candidate pairs, so each microbatch goes through the
+    * batch gate ([[graft.ops.Dedup.semanticDupFlag]]): one
+    * centroid_id-keyed join against the index, stateless across
+    * batches, so the paced stream's union equals the batch gate over
+    * the same files (StreamingSpec-pinned; benched as s07).
+    * `centroids` MUST be the frame `index` was built with. `nprobe > 1`
     * runs the multi-probe gate
     * ([[graft.ops.Dedup.semanticDupFlagProbed]]) — the recall knob for
     * Voronoi-boundary twins, raised without touching the index. */
-  def runSemanticGateOnce(spark: SparkSession, dir: String,
-                          index: DataFrame, centroids: DataFrame,
-                          sink: DataFrame => Unit,
-                          tau: Double = 0.99,
-                          filesPerTrigger: Int = 1,
-                          nprobe: Int = 1): Unit = {
-    val q = embsStreamPaced(spark, dir, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(
-          if (nprobe > 1)
-            graft.ops.Dedup.semanticDupFlagProbed(batch, index, centroids,
-              tau, nprobe)
-          else
-            graft.ops.Dedup.semanticDupFlag(batch, index, centroids, tau))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def startSemanticGate(spark: SparkSession, dir: String,
+                        index: DataFrame, centroids: DataFrame,
+                        sink: DataFrame => Unit, tau: Double = 0.99,
+                        filesPerTrigger: Int = 1,
+                        nprobe: Int = 1): StreamingQuery =
+    startPerBatch(embsStreamPaced(spark, dir, filesPerTrigger), sink)(b =>
+      if (nprobe > 1)
+        graft.ops.Dedup.semanticDupFlagProbed(b, index, centroids, tau,
+          nprobe)
+      else graft.ops.Dedup.semanticDupFlag(b, index, centroids, tau))
 
   /** Streaming lexical-decontamination gate — the s05/s07
     * build-once/probe-forever discipline applied to BM25 retrieval:
@@ -1059,26 +1004,34 @@ object Streams {
     * over the same files (StreamingSpec-pinned; benched as s12).
     * `minLen` must match the index build. The flag arithmetic is
     * oracle-gated as t84. */
-  def runBm25GateOnce(spark: SparkSession, dir: String,
-                      index: DataFrame, sink: DataFrame => Unit,
-                      tau: Double, filesPerTrigger: Int = 1,
-                      minLen: Int = 3,
-                      exactSums: Boolean = true): Unit = {
-    val q = docsStreamPaced(spark, dir, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // pinWidth=false: the postings width pin would pay its
-        // exchanges EVERY trigger on a ~75 KB microbatch probe whose
-        // fan-out never needs the width (the round-14 s12 floor
-        // lesson); the batch keys (t78/t79/t84) keep the pin
-        sink(graft.ops.TextOps.bm25ScreenFlag(batch, index, tau,
-          minLen = minLen, exactSums = exactSums, pinWidth = false))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def startBm25Gate(spark: SparkSession, dir: String, index: DataFrame,
+                    sink: DataFrame => Unit, tau: Double,
+                    filesPerTrigger: Int = 1, minLen: Int = 3,
+                    exactSums: Boolean = true): StreamingQuery =
+    startPerBatch(docsStreamPaced(spark, dir, filesPerTrigger), sink)(
+      graft.ops.TextOps.bm25ScreenFlag(_, index, tau, minLen = minLen,
+        exactSums = exactSums))
+
+  /** Streaming DSIR ingest gate — the s05/s07 build-once/probe-forever
+    * discipline applied to the data-selection model: incoming documents
+    * are scored per microbatch against a FROZEN
+    * [[graft.ops.TextOps.dsirProfile]] (built once from the raw/target
+    * model corpora and materialized), each row emerging with its
+    * (n_grams, log_weight) — a deployment thresholds on log_weight to
+    * keep target-like documents at ingest. Per batch: one map-only
+    * projection ([[graft.ops.TextOps.dsirScore]]) against the profile's
+    * terms (collected on the first batch only when the profile is a
+    * checkpoint); stateless across batches, so the paced stream's union
+    * equals the batch scorer over the same files
+    * (StreamingSpec-pinned; benched as s09). (n, buckets, salt) MUST
+    * match the profile build or the buckets silently disagree. */
+  def startDsirGate(spark: SparkSession, dir: String, profile: DataFrame,
+                    sink: DataFrame => Unit, filesPerTrigger: Int = 1,
+                    n: Int = 2, buckets: Int = 4096,
+                    salt: String = "dsir"): StreamingQuery =
+    startPerBatch(docsStreamPaced(spark, dir, filesPerTrigger), sink)(
+      graft.ops.TextOps.dsirScore(_, profile, n, buckets, salt))
+
 
   /** Composed per-document ingest screen — every doc-modality gate in
     * ONE pass over an incoming frame: per document its quality score
@@ -1116,6 +1069,17 @@ object Streams {
       .withColumn("pii", graft.ops.TextOps.piiCount(col("text")))
   }
 
+  /** Streaming form of [[ingestScreen]] — the s10 bench shape: paced
+    * documents screened per microbatch against BOTH frozen statics,
+    * each batch emerging with all gate columns at once. Stateless
+    * across batches; paced == batch (StreamingSpec). */
+  def startIngestScreen(spark: SparkSession, dir: String,
+                        bandIndex: DataFrame, dsirProfile: DataFrame,
+                        sink: DataFrame => Unit,
+                        filesPerTrigger: Int = 1): StreamingQuery =
+    startPerBatch(docsStreamPaced(spark, dir, filesPerTrigger), sink)(
+      ingestScreen(_, bandIndex, dsirProfile))
+
   /** Stream-static as-of enrichment — [[graft.ops.Temporal.asofJoin]]
     * applied per microbatch: each paced batch of purchase events is
     * enriched with the most recent same-user `right` row at or before
@@ -1127,26 +1091,18 @@ object Streams {
     * paced == batch). Each batch plans the t70 shape: no join
     * operator, one hash exchange over batch ∪ static. Benched as
     * s11. */
-  def runAsofEnrichOnce(spark: SparkSession, dir: String,
-                        right: DataFrame, rightTs: String,
-                        payload: Seq[String], tie: String,
-                        sink: DataFrame => Unit,
-                        tolerance: Option[String] = None,
-                        filesPerTrigger: Int = 1): Unit = {
-    val q = eventsStreamPaced(spark, dir, filesPerTrigger)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ops.Temporal.asofJoin(batch, right, Seq("user_id"),
-          "ts", rightTs, payload, tie, tolerance))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def startAsofEnrich(spark: SparkSession, dir: String,
+                      right: DataFrame, rightTs: String,
+                      payload: Seq[String], tie: String,
+                      sink: DataFrame => Unit,
+                      tolerance: Option[String] = None,
+                      filesPerTrigger: Int = 1): StreamingQuery =
+    startPerBatch(eventsStreamPaced(spark, dir, filesPerTrigger)
+        .filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id"),
+          col("ts")), sink)(
+      graft.ops.Temporal.asofJoin(_, right, Seq("user_id"), "ts", rightTs,
+        payload, tie, tolerance))
 
   /** Stream-static RANGE-JOIN enrichment — the s11 as-of discipline on
     * the many-match contract: each paced purchase microbatch joins
@@ -1155,72 +1111,16 @@ object Streams {
     * containing window; inner, so out-of-window purchases drop —
     * the alert-correlation shape, not the enrichment one). Stateless
     * across batches; per-row results depend only on (row, static), so
-    * pacing cannot change them (StreamingSpec: paced == batch). */
-  def runRangeJoinOnce(spark: SparkSession, dir: String,
-                       intervals: DataFrame, startTs: String,
-                       endTs: String, bucketSeconds: Long,
-                       sink: DataFrame => Unit,
-                       filesPerTrigger: Int = 1): Unit = {
-    val q = eventsStreamPaced(spark, dir, filesPerTrigger)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("ts"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ops.Temporal.rangeJoinBucketed(batch, intervals,
-          "ts", startTs, endTs, bucketSeconds))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Streaming form of [[ingestScreen]] — the s10 bench shape: paced
-    * documents screened per microbatch against BOTH frozen statics via
-    * foreachBatch, each batch emerging with all gate columns at once.
-    * Stateless across batches; paced == batch (StreamingSpec). */
-  def runIngestScreenOnce(spark: SparkSession, dir: String,
-                          bandIndex: DataFrame, dsirProfile: DataFrame,
-                          sink: DataFrame => Unit,
-                          filesPerTrigger: Int = 1): Unit = {
-    val q = docsStreamPaced(spark, dir, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(ingestScreen(batch, bandIndex, dsirProfile))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Streaming DSIR ingest gate — the s05/s07 build-once/probe-forever
-    * discipline applied to the data-selection model: incoming documents
-    * are scored per microbatch against a FROZEN
-    * [[graft.ops.TextOps.dsirProfile]] (built once from the raw/target
-    * model corpora and materialized), each row emerging with its
-    * (n_grams, log_weight) — a deployment thresholds on log_weight to
-    * keep target-like documents at ingest. Per batch: one map-only
-    * projection ([[graft.ops.TextOps.dsirScore]]) against the profile's
-    * terms (collected on the first batch only when the profile is a
-    * checkpoint); stateless across batches, so the paced stream's union
-    * equals the batch scorer over the same files
-    * (StreamingSpec-pinned; benched as s09). (n, buckets, salt) MUST
-    * match the profile build or the buckets silently disagree. */
-  def runDsirGateOnce(spark: SparkSession, dir: String,
-                      profile: DataFrame, sink: DataFrame => Unit,
-                      filesPerTrigger: Int = 1, n: Int = 2,
-                      buckets: Int = 4096,
-                      salt: String = "dsir"): Unit = {
-    val q = docsStreamPaced(spark, dir, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ops.TextOps.dsirScore(batch, profile, n, buckets,
-          salt))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    * pacing cannot change them (StreamingSpec: paced == batch; benched
+    * as s21). */
+  def startRangeJoin(spark: SparkSession, dir: String,
+                     intervals: DataFrame, startTs: String,
+                     endTs: String, bucketSeconds: Long,
+                     sink: DataFrame => Unit,
+                     filesPerTrigger: Int = 1): StreamingQuery =
+    startPerBatch(eventsStreamPaced(spark, dir, filesPerTrigger)
+        .filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("ts")), sink)(
+      graft.ops.Temporal.rangeJoinBucketed(_, intervals, "ts", startTs,
+        endTs, bucketSeconds))
 }

@@ -3,8 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Structural lints that pin two round-15/16 audit results so they
-  * cannot regress silently:
+/** Structural lints that pin three audit results so they cannot
+  * regress silently:
   *
   *  1. exactSums invariant (round-15 sweep, round-15 verdict item 2):
   *     no corpus-scaled non-oracle path pays fractional-decimal
@@ -26,6 +26,10 @@ import scala.jdk.CollectionConverters._
   *     NEW round-robin site fails here and must either go through
   *     `graft.ops.Par.fanOutReady` or be added with an A/B
   *     measurement note at the call site.
+  *
+  *  3. stream door: every AvailableNow stream is started in
+  *     `Streams` or the `StreamingQueries` registry, so the bench
+  *     times exactly the wiring StreamingSpec checks.
   */
 class LintSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
@@ -73,13 +77,11 @@ class LintSpec extends SparkSpec {
   test("fan-out door: round-robin repartition sites are pinned — new " +
       "spreading goes through Par.fanOutReady (PLANS.md amplification " +
       "audit: blind spreading regressed t80 2.1->5.8s, t56 2.7->3.5s)") {
-    val root = Paths.get("src/main/scala/graft")
     // audited round-robin sites per file (PLANS.md + call-site notes):
     //   TextOps: the tf localCheckpoint widening (t78 postings family)
     //   Tables: fixture-export sharding (paced-stream part files)
     //   DataQueries: bench-twin scan spreading (defaultParallelism,
     //     measured flat-to-better on the salted corpora)
-    //   FanoutXp: the dev A/B experiment main itself
     //   Par: the guarded implementation (the one sanctioned door)
     val audited = Map(
       "ops/TextOps.scala" -> 1,
@@ -88,48 +90,66 @@ class LintSpec extends SparkSpec {
       // 8-branch union width and every consumer's cosine kernel ran
       // 8-wide (A/B note at the call site)
       "DataQueries.scala" -> 5,
-      "FanoutXp.scala" -> 1,
       "ops/Par.scala" -> 1,
       // round-16 A/B (OPTIMIZATION_r16.md): the per-row codec kernel
       // ran serial behind a one-task corpus scan; the 40 KB id frame
       // sits under fanOutReady's 128 KB stats floor, so the site
       // spreads explicitly with the measurement note at the call site
       "ops/Multimodal.scala" -> 1)
-    val walk = Files.walk(root)
-    val found =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .flatMap { p =>
-          val rel = root.relativize(p).toString.replace('\\', '/')
-          val lines = Files.readAllLines(p).asScala
-          lines.zipWithIndex.flatMap { case (raw, i) =>
-            val line = raw.trim
-            // comments don't count (the Scaladoc mentions the idiom)
-            if (line.startsWith("*") || line.startsWith("//") ||
-              line.startsWith("/*")) None
-            else {
-              // args up to the close paren, spilling onto the next
-              // line for multi-line calls
-              val at = raw.indexOf(".repartition(")
-              if (at < 0) None
-              else {
-                val tail = raw.substring(at + ".repartition(".length) +
-                  lines.lift(i + 1).getOrElse("")
-                val args = tail.takeWhile(_ != ')')
-                // a partitioning column makes it a co-location
-                // shuffle, not width spreading
-                if (args.contains("col(") || args.contains("$\""))
-                  None
-                else Some(rel)
-              }
-            }
-          }
-        }.toSeq.groupBy(identity).view.mapValues(_.size).toMap
-      finally walk.close()
+    val found = sitesPerFile { (raw, next) =>
+      // args up to the close paren, spilling onto the next line for
+      // multi-line calls; a partitioning column makes it a
+      // co-location shuffle, not width spreading
+      val at = raw.indexOf(".repartition(")
+      at >= 0 && {
+        val args = (raw.substring(at + ".repartition(".length) + next)
+          .takeWhile(_ != ')')
+        !(args.contains("col(") || args.contains("$\""))
+      }
+    }
     assert(found == audited,
       s"round-robin repartition sites moved: found $found, audited " +
         s"$audited — route new spreading through " +
         "graft.ops.Par.fanOutReady (stats-floor guarded) or A/B it " +
         "and pin the new count here with a call-site note")
+  }
+
+  test("stream door: every AvailableNow stream starts in Streams or the " +
+      "StreamingQueries registry — Bench owns no stream wiring") {
+    // Streams: the one per-batch gate/monitor helper plus the three
+    // one-shot sinks (upsert, upsert-by-month, hourly rollup);
+    // StreamingQueries: the noop-sink starter of the stateful keys.
+    // Bench times what the registry starts and starts nothing itself,
+    // so what is benched is what StreamingSpec runs
+    val audited = Map(
+      "streaming/Streams.scala" -> 4,
+      "StreamingQueries.scala" -> 1)
+    val found = sitesPerFile((raw, _) => raw.contains("Trigger.AvailableNow("))
+    assert(found == audited,
+      s"AvailableNow stream sites moved: found $found, audited $audited " +
+        "— start a new stream through a Streams start* entry point (or a " +
+        "StreamingQueries entry) and pin the count here")
+  }
+
+  /** Per file under src/main/scala/graft (path relative to it), the
+    * code lines — comments skipped, since Scaladoc mentions the idioms
+    * — for which `hit(line, nextLine)` holds. */
+  private def sitesPerFile(hit: (String, String) => Boolean)
+      : Map[String, Int] = {
+    val root = Paths.get("src/main/scala/graft")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val rel = root.relativize(p).toString.replace('\\', '/')
+        val lines = Files.readAllLines(p).asScala
+        lines.indices.filter { i =>
+          val line = lines(i).trim
+          !(line.startsWith("*") || line.startsWith("//") ||
+            line.startsWith("/*")) &&
+            hit(lines(i), lines.lift(i + 1).getOrElse(""))
+        }.map(_ => rel)
+      }.toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    finally walk.close()
   }
 }

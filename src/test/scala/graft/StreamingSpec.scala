@@ -194,13 +194,14 @@ class StreamingSpec extends SparkSpec {
       .localCheckpoint()
     val got = scala.collection.mutable.ArrayBuffer
       .empty[Seq[(Long, Option[Double], Long)]]
-    Streams.runBm25GateOnce(spark, parts, idx,
+    Streams.startBm25Gate(spark, parts, idx,
       b => got += b.select(col("doc_id"), col("bm25_top"),
           col("is_contaminated"))
         .collect().toSeq.map(r => (r.getLong(0),
           Option(r.getAs[java.lang.Double](1)).map(_.toDouble),
           r.getLong(2))),
       tau = 9.0)
+      .awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.flatten.sortBy(_._1)
     val batch = TextOps
@@ -242,9 +243,10 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     val idx = Dedup.nearDupIndex(docs).localCheckpoint()
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Long)]]
-    Streams.runNearDupGateOnce(spark, parts, idx,
+    Streams.startNearDupGate(spark, parts, idx,
       b => got += b.select(col("doc_id"), col("is_near_dup"))
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
+      .awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.flatten.sortBy(_._1)
     val batch = Dedup
@@ -293,9 +295,10 @@ class StreamingSpec extends SparkSpec {
       .localCheckpoint()
     val idx = Dedup.semanticIndex(emb, cents).localCheckpoint()
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Long)]]
-    Streams.runSemanticGateOnce(spark, parts, idx, cents,
+    Streams.startSemanticGate(spark, parts, idx, cents,
       b => got += b.select(col("vec_id"), col("is_semantic_dup"))
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
+      .awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.flatten.sortBy(_._1)
     val batch = Dedup
@@ -327,10 +330,11 @@ class StreamingSpec extends SparkSpec {
     assert(flags(900002L) === 0L, "negated vector must pass the gate")
     // the runner's probe knob: paced nprobe=2 == batch probed gate
     val got2 = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Long)]]
-    Streams.runSemanticGateOnce(spark, parts, idx, cents,
+    Streams.startSemanticGate(spark, parts, idx, cents,
       b => got2 += b.select(col("vec_id"), col("is_semantic_dup"))
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))),
       nprobe = 2)
+      .awaitTermination()
     val paced2 = got2.flatten.sortBy(_._1)
     val batch2 = Dedup
       .semanticDupFlagProbed(graft.etl.Tables.embeddings(spark, d), idx,
@@ -621,9 +625,10 @@ class StreamingSpec extends SparkSpec {
     val baseline = Seq(("A", "B", 1.0))
       .toDF("prev_type", "next_type", "prob")
     @volatile var last: Array[org.apache.spark.sql.Row] = Array.empty
-    Streams.runTransitionDriftOnce(spark, s"$dir/ev", baseline,
+    Streams.startTransitionDriftMonitor(spark, s"$dir/ev", baseline,
       tol = 0.1, sink = f => { last = f.collect() },
       filesPerTrigger = 1, watermark = "2 days")
+      .awaitTermination()
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getDouble(3), r.getLong(5)))).toMap
@@ -861,8 +866,9 @@ class StreamingSpec extends SparkSpec {
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2))))
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Scored]]
-    Streams.runDsirGateOnce(spark, parts, prof,
+    Streams.startDsirGate(spark, parts, prof,
       b => got += rows(b), buckets = 512)
+      .awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.toSeq.flatten.sortBy(_._1)
     val batch = rows(TextOps.dsirScore(docs, prof, buckets = 512))
@@ -903,8 +909,9 @@ class StreamingSpec extends SparkSpec {
           if (r.isNullAt(3)) None else Some(r.getDouble(3)),
           r.getDouble(4), r.getLong(5)))
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Screened]]
-    Streams.runIngestScreenOnce(spark, parts, idx, prof,
+    Streams.startIngestScreen(spark, parts, idx, prof,
       b => got += rows(b))
+      .awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.toSeq.flatten.sortBy(_._1)
     val batch = rows(Streams.ingestScreen(docs, idx, prof)).sortBy(_._1)
@@ -941,8 +948,9 @@ class StreamingSpec extends SparkSpec {
         .map(r => (r.getLong(0),
           if (r.isNullAt(1)) None else Some(r.getLong(1))))
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Enriched]]
-    Streams.runAsofEnrichOnce(spark, parts, views, "view_ts",
+    Streams.startAsofEnrich(spark, parts, views, "view_ts",
       Seq("view_id", "view_value"), "view_id", b => got += rows(b))
+      .awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.toSeq.flatten.sortBy(_._1)
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -957,9 +965,10 @@ class StreamingSpec extends SparkSpec {
     // the tolerance knob threads through: a 1-second window voids
     // almost everything, and paced still equals batch
     val gotT = scala.collection.mutable.ArrayBuffer.empty[Seq[Enriched]]
-    Streams.runAsofEnrichOnce(spark, parts, views, "view_ts",
+    Streams.startAsofEnrich(spark, parts, views, "view_ts",
       Seq("view_id", "view_value"), "view_id", b => gotT += rows(b),
       tolerance = Some("1 second"))
+      .awaitTermination()
     val pacedT = gotT.toSeq.flatten.sortBy(_._1)
     val batchT = rows(Temporal.asofJoin(purchases, views, Seq("user_id"),
       "ts", "view_ts", Seq("view_id", "view_value"), tie = "view_id",
@@ -985,8 +994,9 @@ class StreamingSpec extends SparkSpec {
       b.select(col("purchase_id"), col("error_id")).collect().toSeq
         .map(r => (r.getLong(0), r.getLong(1)))
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Long)]]
-    Streams.runRangeJoinOnce(spark, parts, incidents, "inc_start",
+    Streams.startRangeJoin(spark, parts, incidents, "inc_start",
       "inc_end", bucketSeconds = 7200L, b => got += pairs(b))
+      .awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.toSeq.flatten.sorted
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -1040,12 +1050,13 @@ class StreamingSpec extends SparkSpec {
     val watch = Seq(("click", "77777"), ("click", "1")).toDF(
       "event_type", "probe")
     var last: Map[(String, String), (Long, Boolean)] = Map.empty
-    Streams.runFrequencyMonitorOnce(spark, stormDir, watch,
+    Streams.startFrequencyMonitor(spark, stormDir, watch,
       maxCount = 300L,
       sink = est => last = est.collect().map(r =>
         (r.getString(0), r.getString(1)) ->
           (r.getLong(2), r.getBoolean(3))).toMap,
       filesPerTrigger = 2)
+      .awaitTermination()
     val trueCounts = spark.read.parquet(stormDir)
       .filter(col("event_type") === "click" &&
         col("user_id").isin(77777L, 1L))
@@ -1361,5 +1372,29 @@ class StreamingSpec extends SparkSpec {
     assert(zeros.length === 3)
     zeros.foreach(r => assert((r.getLong(1), r.getDouble(2)) ===
       ((alone._3, alone._4.get))))
+  }
+
+  test("StreamingQueries: statics warmed once, then every streaming " +
+      "bench key runs to termination on sf0.001; a static missing after " +
+      "warm-up fails naming itself") {
+    // the exact entries Bench times, on the spec session
+    val d = "/root/testdata/sf0.001"
+    val failed = StreamingQueries.warmStatics(spark, d)
+    assert(failed.isEmpty, s"warm-up failed: ${failed.map(_._1)}")
+    assert(StreamingQueries.all.map(_._1).distinct.size == 21)
+    StreamingQueries.all.foreach { case (name, start) =>
+      val q = start(spark, d)
+      try q.awaitTermination() finally if (q.isActive) q.stop()
+      assert(q.recentProgress.exists(_.numInputRows > 0),
+        s"$name read no input")
+    }
+    // warm-up seals the directory: a static whose build failed is
+    // refused by name, never rebuilt inside a timed run
+    val missing = Files.createTempDirectory("graft_nofixture").toString
+    val broken = StreamingQueries.warmStatics(spark, missing).map(_._1)
+    assert(broken.contains("band index"))
+    val e = intercept[IllegalStateException](
+      StreamingQueries.static(spark, missing, "band index"))
+    assert(e.getMessage.contains("'band index'"))
   }
 }
