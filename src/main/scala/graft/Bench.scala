@@ -148,36 +148,21 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Untimed warm-up: JIT/codegen round trip, then the three export-backed
-    // queries so the one-time CSV/JSON/partitioned fixture materialization
-    // happens outside every timed region (the export memo persists across
-    // passes; only the staging memos are cleared per pass).
+    // Untimed warm-up: JIT/codegen round trip, then the one-time
+    // materializations (the q48-q50 CSV/JSON/partitioned exports, the
+    // scale keys' frozen statics), each only when a kept key reads it, so
+    // they happen outside every timed region (the export memo persists
+    // across passes; only the staging memos are cleared per pass).
     try {
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val o = spark.read.parquet(s"$sfDir/orders.parquet")
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy("l_returnflag").count().count()
       SparkEntry.queries.view
-        .filterKeys(k => k.startsWith("q48") || k.startsWith("q49") ||
-          k.startsWith("q50"))
+        .filterKeys(k => (k.startsWith("q48") || k.startsWith("q49") ||
+          k.startsWith("q50")) && keep(k))
         .foreach { case (_, fn) => fn(spark, sfDir).count() }
-      // s03's / s04's multi-file exports are one-time materialization
-      // I/O too
-      graft.etl.Tables.exportedEventsParts(spark, sfDir)
-      graft.etl.Tables.exportedDocsParts(spark, sfDir)
-      // the split PQ scale benches' frozen corpus/centroids/codebooks:
-      // trained once here so x40/x45 search entries time pure search
-      DataQueries.warmPqStatics(spark, sfDir)
-      // x78i's frozen BM25 postings index: built once here so the
-      // entry times pure retrieval (the x40/x45 train/search split
-      // applied to lexical retrieval)
-      DataQueries.warmBm25Static(spark, sfDir)
-      // x08r/x08z's frozen real-media asset table: synthesized once
-      // here so the codec entries time decode-side work only
-      DataQueries.warmMediaStatic(spark, sfDir)
-      // x34's 10x month-partitioned fact is one-time materialization
-      // I/O too (a deployment's fact table already lives in this layout)
-      graft.etl.Tables.exportedSegFactByMonth(spark, sfDir)
+      DataQueries.warmStatics(spark, sfDir, keep)
       hostKernelSec(spark) // JIT the calibration kernel itself
       ()
     } catch {
@@ -248,11 +233,12 @@ object Bench {
     // the statics memo builds nothing, so a key whose static failed
     // records -1 instead of timing an in-pass build.
     val streamSpark = StreamingQueries.session(spark)
-    StreamingQueries.warmStatics(streamSpark, sfDir).foreach {
-      case (name, e) => System.err.println(s"[bench] stream static " +
-        s"'$name' failed at warm-up (keys that read it record -1): " +
-        e.getMessage)
-    }
+    if (StreamingQueries.all.exists(p => keep(p._1)))
+      StreamingQueries.warmStatics(streamSpark, sfDir).foreach {
+        case (name, e) => System.err.println(s"[bench] stream static " +
+          s"'$name' failed at warm-up (keys that read it record -1): " +
+          e.getMessage)
+      }
     // Streams self-cap: the watchdog's job-group cancel can't reach a
     // stream's microbatch thread (job groups are thread-local), so an
     // overlong stream is stopped here and recorded as a failure (-1)

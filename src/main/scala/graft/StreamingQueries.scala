@@ -117,18 +117,19 @@ object StreamingQueries {
       })
     })
 
-  /** Build every static for `d` (and the embedding part export) once,
-    * then seal `d`: from here on a missing static throws naming itself.
-    * Returns the statics that failed to build, with their errors. */
+  /** Build every static for `d` and the event, document and embedding
+    * part exports the streams read, once, then seal `d`: from here on a
+    * missing static throws naming itself. Returns the statics and exports
+    * that failed to build, with their errors. */
   def warmStatics(s: SparkSession, d: String): Seq[(String, Throwable)] = {
-    val failed = builders.map(_._1).flatMap(name =>
-      try { static(s, d, name); None }
-      catch { case e: Throwable => Some(name -> e) })
-    val export =
-      try { T.exportedEmbsParts(s, d); None }
-      catch { case e: Throwable => Some("embedding parts" -> e) }
+    def attempt(name: String)(build: => Any) =
+      try { build; None } catch { case e: Throwable => Some(name -> e) }
+    val failed = builders.flatMap(b => attempt(b._1)(static(s, d, b._1))) ++
+        attempt("event parts")(T.exportedEventsParts(s, d)) ++
+        attempt("document parts")(T.exportedDocsParts(s, d)) ++
+        attempt("embedding parts")(T.exportedEmbsParts(s, d))
     warmed(d) = ()
-    failed ++ export
+    failed
   }
 
   private val noop: DataFrame => Unit =

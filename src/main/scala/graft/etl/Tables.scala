@@ -20,10 +20,12 @@ object Tables {
     * makes — a table is registered once and `spark.table` reuses the
     * resolved relation. This caches ONLY the lazy plan (metadata):
     * every action still scans parquet; no results or data are held.
-    * Keyed by session and dropped whenever a different session shows
-    * up, so sequential test suites (each with its own session) never
-    * see a frame bound to a stopped context (the mediaStaticMemo
-    * ADVICE wart, avoided here by construction).
+    * Keyed by (session, path), so sessions that interleave (Bench's
+    * batch and stream sessions) keep each other's entries; an entry
+    * whose session's context has stopped is dropped at the next miss,
+    * so sequential test suites (each with its own context) never see a
+    * frame bound to a stopped context (the mediaStaticMemo ADVICE wart,
+    * avoided here by construction).
     *
     * Assumes static fixtures: the file listing is frozen at first
     * resolution, so a base table rewritten under `dir` later in the same
@@ -31,17 +33,15 @@ object Tables {
     * that rewrites a base table mid-session must read it with
     * `spark.read.parquet` directly; the export memos below key on
     * fixture mtime for exactly that reason. */
-  @volatile private var relMemo: (SparkSession,
-    java.util.concurrent.ConcurrentHashMap[String, DataFrame]) = null
+  private val relMemo = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), DataFrame]
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    var m = relMemo
-    if (m == null || (m._1 ne spark)) {
-      m = (spark,
-        new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-      relMemo = m
-    }
-    m._2.computeIfAbsent(path, p => spark.read.parquet(p))
+    val key = (spark, s"$dir/$name.parquet")
+    relMemo.getOrElse(key, {
+      relMemo.keys.filter(_._1.sparkContext.isStopped)
+        .foreach(relMemo.remove)
+      relMemo.getOrElseUpdate(key, spark.read.parquet(key._2))
+    })
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

@@ -920,6 +920,10 @@ object GraftFunctions {
   def dsir_sum(text: Column, n: Int, salt: String,
                terms: Broadcast[Array[Long]]): Column =
     column(DsirSumExpr(expression(text), n, salt, terms))
+  def ws_parts(text: Column): Column = column(WsPartsExpr(expression(text)))
+  def quality_score(text: Column): Column =
+    column(QualityScoreExpr(expression(text)))
+  def pii_count(text: Column): Column = column(PiiCountExpr(expression(text)))
 
   /** Register as SQL functions (graft_minhash_sig / graft_simhash64). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

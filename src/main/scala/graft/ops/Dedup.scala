@@ -628,12 +628,17 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
   }
 
-  /** A document has at least one word `shingleSize`-shingle. */
+  /** A document has at least one word `shingleSize`-shingle: its
+    * `split(lower(trim(text)), "\\s+")` has at least `shingleSize`
+    * parts (`lower` moves no whitespace, so one native pass over the
+    * trimmed text counts them). */
   private def shingles(text: Column, shingleSize: Int): Column =
-    size(split(lower(trim(text)), "\\s+")) >= shingleSize
+    graft.functions.GraftFunctions.ws_parts(text) >= shingleSize
 
-  private def gateSig(text: Column, bands: Int, rowsPerBand: Int,
-                      shingleSize: Int, md5Keys: Boolean): Column =
+  /** The near-dup gate's MinHash signature of `text`; [[nearDupHit]]
+    * reads it. */
+  private[graft] def gateSig(text: Column, bands: Int, rowsPerBand: Int,
+                             shingleSize: Int, md5Keys: Boolean): Column =
     if (md5Keys) graft.functions.GraftFunctions.minhash_sig_md5(
       text, bands * rowsPerBand, shingleSize)
     else graft.functions.GraftFunctions.minhash_sig(
@@ -812,22 +817,17 @@ object Dedup {
   private def nearDupFlagImpl(docs: DataFrame, index: DataFrame,
                               idCol: String, textCol: String, bands: Int,
                               rowsPerBand: Int, shingleSize: Int,
-                              md5Keys: Boolean): DataFrame = {
-    val indexBytes = index.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (indexBytes >= 0 && indexBytes <= index.sparkSession.sessionState
-        .conf.autoBroadcastJoinThreshold) {
-      // the signature is a Project of its own: inside the when() below
+                              md5Keys: Boolean): DataFrame =
+    if (lookupFits(index)) {
+      // the signature is a Project of its own: inside the flag's when()
       // each band key would re-run the kernel (conditional branches are
       // not subexpression-eliminated)
       val sig = "__nd_sig"
-      val flag = when(shingles(col(textCol), shingleSize),
-          graft.functions.GraftFunctions.band_hit(
-            bandKeys(col(sig), bands, rowsPerBand, md5Keys),
-            bandSets(index)))
-        .otherwise(lit(0L))
       docs.select(col("*"), gateSig(col(textCol), bands, rowsPerBand,
           shingleSize, md5Keys).as(sig))
-        .select(docs.columns.map(col) :+ flag.as("is_near_dup"): _*)
+        .select(docs.columns.map(col) :+ nearDupHit(col(textCol), col(sig),
+          index, bands, rowsPerBand, shingleSize, md5Keys)
+          .as("is_near_dup"): _*)
     } else {
       val hits = gateBands(docs, idCol, textCol, bands, rowsPerBand,
           shingleSize, md5Keys)
@@ -838,7 +838,24 @@ object Dedup {
         .select(docs.columns.map(docs(_)) :+
           coalesce(col("__hit"), lit(0L)).as("is_near_dup"): _*)
     }
+
+  /** Whether [[nearDupFlag]] probes `index` per row (its plan estimate
+    * fits `spark.sql.autoBroadcastJoinThreshold`) rather than joining it. */
+  private[graft] def lookupFits(index: DataFrame): Boolean = {
+    val indexBytes = index.queryExecution.optimizedPlan.stats.sizeInBytes
+    indexBytes >= 0 && indexBytes <= index.sparkSession.sessionState
+      .conf.autoBroadcastJoinThreshold
   }
+
+  /** The lookup path's 0/1 near-dup flag of a document from its `text`
+    * and its [[gateSig]] `sig`: 1 when some band key is in the frozen
+    * `index`; 0 for a document too short to shingle. */
+  private[graft] def nearDupHit(text: Column, sig: Column, index: DataFrame,
+                                bands: Int, rowsPerBand: Int,
+                                shingleSize: Int, md5Keys: Boolean): Column =
+    when(shingles(text, shingleSize), graft.functions.GraftFunctions.band_hit(
+        bandKeys(sig, bands, rowsPerBand, md5Keys), bandSets(index)))
+      .otherwise(lit(0L))
 
   /** A band index as per-band key sets: element b holds band b's
     * band_hash values (boxed longs, or UTF8Strings for the md5 family). */

@@ -25,21 +25,14 @@ object TextOps {
 
   /** Heuristic document-quality score in [0,1]: blend of length band,
     * alpha ratio, punctuation ratio and mean word length — the usual
-    * cheap pre-filter ahead of model-based scoring. */
-  def qualityScore(text: Column): Column = {
-    val nChars = length(text).cast("double")
-    val nAlpha = length(regexp_replace(text, "[^A-Za-z ]", "")).cast("double")
-    val nPunct = length(regexp_replace(text, "[^.,;:!?]", "")).cast("double")
-    val nTok   = tokenCount(text).cast("double")
-    val alphaRatio = when(nChars === 0, 0.0).otherwise(nAlpha / nChars)
-    val punctRatio = when(nChars === 0, 0.0).otherwise(nPunct / nChars)
-    val meanWordLen = when(nTok === 0, 0.0).otherwise(nChars / nTok)
-    val lengthOk = when(nTok.between(10, 100000), 1.0).otherwise(0.5)
-    round(least(lit(1.0), greatest(lit(0.0),
-      alphaRatio * 0.5 + lengthOk * 0.3 +
-        (lit(1.0) - least(lit(1.0), punctRatio * 10)) * 0.1 +
-        when(meanWordLen.between(2, 12), 0.1).otherwise(0.0))), 4)
-  }
+    * cheap pre-filter ahead of model-based scoring. Over n characters,
+    * a `[A-Za-z ]` and p `[.,;:!?]` characters and t [[tokenCount]]
+    * tokens: round(clamp01(0.5·a/n + 0.3·(t in [10, 100000] ? 1 : 0.5)
+    * + 0.1·(1 − min(1, 10·p/n)) + (n/t in [2, 12] ? 0.1 : 0)), 4), with
+    * each ratio 0 over a zero count; a null text scores 0.0. One native
+    * byte pass per row ([[graft.functions.TextKernels.qualityScore]]). */
+  def qualityScore(text: Column): Column =
+    graft.functions.GraftFunctions.quality_score(text)
 
   /** Word n-gram shingles, in position order. Built with the same
     * chained zip_with-over-shifted-slices discipline as
@@ -1226,6 +1219,21 @@ object TextOps {
       .select(col("rk").cast("long").as("rk"), col("ngram"),
         col("cnt").cast("long").as("cnt"))
 
+  private val email = graft.functions.TextKernels.EmailRegex
+  private val phone = graft.functions.TextKernels.PhoneRegex
+  private val card  = graft.functions.TextKernels.CardRegex
+  private val nMatches = (c: Column, pat: String) =>
+    size(regexp_extract_all(c, lit(pat), lit(0))).cast("long")
+
+  /** Total PII matches in `text` under [[scrubPii]]'s patterns and
+    * double-claim rule (cards counted on the raw text, phones on the
+    * card-masked text, e-mails on the raw) — the per-document alarm
+    * metric of the streaming ingest gate. Null for a null text. One
+    * native pass per row over the three precompiled patterns
+    * ([[graft.functions.TextKernels.piiCount]]). */
+  def piiCount(text: Column): Column =
+    graft.functions.GraftFunctions.pii_count(text)
+
   /** PII scrubbing for training corpora: masks e-mail addresses,
     * NNN-NNN-NNNN / NNN.NNN.NNNN phone numbers and 13-16-digit card
     * numbers with typed placeholder tokens, and reports per-document
@@ -1238,21 +1246,6 @@ object TextOps {
     *
     * Scale shape: a pure projection — three codegen'd regexp_replace /
     * regexp_extract_all chains, no shuffle, streams through the scan. */
-  private val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-  private val phone = "\\b[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}\\b"
-  private val card  = "\\b[0-9]{13,16}\\b"
-  private val nMatches = (c: Column, pat: String) =>
-    size(regexp_extract_all(c, lit(pat), lit(0))).cast("long")
-
-  /** Total PII matches in `text` under [[scrubPii]]'s patterns and
-    * double-claim rule (cards counted on the raw text, phones on the
-    * card-masked text, e-mails on the raw) — the per-document alarm
-    * metric of the streaming ingest gate. */
-  def piiCount(text: Column): Column =
-    nMatches(text, email) +
-      nMatches(regexp_replace(text, card, "<CARD>"), phone) +
-      nMatches(text, card)
-
   def scrubPii(docs: DataFrame, idCol: String = "doc_id",
                textCol: String = "text"): DataFrame = {
     val t = col(textCol)
@@ -1946,22 +1939,23 @@ object TextOps {
                 buckets: Int = 4096, salt: String = "dsir",
                 idCol: String = "doc_id",
                 textCol: String = "text"): DataFrame =
-    withDsirScore(docs, Seq(idCol), profile, n, buckets, salt, textCol)
+    // the kernel's struct is a Project of its own, so its two fields
+    // read one evaluation
+    docs.select(col(idCol),
+        dsirSum(col(textCol), profile, n, buckets, salt).as("__dsir"))
+      .select(col(idCol) +: dsirScoreColumns(col("__dsir")): _*)
 
-  /** `frame`'s `keep` columns plus [[dsirScore]]'s (n_grams, log_weight)
-    * over its `textCol`. The kernel's struct is a Project of its own, so
-    * its two fields read one evaluation. */
-  private[graft] def withDsirScore(frame: DataFrame, keep: Seq[String],
-                                   profile: DataFrame, n: Int,
-                                   buckets: Int, salt: String,
-                                   textCol: String): DataFrame = {
-    val k = keep.map(col)
-    frame.select(k :+ graft.functions.GraftFunctions.dsir_sum(col(textCol),
-        n, salt, dsirTerms(profile, buckets)).as("__dsir"): _*)
-      .select(k :+
-        coalesce(col("__dsir.n_grams"), lit(0L)).as("n_grams") :+
-        round(col("__dsir.sum").cast("double"), 6).as("log_weight"): _*)
-  }
+  /** The `dsir_sum` struct of `text`'s grams against `profile`'s frozen
+    * terms; [[dsirScoreColumns]] reads it. */
+  private[graft] def dsirSum(text: Column, profile: DataFrame, n: Int,
+                             buckets: Int, salt: String): Column =
+    graft.functions.GraftFunctions.dsir_sum(text, n, salt,
+      dsirTerms(profile, buckets))
+
+  /** [[dsirScore]]'s (n_grams, log_weight) from a [[dsirSum]] struct. */
+  private[graft] def dsirScoreColumns(dsir: Column): Seq[Column] = Seq(
+    coalesce(dsir("n_grams"), lit(0L)).as("n_grams"),
+    round(dsir("sum").cast("double"), 6).as("log_weight"))
 
   /** A [[dsirProfile]] as its per-bucket terms: element b is bucket b's
     * ln(p_target / p_raw) cast to decimal(27,12), as an unscaled long.

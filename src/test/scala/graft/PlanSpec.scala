@@ -357,17 +357,24 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  /** The documents and the two checkpointed ingest statics over them. */
+  private lazy val screenInputs = {
+    import org.apache.spark.sql.functions.col
+    import graft.ops.{Dedup, TextOps}
+    val docs = graft.etl.Tables.documents(spark, d)
+    (docs,
+      Dedup.nearDupIndex(docs.select(col("doc_id"), col("text")))
+        .localCheckpoint(),
+      TextOps.dsirProfile(docs, docs.filter(col("lang") === "en"))
+        .localCheckpoint())
+  }
+
   test("ingestScreen against checkpointed statics: after the first call a " +
       "microbatch is ONE job with no Exchange, and minhash_sig runs once " +
       "per row") {
     import org.apache.spark.sql.functions.col
-    import graft.ops.{Dedup, TextOps}
     import graft.streaming.Streams
-    val docs = graft.etl.Tables.documents(spark, d)
-    val idx = Dedup.nearDupIndex(docs.select(col("doc_id"), col("text")))
-      .localCheckpoint()
-    val prof = TextOps.dsirProfile(docs, docs.filter(col("lang") === "en"))
-      .localCheckpoint()
+    val (docs, idx, prof) = screenInputs
     def batch(lo: Long) =
       docs.filter(col("doc_id") >= lo && col("doc_id") < lo + 20)
     // the first call freezes both statics
@@ -398,6 +405,33 @@ class PlanSpec extends SparkSpec {
       sc.setLocalProperty(tag, null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("ingestScreen's microbatch plan is two native Projects: no regex " +
+      "or split, quality_score and pii_count once each") {
+    import org.apache.spark.sql.functions.col
+    val (docs, idx, prof) = screenInputs
+    val screened = graft.streaming.Streams.ingestScreen(
+      docs.filter(col("doc_id") < 20), idx, prof)
+    val plan = screened.queryExecution.executedPlan
+    val p = plan.toString
+    assert(!p.contains("regexp_") && !p.contains("split("), p.take(2500))
+    for (k <- Seq("quality_score", "pii_count"))
+      assert(s"$k\\(".r.findAllIn(p).size === 1, p.take(2500))
+    val projects = plan.collect {
+      case x: org.apache.spark.sql.execution.ProjectExec => x }
+    assert(projects.size <= 2, p.take(2500))
+    assert(screened.collect().length === 20)
+  }
+
+  test("Tables.table memoizes per session: a call from another session " +
+      "keeps this session's resolved relation") {
+    val a = graft.etl.Tables.table(spark, d, "orders")
+    val other = spark.newSession()
+    val b = graft.etl.Tables.table(other, d, "orders")
+    assert(!(b eq a) && (b.sparkSession eq other))
+    assert(graft.etl.Tables.table(spark, d, "orders") eq a)
+    assert(graft.etl.Tables.table(other, d, "orders") eq b)
   }
 
   test("t101: the CMS grid aggregates with a map-side partial and the " +

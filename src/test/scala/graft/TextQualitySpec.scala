@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.MisraGries
+import org.apache.spark.sql.Column
+import graft.functions.{GraftFunctions, MisraGries, TextKernels}
 import graft.ops.TextOps
 
 /** Specs for the training-mix quality ops: repetition screens, per-group
@@ -974,5 +975,94 @@ class TextQualitySpec extends SparkSpec {
     val err = intercept[IllegalArgumentException](
       TextOps.dsirScore(docs, prof, buckets = 4096))
     assert(err.getMessage.contains("dsirScore"))
+  }
+
+  /** The Spark chain [[TextOps.qualityScore]] replaced: three regex
+    * passes and a split per row. */
+  private def qualityScoreReference(text: Column): Column = {
+    val nChars = length(text).cast("double")
+    val nAlpha = length(regexp_replace(text, "[^A-Za-z ]", "")).cast("double")
+    val nPunct = length(regexp_replace(text, "[^.,;:!?]", "")).cast("double")
+    val nTok   = TextOps.tokenCount(text).cast("double")
+    val alphaRatio = when(nChars === 0, 0.0).otherwise(nAlpha / nChars)
+    val punctRatio = when(nChars === 0, 0.0).otherwise(nPunct / nChars)
+    val meanWordLen = when(nTok === 0, 0.0).otherwise(nChars / nTok)
+    val lengthOk = when(nTok.between(10, 100000), 1.0).otherwise(0.5)
+    round(least(lit(1.0), greatest(lit(0.0),
+      alphaRatio * 0.5 + lengthOk * 0.3 +
+        (lit(1.0) - least(lit(1.0), punctRatio * 10)) * 0.1 +
+        when(meanWordLen.between(2, 12), 0.1).otherwise(0.0))), 4)
+  }
+
+  /** The Spark chain [[TextOps.piiCount]] replaced: four regex passes. */
+  private def piiCountReference(text: Column): Column = {
+    def nMatches(c: Column, pat: String) =
+      size(regexp_extract_all(c, lit(pat), lit(0))).cast("long")
+    nMatches(text, TextKernels.EmailRegex) +
+      nMatches(regexp_replace(text, TextKernels.CardRegex, "<CARD>"),
+        TextKernels.PhoneRegex) +
+      nMatches(text, TextKernels.CardRegex)
+  }
+
+  test("quality_score, pii_count and ws_parts == the Spark chains they " +
+      "replaced, interpreted and codegen'd, over the sf0.01 documents and " +
+      "edge texts") {
+    val corpus = graft.etl.Tables.documents(spark, "/root/testdata/sf0.01")
+      .select(col("text")).collect().map(_.getString(0)).toSeq
+    // 100k tokens is the top of the length band, 100k + 1 is past it
+    val Seq(t100k, t100k1) = Seq(100000, 100001).map(Seq.fill(_)("w")
+      .mkString(" "))
+    val edges = Seq[String](
+      null, "", "   ", "\tleading tab survives trim", "  \t padded \t  ",
+      "trailing tab\t", "a\u000Bb\fc\r\nd", "word",
+      "a bb", "abcdefghijk abcdefghijkl",  // mean word length 2 and 12
+      "héllo wörld ✓ naïve café 日本語のテキスト",
+      "surrogates 😀😀 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 and 🇺🇳 flags",
+      // 13-16 digit runs next to phone shapes: masked cards cannot
+      // half-claim a phone, 17 digits is no card
+      "4111111111111111 555-123-4567 4111111111111111555-123-4567",
+      "1234567890123 555.123.4567 12345678901234567 555-1234567",
+      "card4111111111111111 555-123-45678 (555)-123-4567 555-123-4567.",
+      // adjacent and chained e-mails
+      "a@b.co c@d.org,e@f.net x@y.comz@w.io first.last+tag@sub.example.com",
+      "Hello, world! How are you? Fine; thanks: ok... !!! ???",
+      t100k, t100k1)
+    val df = (corpus ++ edges).map(Tuple1(_)).toDF("text")
+    val text = col("text")
+    // a projection over local rows is folded into the local relation at
+    // planning (interpreted); above an exchange it runs in generated code
+    for ((frame, shape) <- Seq(df -> "LocalTableScan",
+        df.repartition(2) -> "*(1) Project")) {
+      val out = frame.select(text,
+        GraftFunctions.quality_score(text), qualityScoreReference(text),
+        GraftFunctions.pii_count(text), piiCountReference(text),
+        GraftFunctions.ws_parts(text), size(split(trim(text), "\\s+")),
+        size(split(lower(trim(text)), "\\s+")))
+      for ((k, c) <- Seq(1 -> 2, 3 -> 4, 5 -> 6))
+        assert(out.schema(k).copy(name = "") === out.schema(c)
+          .copy(name = ""), s"$shape: ${out.schema(k)} vs ${out.schema(c)}")
+      val rows = out.collect()
+      assert(rows.length === corpus.size + edges.size)
+      assert(out.queryExecution.executedPlan.toString.contains(shape))
+      rows.foreach { r =>
+        val t = Option(r.getString(0)).map(_.take(60)).orNull
+        assert(r.getDouble(1) == r.getDouble(2),
+          s"$shape quality_score($t): ${r.get(1)} != chain ${r.get(2)}")
+        assert(r.get(3) == r.get(4),
+          s"$shape pii_count($t): ${r.get(3)} != chain ${r.get(4)}")
+        assert(r.get(5) == r.get(6) && r.get(5) == r.get(7),
+          s"$shape ws_parts($t): ${r.get(5)} != chain ${r.get(6)}")
+      }
+      val byText = rows.filter(_.getString(0) != null)
+        .map(r => r.getString(0) -> r).toMap
+      assert(rows.filter(_.isNullAt(0)).forall(r =>
+        r.getDouble(1) == 0.0 && r.isNullAt(3) && r.isNullAt(5)))
+      assert(byText("").getDouble(1) == 0.25 && byText("").getInt(5) == 1)
+      assert(byText("\tleading tab survives trim").getInt(5) == 5)
+      // one card and one phone: 17 digits and 555-1234567 are neither
+      assert(byText(edges(13)).getLong(3) == 2L)
+      assert(byText(t100k).getDouble(1) == 0.9 &&
+        byText(t100k1).getDouble(1) == 0.75)
+    }
   }
 }
