@@ -25,9 +25,8 @@ import org.apache.spark.sql.functions._
   *     passes are skipped — a 10-50x-degraded host yields one honest
   *     pass instead of a dead process;
   *   - pass-START health gate: a pass whose start kernel breaches
-  *     SPARK_GRAFT_BENCH_MAX_START_FACTOR (default 2.0) waits
-  *     SPARK_GRAFT_BENCH_GATE_WAIT s (default 60) and re-measures, up
-  *     to SPARK_GRAFT_BENCH_GATE_TRIES times (default 5); if the gate
+  *     MaxStartFactor (2.0) waits GateWaitSec (60 s) and re-measures,
+  *     up to SPARK_GRAFT_BENCH_GATE_TRIES times (default 5); if the gate
   *     exhausts, the pass runs anyway and its line (and, when EVERY
   *     pass exhausted, the total/compact record) carries
   *     degraded_start=true so trend tooling can refuse the record;
@@ -39,7 +38,7 @@ import org.apache.spark.sql.functions._
   *     from). Keys whose every observation ran between degraded kernels
   *     are re-measured after the rep loop — health-gated,
   *     budget-bounded (SPARK_GRAFT_BENCH_SALVAGE tries, default 2;
-  *     SPARK_GRAFT_BENCH_SALVAGE_BUDGET wall seconds, default 420) —
+  *     SalvageBudgetSec, 420 wall seconds) —
   *     under fresh bracket kernels ("salvage" JSON lines). The total
   *     line reports all_keys_clean / unclean_keys / per-key
   *     query_factors (pass-of-origin bracket-min normalization), so
@@ -113,6 +112,201 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Start-gate threshold: a calibration kernel above it, or a failed
+    * one (-1), marks its pass or bracket degraded. tools/bench_trend.py
+    * re-derives degraded_start for pre-flag records with the same 2.0. */
+  val MaxStartFactor = 2.0
+  /** Seconds the start gate waits before re-measuring a degraded host. */
+  val GateWaitSec = 60.0
+  /** Wall seconds all contention-salvage attempts may spend together. */
+  val SalvageBudgetSec = 420.0
+  /** The key families in record order; each label is the JSON field its
+    * timings report under, and only the first sums into `value`. */
+  val Families = Seq("queries", "scale_queries", "streaming_queries")
+
+  private def degraded(f: Double): Boolean = f < 0 || f > MaxStartFactor
+
+  /** One family's timings within one pass, with the calibration kernels
+    * measured just before (`left`) and just after (`right`) it. */
+  case class Segment(family: String, times: Seq[(String, Double)],
+                     left: Double, right: Double) {
+    /** Both bracketing kernels measured AND under the health gate:
+      * a measurement inside such a segment cannot have been taken
+      * during a detectable contention window, so a per-key min with
+      * at least one clean-bracketed observation is trustworthy even
+      * when the record's FULL passes were all degraded elsewhere. */
+    def clean: Boolean = left > 0 && right > 0 &&
+      left <= MaxStartFactor && right <= MaxStartFactor
+    /** Normalization factor for the segment: the MIN of the positive
+      * bracketing kernels — bench_trend's streaming lens rule (min, not
+      * nearest, so a transient boundary spike cannot deflate the segment
+      * it brackets) generalized to every family. -1 when both failed. */
+    def factor: Double = Seq(left, right).filter(_ > 0).minOption.getOrElse(-1.0)
+  }
+
+  /** One run over the family segments: a full "pass", the single-pass
+    * "retry" of its -1 keys, or a contention "salvage" attempt; `n`
+    * numbers it within its metric. `streamDetail` holds the per-stream
+    * batch stats of the streams this run timed. */
+  case class Pass(metric: String, n: Int, segments: Seq[Segment],
+                  wall: Double = 0.0, gateWaits: Int = 0,
+                  degradedStart: Boolean = false,
+                  streamDetail: Seq[(String, String)] = Nil) {
+    require(segments.nonEmpty, "a pass has at least one segment")
+    /** start, every boundary, end */
+    def kernels: Seq[Double] = segments.head.left +: segments.map(_.right)
+    def hostFactor: Double = kernels.head
+    def hostFactorEnd: Double = kernels.last
+    def full: Boolean = metric == "pass"
+    /** Mid-pass health: a start-only gate cannot see a collapse
+      * BETWEEN its kernels, so any boundary or end kernel above the
+      * start-gate threshold (or a failed kernel, -1) marks the pass
+      * degraded_mid; trend tooling refuses records with no clean pass
+      * the same way it refuses degraded_start records. */
+    def degradedMid: Boolean = kernels.tail.exists(degraded)
+    def times(family: String): Seq[(String, Double)] =
+      segments.filter(_.family == family).flatMap(_.times)
+  }
+
+  /** A key's min over every observation, the factor of the segment the
+    * min came from and whether any successful observation ran inside a
+    * clean bracket; min -1 when no observation succeeded. */
+  case class Prov(min: Double, factor: Double, clean: Boolean)
+
+  // locale-safe 3-decimal rendering: the f-interpolator goes through
+  // String.format and would emit "1,234" (invalid JSON) on
+  // comma-decimal locales; Double.toString never does
+  private[graft] def r3(x: Double): Double = math.round(x * 1000) / 1000.0
+  private[graft] def jsonMap[V](rs: Seq[(String, V)]): String =
+    rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+  private def sumOk(rs: Seq[(String, Double)]): Double =
+    rs.collect { case (_, v) if v >= 0 => v }.sum
+
+  /** The JSON line of one pass, retry or salvage attempt. */
+  def lineOf(p: Pass, sf: String): String =
+    s"""{"metric":"${p.metric}",""" +
+    s""""${if (p.full) "pass" else "attempt"}":${p.n},""" +
+    s""""value":${sumOk(p.times(Families.head))},""" +
+    s""""unit":"sec","wall":${p.wall},""" +
+    s""""host_factor":${r3(p.hostFactor)},""" +
+    s""""host_factor_end":${r3(p.hostFactorEnd)},""" +
+    s""""host_factor_segments":${p.kernels.map(r3).mkString("[", ",", "]")},""" +
+    s""""gate_waits":${p.gateWaits},""" +
+    s""""degraded_start":${p.degradedStart},""" +
+    s""""degraded_mid":${p.degradedMid},""" +
+    Families.map(f => s""""$f":${jsonMap(p.times(f))},""").mkString +
+    s""""streaming_detail":${jsonMap(p.streamDetail)},"sf":"$sf"}"""
+
+  /** The min-of-N record over every pass, retry and salvage attempt. */
+  case class Record(passes: Seq[Pass]) {
+    /** Per-key min over passes WITH PROVENANCE (round 16): alongside
+      * the min (failed -1 observations ignored; a key that never
+      * succeeded stays -1 and is excluded from the total), each key
+      * carries (a) the bracket-min factor of the segment its min came
+      * from — the per-key pass-of-origin normalization that collapses
+      * the one-record-factor ambiguity BASELINE.md documents (0.42-0.61x
+      * on the r15 anchor) — and (b) a clean bit: some successful
+      * observation ran inside a clean-bracketed segment. Contention
+      * only ever ADDS time, so a clean observation bounds the min from
+      * above and the reported min cannot be contention-inflated. */
+    val prov: Seq[(String, Seq[(String, Prov)])] = Families.map { fam =>
+      fam -> passes.flatMap(_.segments.filter(_.family == fam)).flatMap(s =>
+        s.times.map { case (k, v) => (k, v, s.factor, s.clean) }
+      ).groupBy(_._1).map { case (k, obs) =>
+        val ok = obs.filter(_._2 >= 0)
+        if (ok.isEmpty) k -> Prov(-1.0, -1.0, clean = false)
+        else {
+          val minV = ok.map(_._2).min
+          // among observations achieving the min prefer one from a
+          // clean-bracketed segment, then the smaller factor
+          val w = ok.filter(_._2 == minV).minBy(o => (!o._4, o._3))
+          k -> Prov(minV, w._3, ok.exists(_._4))
+        }
+      }.toSeq.sortBy(_._1)
+    }
+    private val provAll = prov.flatMap(_._2)
+    def mins(family: String): Seq[(String, Double)] =
+      prov.find(_._1 == family).toSeq.flatMap(_._2)
+        .map { case (k, p) => k -> p.min }
+    /** Keys whose reported number has no clean-bracketed backing (a -1
+      * key is its own alarm and is excluded); all_keys_clean makes the
+      * record trend-usable even when no FULL pass was clean end to end. */
+    val uncleanKeys: Seq[String] = provAll.collect {
+      case (k, p) if p.min >= 0 && !p.clean => k }.sorted
+    /** Per-key pass-of-origin normalization factors (bracket-min of the
+      * segment each min came from); consumers fall back to the record
+      * host_factor for keys absent here (factor unmeasurable, -1). */
+    val queryFactors: Seq[(String, Double)] = provAll.collect {
+      case (k, p) if p.min >= 0 && p.factor > 0 => k -> r3(p.factor) }
+    private val fullPasses = passes.filter(_.full)
+    /** The best host_factor among passes that were CLEAN END TO END
+      * (start gate passed, every segment under the gate) — a start
+      * kernel from a pass whose middle collapsed must not normalize the
+      * record (round-15 review finding: the min-start rule picked 1.042
+      * from a pass that hit 2.9 mid-run, loosening the anchor gate
+      * ~1.45x). Fallback order: clean full-pass starts, any full-pass
+      * start, -1 when every calibration failed. Retry and salvage starts
+      * never count: their (usually healthy, post-cooldown) start kernel
+      * must not become the record factor for mins they didn't produce. */
+    val bestFactor: Double = {
+      val clean = fullPasses.filter(p => !p.degradedStart && !p.degradedMid)
+        .map(_.hostFactor).filter(_ >= 0)
+      val ok = fullPasses.map(_.hostFactor).filter(_ >= 0)
+      if (clean.nonEmpty) clean.min else if (ok.nonEmpty) ok.min else -1.0
+    }
+    /** The RECORD is degraded only when every FULL pass began degraded
+      * (the gate exhausted its waits each time) — one clean-start pass
+      * gives the per-query mins a trustworthy pass to draw from. */
+    val degradedStart: Boolean =
+      fullPasses.nonEmpty && fullPasses.forall(_.degradedStart)
+    /** No full pass was clean end to end (start gate passed AND every
+      * boundary/end kernel under the gate). Per-query mins tolerate ONE
+      * degraded pass when a clean pass exists (min takes the lower), so
+      * only the no-clean-pass case poisons the record — the r14
+      * single-pass driver record is the archetype. */
+    val degradedMid: Boolean = fullPasses.nonEmpty &&
+      fullPasses.forall(p => p.degradedStart || p.degradedMid)
+
+    private def head(value: Double): String =
+      s"""{"metric":"total","value":$value,"unit":"sec",""" +
+      s""""reps":${fullPasses.size},"host_factor":${r3(bestFactor)},""" +
+      s""""degraded_start":$degradedStart,""" +
+      s""""degraded_mid":$degradedMid,""" +
+      s""""all_keys_clean":${uncleanKeys.isEmpty},""" +
+      s""""n_unclean":${uncleanKeys.size},"""
+    def totalLine(sf: String): String =
+      head(sumOk(mins(Families.head))) +
+      s""""unclean_keys":${uncleanKeys
+        .map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+      s""""query_factors":${jsonMap(queryFactors)},""" +
+      Families.map(f => s""""$f":${jsonMap(mins(f))},""").mkString +
+      s""""sf":"$sf"}"""
+    /** FINAL stdout line: a compact min-of-N record that fits the
+      * driver's fixed-size stdout tail (round-8 post-mortem: the full
+      * total line is ~5 KB of per-query entries, the driver keeps the
+      * last ~2 KB, so BENCH_r*.json recorded "parsed": null every round
+      * and the official record needed bench_summary_*.json to be
+      * readable). Same totals, family sums, failure count and the top
+      * few most expensive queries; full per-query detail stays in the
+      * total line and in the summary file `detail` names. n_failed
+      * counts across ALL families, so n_total does too — a consumer
+      * computing a failure rate divides matching populations (n_queries
+      * stays the gated count, the denominator of "value"). */
+    def compactLine(sf: String, detail: String): String = {
+      val gated = mins(Families.head)
+      val all = Families.flatMap(mins)
+      val top = gated.filter(_._2 >= 0).sortBy(-_._2).take(8)
+        .map { case (k, v) => k -> r3(v) }
+      head(r3(sumOk(gated))) +
+      s""""n_queries":${gated.size},"n_total":${all.size},""" +
+      s""""n_failed":${all.count(_._2 < 0)},""" +
+      s""""scale_total":${r3(sumOk(mins(Families(1))))},""" +
+      s""""streaming_total":${r3(sumOk(mins(Families(2))))},""" +
+      s""""top_queries":${jsonMap(top)},""" +
+      s""""detail":"$detail","sf":"$sf"}"""
+    }
+  }
+
   /** Extra CLI args are a dev-only name filter (same convention as
     * Verify): run only the named main/scale/streaming entries. Empty =
     * everything. The official driver run passes no args. */
@@ -128,10 +322,6 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "720").toDouble
     // pass-START health gate: the budget downshift refuses to CONTINUE
     // on a degraded host, this refuses to START recording into one
-    val maxStartFactor =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_START_FACTOR", "2.0").toDouble
-    val gateWaitSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_GATE_WAIT", "60").toDouble
     val gateTries =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_GATE_TRIES", "5").toInt.max(0)
     // clear any stale last-line handoff: a previous run killed between
@@ -285,19 +475,8 @@ object Bench {
             runStreamQuery(name, start(streamSpark, sfDir))
           })
       }
-    def streamDetailJson(only: String => Boolean = _ => true): String =
-      streamDetail.toSeq.filter(p => only(p._1)).sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-
-    // locale-safe 3-decimal rendering: the f-interpolator goes through
-    // String.format and would emit "1,234" (invalid JSON) on
-    // comma-decimal locales; Double.toString never does
-    def r3(x: Double): Double = math.round(x * 1000) / 1000.0
-    def jsonMap(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def sumOk(rs: Seq[(String, Double)]): Double =
-      rs.collect { case (_, v) if v >= 0 => v }.sum
+    def streamDetailOf(ran: Set[String]): Seq[(String, String)] =
+      streamDetail.toSeq.filter(p => ran(p._1)).sortBy(_._1)
 
     // Persisted bench record (round-6 verdict: BENCH_rN.json's truncated
     // tail drops pass-1 lines and per-query numbers; they must survive
@@ -328,57 +507,6 @@ object Bench {
           System.err.println(s"[bench] summary write failed: ${e.getMessage}")
       }
 
-    case class Pass(main: Seq[(String, Double)], scale: Seq[(String, Double)],
-                    streaming: Seq[(String, Double)], hostFactor: Double,
-                    hostFactorEnd: Double, gateWaits: Int = 0,
-                    degradedStart: Boolean = false,
-                    midFactors: Seq[Double] = Nil,
-                    isRetry: Boolean = false) {
-      /** Mid-pass health: a start-only gate cannot see a collapse
-        * BETWEEN its kernels, so any boundary or end segment above the
-        * start-gate threshold (or a failed kernel, -1) marks the pass
-        * degraded_mid; trend tooling refuses records with no clean pass
-        * the same way it refuses degraded_start records. */
-      def degradedMid(maxFactor: Double): Boolean =
-        (midFactors :+ hostFactorEnd).exists(f => f < 0 || f > maxFactor)
-      /** The family's timings (0=gated main, 1=scale, 2=streaming). */
-      def famSeq(fam: Int): Seq[(String, Double)] = fam match {
-        case 0 => main
-        case 1 => scale
-        case _ => streaming
-      }
-      /** The calibration kernels BRACKETING a family's segment within
-        * this pass: main runs between the start and first boundary
-        * kernel, scale between the two boundary kernels, streaming
-        * between the second boundary kernel and the end kernel. A pass
-        * built without boundary kernels (the legacy single-pass -1
-        * rescue) falls back to (start, end). */
-      def brackets(fam: Int): (Double, Double) = fam match {
-        case 0 => (hostFactor, midFactors.lift(0).getOrElse(hostFactorEnd))
-        case 1 => (midFactors.lift(0).getOrElse(hostFactor),
-          midFactors.lift(1).getOrElse(hostFactorEnd))
-        case _ => (midFactors.lift(1).getOrElse(hostFactor), hostFactorEnd)
-      }
-      /** Both bracketing kernels measured AND under the health gate:
-        * a measurement inside such a segment cannot have been taken
-        * during a detectable contention window, so a per-key min with
-        * at least one clean-bracketed observation is trustworthy even
-        * when the record's FULL passes were all degraded elsewhere. */
-      def cleanBracket(fam: Int, maxFactor: Double): Boolean = {
-        val (l, r) = brackets(fam)
-        l > 0 && r > 0 && l <= maxFactor && r <= maxFactor
-      }
-      /** Normalization factor for this pass's family segment: the MIN
-        * of the positive bracketing kernels — bench_trend's streaming
-        * lens rule (min, not nearest, so a transient boundary spike
-        * cannot deflate the segment it brackets) generalized to every
-        * family. -1 when both kernels failed. */
-      def bracketFactor(fam: Int): Double = {
-        val (l, r) = brackets(fam)
-        val ok = Seq(l, r).filter(_ > 0)
-        if (ok.nonEmpty) ok.min else -1.0
-      }
-    }
     def kernelFactor(): Double = {
       // prompt a collection first: the kernel measures the HOST, not
       // the just-finished family's heap debt — without this the run
@@ -400,7 +528,7 @@ object Bench {
       * longer gate-wait loop (gatedStartFactor). */
     def boundaryKernelFactor(): Double = {
       val f1 = kernelFactor()
-      if (f1 >= 0 && f1 <= maxStartFactor) f1
+      if (f1 >= 0 && f1 <= MaxStartFactor) f1
       else {
         Thread.sleep(5000)
         val f2 = kernelFactor()
@@ -414,13 +542,13 @@ object Bench {
     def gatedStartFactor(): (Double, Int, Boolean) = {
       var f = kernelFactor()
       var waits = 0
-      def degraded = f < 0 || f > maxStartFactor
+      def degraded = f < 0 || f > MaxStartFactor
       while (degraded && waits < gateTries) {
         System.err.println(
           f"[bench] pass-start host_factor $f%.2f breaches the " +
-            f"$maxStartFactor%.1f start gate; waiting ${gateWaitSec}%.0fs " +
+            f"$MaxStartFactor%.1f start gate; waiting ${GateWaitSec}%.0fs " +
             s"(retry ${waits + 1}/$gateTries) for the host to calm down")
-        Thread.sleep((gateWaitSec * 1000).toLong)
+        Thread.sleep((GateWaitSec * 1000).toLong)
         f = kernelFactor()
         waits += 1
       }
@@ -456,30 +584,19 @@ object Bench {
       val ps = timePass(scale)
       val fMid2 = boundaryKernelFactor()
       val pt = timeStreamingPass()
-      val p = Pass(pm, ps, pt, hostFactor, boundaryKernelFactor(), gateWaits,
-        degradedStart, midFactors = Seq(fMid1, fMid2))
-      if (p.degradedMid(maxStartFactor))
+      val fEnd = boundaryKernelFactor()
+      val wall = (System.nanoTime() - w0) / 1e9
+      val p = Pass("pass", pass, Seq(Segment(Families(0), pm, hostFactor, fMid1),
+        Segment(Families(1), ps, fMid1, fMid2),
+        Segment(Families(2), pt, fMid2, fEnd)), wall, gateWaits,
+        degradedStart, streamDetailOf(pt.map(_._1).toSet))
+      if (p.degradedMid)
         System.err.println(
           f"[bench] pass $pass%d mid-pass health breach: segments " +
-            s"${(Seq(p.hostFactor) ++ p.midFactors :+ p.hostFactorEnd)
-              .map(f => f"$f%.2f").mkString("[", ", ", "]")} vs gate " +
-            f"$maxStartFactor%.1f — degraded_mid=true on this pass")
+            s"${p.kernels.map(f => f"$f%.2f").mkString("[", ", ", "]")} vs gate " +
+            f"$MaxStartFactor%.1f — degraded_mid=true on this pass")
       passes :+= p
-      val wall = (System.nanoTime() - w0) / 1e9
-      val passLine =
-        s"""{"metric":"pass","pass":$pass,"value":${sumOk(p.main)},""" +
-        s""""unit":"sec","wall":$wall,""" +
-        s""""host_factor":${r3(p.hostFactor)},""" +
-        s""""host_factor_end":${r3(p.hostFactorEnd)},""" +
-        s""""host_factor_segments":${(Seq(p.hostFactor) ++ p.midFactors :+
-          p.hostFactorEnd).map(r3).mkString("[", ",", "]")},""" +
-        s""""gate_waits":${p.gateWaits},""" +
-        s""""degraded_start":${p.degradedStart},""" +
-        s""""degraded_mid":${p.degradedMid(maxStartFactor)},""" +
-        s""""queries":${jsonMap(p.main)},""" +
-        s""""scale_queries":${jsonMap(p.scale)},""" +
-        s""""streaming_queries":${jsonMap(p.streaming)},""" +
-        s""""streaming_detail":${streamDetailJson()},"sf":"$sfDir"}"""
+      val passLine = lineOf(p, sfDir)
       println(passLine)
       passLines :+= passLine
       writeSummary(None)
@@ -521,55 +638,25 @@ object Bench {
     // without its fill cost — deflated, but a number beats a -1 and the
     // retry line is labeled so the record shows which attempt is which.
     if (passes.size == 1 &&
-        (passes.head.main ++ passes.head.scale ++ passes.head.streaming)
-          .exists(_._2 < 0)) {
-      val p0 = passes.head
-      def failed(rs: Seq[(String, Double)]): Set[String] =
-        rs.collect { case (n, v) if v < 0 => n }.toSet
-      val (fm, fs, ft) = (failed(p0.main), failed(p0.scale),
-        failed(p0.streaming))
+        passes.head.segments.flatMap(_.times).exists(_._2 < 0)) {
+      val failed = passes.head.segments.flatMap(_.times)
+        .collect { case (n, v) if v < 0 => n }.toSet
       System.err.println(s"[bench] single-pass run left -1 entries; " +
-        s"retrying once: ${(fm ++ fs ++ ft).toSeq.sorted.mkString(", ")}")
-      val rp = Pass(timePass(main, fm), timePass(scale, fs),
-        timeStreamingPass(ft), hostFactor = kernelFactor(),
-        hostFactorEnd = -1.0, isRetry = true)
+        s"retrying once: ${failed.toSeq.sorted.mkString(", ")}")
+      val hf = kernelFactor()
+      val rp = Pass("retry", 1, Seq(Segment(Families(0), timePass(main, failed), hf, -1.0),
+        Segment(Families(1), timePass(scale, failed), hf, -1.0),
+        Segment(Families(2), timeStreamingPass(failed), hf, -1.0)))
       passes :+= rp
       val retryLine =
         s"""{"metric":"retry","host_factor":${r3(rp.hostFactor)},""" +
-        s""""queries":${jsonMap(rp.main)},""" +
-        s""""scale_queries":${jsonMap(rp.scale)},""" +
-        s""""streaming_queries":${jsonMap(rp.streaming)},"sf":"$sfDir"}"""
+        s""""queries":${jsonMap(rp.times(Families(0)))},""" +
+        s""""scale_queries":${jsonMap(rp.times(Families(1)))},""" +
+        s""""streaming_queries":${jsonMap(rp.times(Families(2)))},"sf":"$sfDir"}"""
       println(retryLine)
       passLines :+= retryLine
       writeSummary(None)
     }
-
-    // Per-query min over passes WITH PROVENANCE (round 16): alongside
-    // the min (failed -1 observations ignored; a query that never
-    // succeeded stays -1 and is excluded from the total), each key
-    // carries (a) the bracket-min factor of the pass its min came from
-    // — the per-key pass-of-origin normalization that collapses the
-    // one-record-factor ambiguity BASELINE.md documents (0.42-0.61x on
-    // the r15 anchor) — and (b) a clean bit: some successful
-    // observation ran inside a clean-bracketed segment. Contention
-    // only ever ADDS time, so a clean observation bounds the min from
-    // above and the reported min cannot be contention-inflated.
-    def provOver(fam: Int): Seq[(String, (Double, Double, Boolean))] =
-      passes.flatMap(p => p.famSeq(fam).map { case (k, v) =>
-        (k, v, p.bracketFactor(fam), p.cleanBracket(fam, maxStartFactor))
-      }).groupBy(_._1).map { case (k, obs) =>
-        val ok = obs.filter(_._2 >= 0)
-        if (ok.isEmpty) k -> ((-1.0, -1.0, false))
-        else {
-          val minV = ok.map(_._2).min
-          // among observations achieving the min prefer one from a
-          // clean-bracketed segment, then the smaller factor
-          val w = ok.filter(_._2 == minV).minBy(o => (!o._4, o._3))
-          k -> ((minV, w._3, ok.exists(_._4)))
-        }
-      }.toSeq.sortBy(_._1)
-    def uncleanOf(fam: Int): Seq[String] =
-      provOver(fam).collect { case (k, (v, _, false)) if v >= 0 => k }
 
     // ---- contention salvage (round-16 mandate: the driver's official
     // record has been health-degraded three rounds running, leaving
@@ -588,20 +675,17 @@ object Bench {
     // when no FULL pass was clean end to end ("all_keys_clean").
     val salvageTries =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_SALVAGE", "2").toInt.max(0)
-    val salvageBudgetSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_SALVAGE_BUDGET", "420").toDouble
     var salvageWall = 0.0
     var salvageAttempt = 0
     var salvageAbandoned = false
     while (salvageAttempt < salvageTries && !salvageAbandoned &&
-        salvageWall < salvageBudgetSec &&
-        (0 to 2).exists(f => uncleanOf(f).nonEmpty)) {
+        salvageWall < SalvageBudgetSec &&
+        Record(passes).uncleanKeys.nonEmpty) {
       salvageAttempt += 1
-      val (un0, un1, un2) = (uncleanOf(0).toSet, uncleanOf(1).toSet,
-        uncleanOf(2).toSet)
+      val un = Record(passes).uncleanKeys
       System.err.println(s"[bench] salvage $salvageAttempt/$salvageTries: " +
-        s"${un0.size + un1.size + un2.size} keys lack clean-bracket " +
-        s"provenance: ${(un0 ++ un1 ++ un2).toSeq.sorted.mkString(", ")}")
+        s"${un.size} keys lack clean-bracket " +
+        s"provenance: ${un.mkString(", ")}")
       val (f0, waits, stillDeg) = gatedStartFactor()
       if (stillDeg) {
         System.err.println("[bench] salvage abandoned: host still " +
@@ -610,14 +694,14 @@ object Bench {
         salvageAbandoned = true
       } else {
         val w0 = System.nanoTime()
-        val deadline = w0 + ((salvageBudgetSec - salvageWall) * 1e9).toLong
+        val deadline = w0 + ((SalvageBudgetSec - salvageWall) * 1e9).toLong
         def overBudget: Boolean = System.nanoTime() > deadline
         // staging discipline: a selected FILLER re-pays its fill (its
         // memo is cleared — the first-in-pass-order semantics every
         // pass has), while a selected CONSUMER whose filler is absent
         // times against warm staging exactly as it would mid-pass
-        if (un0.contains("seg_staging")) CoreQueries.clearStagingCache()
-        if ((un0 ++ un1).exists(k =>
+        if (un.contains("seg_staging")) CoreQueries.clearStagingCache()
+        if (un.exists(k =>
           k.startsWith("t03") || k.startsWith("t14")))
           DataQueries.clearStagingCache()
         def budgeted(sel: Set[String])(name: String): Boolean =
@@ -627,140 +711,43 @@ object Bench {
               s"exhausted before $name — stays unclean")
             !over
           }
-        val pm = timePass(main, budgeted(un0))
+        val sel = un.toSet
+        val pm = timePass(main, budgeted(sel))
         val fMid1 = boundaryKernelFactor()
-        val ps = timePass(scale, budgeted(un1))
+        val ps = timePass(scale, budgeted(sel))
         val fMid2 = boundaryKernelFactor()
-        val pt = timeStreamingPass(budgeted(un2))
-        val p = Pass(pm, ps, pt, f0, boundaryKernelFactor(), waits,
-          degradedStart = false, midFactors = Seq(fMid1, fMid2),
-          isRetry = true)
+        val pt = timeStreamingPass(budgeted(sel))
+        val fEnd = boundaryKernelFactor()
+        val p = Pass("salvage", salvageAttempt, Seq(Segment(Families(0), pm, f0, fMid1),
+          Segment(Families(1), ps, fMid1, fMid2),
+          Segment(Families(2), pt, fMid2, fEnd)), gateWaits = waits,
+          streamDetail = streamDetailOf(pt.map(_._1).toSet))
         passes :+= p
         salvageWall += (System.nanoTime() - w0) / 1e9
         val salvageLine =
           s"""{"metric":"salvage","attempt":$salvageAttempt,""" +
           s""""host_factor":${r3(p.hostFactor)},""" +
           s""""host_factor_end":${r3(p.hostFactorEnd)},""" +
-          s""""host_factor_segments":${(Seq(p.hostFactor) ++ p.midFactors :+
-            p.hostFactorEnd).map(r3).mkString("[", ",", "]")},""" +
+          s""""host_factor_segments":${p.kernels.map(r3).mkString("[", ",", "]")},""" +
           s""""gate_waits":${p.gateWaits},""" +
-          s""""degraded_mid":${p.degradedMid(maxStartFactor)},""" +
-          s""""queries":${jsonMap(p.main)},""" +
-          s""""scale_queries":${jsonMap(p.scale)},""" +
-          s""""streaming_queries":${jsonMap(p.streaming)},""" +
+          s""""degraded_mid":${p.degradedMid},""" +
+          s""""queries":${jsonMap(p.times(Families(0)))},""" +
+          s""""scale_queries":${jsonMap(p.times(Families(1)))},""" +
+          s""""streaming_queries":${jsonMap(p.times(Families(2)))},""" +
           // only streams this attempt actually ran — a stale entry
           // from the last full pass must not sit next to salvage times
-          s""""streaming_detail":${streamDetailJson(
-            p.streaming.map(_._1).toSet)},"sf":"$sfDir"}"""
+          s""""streaming_detail":${jsonMap(p.streamDetail)},"sf":"$sfDir"}"""
         println(salvageLine)
         passLines :+= salvageLine
         writeSummary(None)
       }
     }
 
-    val provMain = provOver(0)
-    val provScale = provOver(1)
-    val provStream = provOver(2)
-    def minsOf(prov: Seq[(String, (Double, Double, Boolean))])
-        : Seq[(String, Double)] = prov.map { case (k, (v, _, _)) => k -> v }
-    val results = minsOf(provMain)
-    val scaleResults = minsOf(provScale)
-    val streamingResults = minsOf(provStream)
-    val provAll = provMain ++ provScale ++ provStream
-    // keys whose reported number has no clean-bracketed backing (a -1
-    // key is its own alarm and is excluded); all_keys_clean makes the
-    // record trend-usable even when no FULL pass was clean end to end
-    val uncleanKeys = provAll.collect {
-      case (k, (v, _, false)) if v >= 0 => k }.sorted
-    val allKeysClean = uncleanKeys.isEmpty
-    // per-key pass-of-origin normalization factors (bracket-min of the
-    // pass each min came from); consumers fall back to the record
-    // host_factor for keys absent here (factor unmeasurable, -1)
-    val queryFactors = provAll.collect {
-      case (k, (v, f, _)) if v >= 0 && f > 0 => k -> r3(f) }
-    // the total line reports the best host_factor among passes that
-    // were CLEAN END TO END (start gate passed, every segment under
-    // the gate) — a start kernel from a pass whose middle collapsed
-    // must not normalize the record (round-15 review finding: the
-    // min-start rule picked 1.042 from a pass that hit 2.9 mid-run,
-    // loosening the anchor gate ~1.45x). Fallback order: clean-pass
-    // starts, any pass start, -1 when every calibration failed.
-    val fullPasses = passes.filterNot(_.isRetry)
-    val cleanFactors = fullPasses
-      .filter(p => !p.degradedStart && !p.degradedMid(maxStartFactor))
-      .map(_.hostFactor).filter(_ >= 0)
-    // fallback draws from FULL passes only, matching the documented
-    // "clean-pass starts, any FULL pass start, -1" order — a retry
-    // pass's (usually healthy, post-cooldown) start kernel must not
-    // become the record factor for mins it didn't produce (round-15
-    // review finding)
-    val okFactors = fullPasses.map(_.hostFactor).filter(_ >= 0)
-    val bestFactor =
-      if (cleanFactors.nonEmpty) cleanFactors.min
-      else if (okFactors.nonEmpty) okFactors.min
-      else -1.0
-    // the RECORD is degraded only when every FULL pass began degraded
-    // (the gate exhausted its waits each time) — one clean-start pass
-    // gives the per-query mins a trustworthy pass to draw from. The
-    // single-pass -1 retry is excluded from the forall: it re-times a
-    // handful of failed queries, so its (usually healthy) start kernel
-    // must not vouch for a record whose every full pass was degraded.
-    val recordDegraded =
-      fullPasses.nonEmpty && fullPasses.forall(_.degradedStart)
-    // degraded_mid at the record level: no full pass was clean end to
-    // end (start gate passed AND every boundary/end kernel under the
-    // gate). Per-query mins tolerate ONE degraded pass when a clean
-    // pass exists (min takes the lower), so only the no-clean-pass
-    // case poisons the record — the r14 single-pass driver record is
-    // the archetype.
-    val recordDegradedMid = fullPasses.nonEmpty && fullPasses.forall(p =>
-      p.degradedStart || p.degradedMid(maxStartFactor))
-    val totalLine =
-      s"""{"metric":"total","value":${sumOk(results)},"unit":"sec",""" +
-      s""""reps":$pass,""" +
-      s""""host_factor":${r3(bestFactor)},""" +
-      s""""degraded_start":$recordDegraded,""" +
-      s""""degraded_mid":$recordDegradedMid,""" +
-      s""""all_keys_clean":$allKeysClean,""" +
-      s""""n_unclean":${uncleanKeys.size},""" +
-      s""""unclean_keys":${uncleanKeys
-        .map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""query_factors":${jsonMap(queryFactors)},""" +
-      s""""queries":${jsonMap(results)},""" +
-      s""""scale_queries":${jsonMap(scaleResults)},""" +
-      s""""streaming_queries":${jsonMap(streamingResults)},"sf":"$sfDir"}"""
+    val record = Record(passes)
+    val totalLine = record.totalLine(sfDir)
     println(totalLine)
     writeSummary(Some(totalLine))
-    // FINAL stdout line: a compact min-of-N record that fits the
-    // driver's fixed-size stdout tail (round-8 post-mortem: the full
-    // total line is ~5 KB of per-query entries, the driver keeps the
-    // last ~2 KB, so BENCH_r*.json recorded "parsed": null every round
-    // and the official record needed bench_summary_*.json to be
-    // readable). Same totals, family sums, failure count and the top
-    // few most expensive queries; full per-query detail stays in the
-    // total line above and in the summary file it names.
-    def topOf(rs: Seq[(String, Double)], n: Int): Seq[(String, Double)] =
-      rs.filter(_._2 >= 0).sortBy(-_._2).take(n)
-        .map { case (k, v) => k -> r3(v) }
-    // n_failed counts across ALL THREE families, so n_total does too —
-    // a consumer computing a failure rate divides matching populations
-    // (n_queries stays the gated count, the denominator of "value")
-    val compactLine =
-      s"""{"metric":"total","value":${r3(sumOk(results))},"unit":"sec",""" +
-      s""""reps":$pass,"host_factor":${r3(bestFactor)},""" +
-      s""""degraded_start":$recordDegraded,""" +
-      s""""degraded_mid":$recordDegradedMid,""" +
-      s""""all_keys_clean":$allKeysClean,""" +
-      s""""n_unclean":${uncleanKeys.size},""" +
-      s""""n_queries":${results.size},""" +
-      s""""n_total":${results.size + scaleResults.size +
-        streamingResults.size},""" +
-      s""""n_failed":${(results ++ scaleResults ++ streamingResults)
-        .count(_._2 < 0)},""" +
-      s""""scale_total":${r3(sumOk(scaleResults))},""" +
-      s""""streaming_total":${r3(sumOk(streamingResults))},""" +
-      s""""top_queries":${jsonMap(topOf(results, 8))},""" +
-      s""""detail":"$summaryPath","sf":"$sfDir"}"""
+    val compactLine = record.compactLine(sfDir, summaryPath)
     println(compactLine)
     // The driver parses the LAST stdout line of the sbt invocation, but
     // the bench runs in a forked JVM and sbt prints its "[success]
