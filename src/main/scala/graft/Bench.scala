@@ -31,15 +31,16 @@ import org.apache.spark.sql.functions._
   *     pass exhausted, the total/compact record) carries
   *     degraded_start=true so trend tooling can refuse the record;
   *   - single-pass -1 rescue: when only one pass ran and it left -1
-  *     entries, exactly those queries are retried once (a "retry" JSON
-  *     line) before the total line;
+  *     entries, exactly those queries are retried once, under fresh
+  *     bracket kernels like any pass (a "retry" JSON line), before the
+  *     total line;
   *   - contention salvage: each key's min carries PROVENANCE (the
   *     kernels bracketing its family segment in the pass the min came
   *     from). Keys whose every observation ran between degraded kernels
   *     are re-measured after the rep loop — health-gated,
   *     budget-bounded (SPARK_GRAFT_BENCH_SALVAGE tries, default 2;
-  *     SalvageBudgetSec, 420 wall seconds) —
-  *     under fresh bracket kernels ("salvage" JSON lines). The total
+  *     SalvageBudgetSec, 420 wall seconds) — under fresh bracket
+  *     kernels ("salvage" JSON lines). The total
   *     line reports all_keys_clean / unclean_keys / per-key
   *     query_factors (pass-of-origin bracket-min normalization), so
   *     trend tooling can trust a record whose every reported key is
@@ -54,6 +55,12 @@ import org.apache.spark.sql.functions._
   * pays each staging fill exactly once; the Seg fill itself is timed as
   * its own "seg_staging" entry (inside the gated total — the work is
   * real) so q34/q41/q43/q44 time only their incremental cost.
+  *
+  * Every pass, retry and salvage attempt is one run over the same
+  * family-labelled key list (Families: gated, scale, streaming), each
+  * family a Segment bracketed by its own kernels, printed by one line
+  * writer (lineOf); the record math over them is Record, pinned by
+  * BenchSpec.
   *
   * Host-health calibration: every pass times a fixed deterministic
   * in-memory kernel (50M-row hash -> 9973-key agg -> sort, no I/O, no
@@ -141,7 +148,8 @@ object Bench {
       * bracketing kernels — bench_trend's streaming lens rule (min, not
       * nearest, so a transient boundary spike cannot deflate the segment
       * it brackets) generalized to every family. -1 when both failed. */
-    def factor: Double = Seq(left, right).filter(_ > 0).minOption.getOrElse(-1.0)
+    def factor: Double =
+      Seq(left, right).filter(_ > 0).minOption.getOrElse(-1.0)
   }
 
   /** One run over the family segments: a full "pass", the single-pass
@@ -152,7 +160,6 @@ object Bench {
                   wall: Double = 0.0, gateWaits: Int = 0,
                   degradedStart: Boolean = false,
                   streamDetail: Seq[(String, String)] = Nil) {
-    require(segments.nonEmpty, "a pass has at least one segment")
     /** start, every boundary, end */
     def kernels: Seq[Double] = segments.head.left +: segments.map(_.right)
     def hostFactor: Double = kernels.head
@@ -176,8 +183,8 @@ object Bench {
   // locale-safe 3-decimal rendering: the f-interpolator goes through
   // String.format and would emit "1,234" (invalid JSON) on
   // comma-decimal locales; Double.toString never does
-  private[graft] def r3(x: Double): Double = math.round(x * 1000) / 1000.0
-  private[graft] def jsonMap[V](rs: Seq[(String, V)]): String =
+  private def r3(x: Double): Double = math.round(x * 1000) / 1000.0
+  private def jsonMap[V](rs: Seq[(String, V)]): String =
     rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
   private def sumOk(rs: Seq[(String, Double)]): Double =
     rs.collect { case (_, v) if v >= 0 => v }.sum
@@ -190,7 +197,8 @@ object Bench {
     s""""unit":"sec","wall":${p.wall},""" +
     s""""host_factor":${r3(p.hostFactor)},""" +
     s""""host_factor_end":${r3(p.hostFactorEnd)},""" +
-    s""""host_factor_segments":${p.kernels.map(r3).mkString("[", ",", "]")},""" +
+    s""""host_factor_segments":""" +
+    s"""${p.kernels.map(r3).mkString("[", ",", "]")},""" +
     s""""gate_waits":${p.gateWaits},""" +
     s""""degraded_start":${p.degradedStart},""" +
     s""""degraded_mid":${p.degradedMid},""" +
@@ -209,7 +217,7 @@ object Bench {
       * observation ran inside a clean-bracketed segment. Contention
       * only ever ADDS time, so a clean observation bounds the min from
       * above and the reported min cannot be contention-inflated. */
-    val prov: Seq[(String, Seq[(String, Prov)])] = Families.map { fam =>
+    val prov: Map[String, Seq[(String, Prov)]] = Families.map { fam =>
       fam -> passes.flatMap(_.segments.filter(_.family == fam)).flatMap(s =>
         s.times.map { case (k, v) => (k, v, s.factor, s.clean) }
       ).groupBy(_._1).map { case (k, obs) =>
@@ -223,11 +231,10 @@ object Bench {
           k -> Prov(minV, w._3, ok.exists(_._4))
         }
       }.toSeq.sortBy(_._1)
-    }
-    private val provAll = prov.flatMap(_._2)
+    }.toMap
+    private val provAll = Families.flatMap(prov)
     def mins(family: String): Seq[(String, Double)] =
-      prov.find(_._1 == family).toSeq.flatMap(_._2)
-        .map { case (k, p) => k -> p.min }
+      prov(family).map { case (k, p) => k -> p.min }
     /** Keys whose reported number has no clean-bracketed backing (a -1
       * key is its own alarm and is excluded); all_keys_clean makes the
       * record trend-usable even when no FULL pass was clean end to end. */
@@ -330,14 +337,7 @@ object Bench {
     try java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get("target/bench_last_line.json"))
     catch { case _: Throwable => () }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus)
     // Untimed warm-up: JIT/codegen round trip, then the one-time
     // materializations (the q48-q50 CSV/JSON/partitioned exports, the
     // scale keys' frozen statics), each only when a kept key reads it, so
@@ -388,32 +388,13 @@ object Bench {
       } else (System.nanoTime() - t0) / 1e9
     }
 
-    // `only` is re-evaluated just before each key runs (not once up
-    // front) so a stateful predicate — the salvage wall-budget check —
-    // can cut the pass short between keys
-    def timePass(qs: Seq[(String, (SparkSession, String) => DataFrame)],
-        only: String => Boolean = _ => true): Seq[(String, Double)] =
-      qs.flatMap { case (name, fn) =>
-        // noop WRITE, not count() — the hostKernelAction rationale
-        // applied to the queries themselves: under count() Catalyst
-        // prunes unneeded columns and ELIMINATES cardinality-preserving
-        // operators (t54 timed 0.1 s under count(), ~1.6 s for real).
-        // The noop sink computes every output column and row, which is
-        // what a pipeline consumer pays.
-        if (!only(name)) None
-        else Some(name -> timed(name) {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        })
-      }
-
-    val main = (("seg_staging" ->
-      ((s: SparkSession, d: String) => {
-        CoreQueries.warmSegStaging(s, d)
-        s.emptyDataFrame
-      })) +: SparkEntry.queries.toSeq.sortBy(_._1))
-      .filter(p => keep(p._1))
-    val scale = DataQueries.benchOnly.toSeq.sortBy(_._1)
-      .filter(p => keep(p._1))
+    // noop WRITE, not count() — the hostKernelAction rationale applied
+    // to the queries themselves: under count() Catalyst prunes unneeded
+    // columns and ELIMINATES cardinality-preserving operators (t54 timed
+    // 0.1 s under count(), ~1.6 s for real). The noop sink computes every
+    // output column and row, which is what a pipeline consumer pays.
+    def noop(fn: (SparkSession, String) => DataFrame): () => Unit =
+      () => fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 
     // Streaming keys (StreamingQueries.all, reported under
     // "streaming_queries", not the gated total) run on their own session
@@ -466,17 +447,18 @@ object Bench {
         streamDetail(name) = s"""{"batches":${durs.size},""" +
           s""""max_batch_ms":${durs.max},"sum_batch_ms":${durs.sum}}"""
     }
-    def timeStreamingPass(only: String => Boolean = _ => true)
-        : Seq[(String, Double)] =
-      StreamingQueries.all.filter(p => keep(p._1)).flatMap {
-        case (name, start) =>
-          if (!only(name)) None
-          else Some(name -> timed(name) {
-            runStreamQuery(name, start(streamSpark, sfDir))
-          })
-      }
-    def streamDetailOf(ran: Set[String]): Seq[(String, String)] =
-      streamDetail.toSeq.filter(p => ran(p._1)).sortBy(_._1)
+
+    // The kept keys per family, in pass order, each with the action its
+    // timing covers. The Seg staging fill is its own gated key, so
+    // q34/q41/q43/q44 time only their incremental cost.
+    val families: Seq[(String, Seq[(String, () => Unit)])] =
+      Families.zip(Seq(
+        ("seg_staging" -> (() => CoreQueries.warmSegStaging(spark, sfDir))) +:
+          SparkEntry.queries.toSeq.sortBy(_._1).map(e => e._1 -> noop(e._2)),
+        DataQueries.benchOnly.toSeq.sortBy(_._1).map(e => e._1 -> noop(e._2)),
+        StreamingQueries.all.map { case (k, start) =>
+          k -> (() => runStreamQuery(k, start(streamSpark, sfDir))) }
+      ).map(_.filter(e => keep(e._1))))
 
     // Persisted bench record (round-6 verdict: BENCH_rN.json's truncated
     // tail drops pass-1 lines and per-query numbers; they must survive
@@ -495,10 +477,11 @@ object Bench {
       val n = if (rounds.nonEmpty) rounds.max + 1 else 1
       f"bench_summary_r$n%02d.json"
     })
-    var passLines = Vector.empty[String]
+    var passes = Vector.empty[Pass]
     def writeSummary(totalLine: Option[String]): Unit =
       if (summaryPath.nonEmpty) try {
-        val body = "{\"passes\":[" + passLines.mkString(",\n") + "]" +
+        val body = "{\"passes\":[" +
+          passes.map(lineOf(_, sfDir)).mkString(",\n") + "]" +
           totalLine.map(t => ",\n\"total\":" + t).getOrElse("") + "}\n"
         java.nio.file.Files.write(java.nio.file.Paths.get(summaryPath),
           body.getBytes("UTF-8"))
@@ -528,7 +511,7 @@ object Bench {
       * longer gate-wait loop (gatedStartFactor). */
     def boundaryKernelFactor(): Double = {
       val f1 = kernelFactor()
-      if (f1 >= 0 && f1 <= MaxStartFactor) f1
+      if (!degraded(f1)) f1
       else {
         Thread.sleep(5000)
         val f2 = kernelFactor()
@@ -542,8 +525,7 @@ object Bench {
     def gatedStartFactor(): (Double, Int, Boolean) = {
       var f = kernelFactor()
       var waits = 0
-      def degraded = f < 0 || f > MaxStartFactor
-      while (degraded && waits < gateTries) {
+      while (degraded(f) && waits < gateTries) {
         System.err.println(
           f"[bench] pass-start host_factor $f%.2f breaches the " +
             f"$MaxStartFactor%.1f start gate; waiting ${GateWaitSec}%.0fs " +
@@ -552,13 +534,52 @@ object Bench {
         f = kernelFactor()
         waits += 1
       }
-      if (degraded)
+      if (degraded(f))
         System.err.println(
           f"[bench] start gate exhausted after $waits waits at " +
             f"host_factor $f%.2f — recording anyway, degraded_start=true")
-      (f, waits, degraded)
+      (f, waits, degraded(f))
     }
-    var passes = Vector.empty[Pass]
+
+    /** One pass, retry or salvage attempt from an already-measured start
+      * kernel (factor, gate waits, still degraded): times the selected
+      * keys family by family, each family bracketed by the kernel before
+      * it and a boundary kernel after it (~0.7 s on a healthy host), so a
+      * start-healthy host that collapses mid-run shows at the nearest
+      * boundary; its line is printed and persisted at once. `select` is
+      * re-evaluated just before each key runs (not once up front) so a
+      * stateful predicate — the salvage wall-budget check — can cut the
+      * run short between keys. The wall clock starts AFTER the start
+      * gate: its bounded sleeps are idling, not pass work, and must not
+      * trip the budget downshift. */
+    def runSegments(metric: String, n: Int, start: (Double, Int, Boolean),
+        select: String => Boolean): Pass = {
+      val w0 = System.nanoTime()
+      var left = start._1
+      val segs = families.map { case (fam, keys) =>
+        val times = keys.collect { case (k, act) if select(k) =>
+          k -> timed(k)(act()) }
+        val seg = Segment(fam, times, left, boundaryKernelFactor())
+        left = seg.right
+        seg
+      }
+      val ran = segs.flatMap(_.times.map(_._1)).toSet
+      // only streams this run actually timed — a stale entry from an
+      // earlier pass must not sit next to retry or salvage times
+      val p = Pass(metric, n, segs, (System.nanoTime() - w0) / 1e9,
+        start._2, start._3,
+        streamDetail.toSeq.filter(e => ran(e._1)).sortBy(_._1))
+      if (p.degradedMid)
+        System.err.println(
+          f"[bench] $metric $n%d mid-pass health breach: segments " +
+            s"${p.kernels.map(f => f"$f%.2f").mkString("[", ", ", "]")} " +
+            f"vs gate $MaxStartFactor%.1f — degraded_mid=true on this line")
+      passes :+= p
+      println(lineOf(p, sfDir))
+      writeSummary(None)
+      p
+    }
+
     var pass = 0
     var continue = true
     def runPass(): Double = {
@@ -566,10 +587,7 @@ object Bench {
       // the calibration kernels run under the same watchdog/cap as the
       // queries — on a wedged host a hang or throw records factor=-1
       // instead of killing the whole pass before any line is emitted
-      val (hostFactor, gateWaits, degradedStart) = gatedStartFactor()
-      // the wall clock starts AFTER the start gate: its bounded sleeps
-      // are idling, not pass work, and must not trip the budget downshift
-      val w0 = System.nanoTime()
+      val start = gatedStartFactor()
       // cold staging per pass: drop the t03/t14 verified-pairs checkpoint
       // AND every persisted frame (segStaging etc.), so each pass pays
       // each staging fill exactly once — the same work profile as the
@@ -577,30 +595,7 @@ object Bench {
       DataQueries.clearStagingCache()
       CoreQueries.clearStagingCache()
       spark.catalog.clearCache()
-      val pm = timePass(main)
-      // family-boundary kernels (~0.7 s each on a healthy host) catch a
-      // start-healthy host that collapses mid-pass at the nearest boundary
-      val fMid1 = boundaryKernelFactor()
-      val ps = timePass(scale)
-      val fMid2 = boundaryKernelFactor()
-      val pt = timeStreamingPass()
-      val fEnd = boundaryKernelFactor()
-      val wall = (System.nanoTime() - w0) / 1e9
-      val p = Pass("pass", pass, Seq(Segment(Families(0), pm, hostFactor, fMid1),
-        Segment(Families(1), ps, fMid1, fMid2),
-        Segment(Families(2), pt, fMid2, fEnd)), wall, gateWaits,
-        degradedStart, streamDetailOf(pt.map(_._1).toSet))
-      if (p.degradedMid)
-        System.err.println(
-          f"[bench] pass $pass%d mid-pass health breach: segments " +
-            s"${p.kernels.map(f => f"$f%.2f").mkString("[", ", ", "]")} vs gate " +
-            f"$MaxStartFactor%.1f — degraded_mid=true on this pass")
-      passes :+= p
-      val passLine = lineOf(p, sfDir)
-      println(passLine)
-      passLines :+= passLine
-      writeSummary(None)
-      wall
+      runSegments("pass", pass, start, _ => true).wall
     }
     var lastWall = 0.0
     while (continue && pass < reps) {
@@ -630,32 +625,22 @@ object Bench {
     }
 
     // -1 rescue for single-pass records: if only one pass ran and it
-    // left -1 entries, retry exactly those queries once; the min then
-    // folds a successful retry in, and a query that fails twice stays -1.
-    // Staging memos are NOT cleared: a retried staging CONSUMER runs
-    // against the warm staging it would have had mid-pass (comparable
-    // timing); a retried staging FILLER (t03/t14, seg_staging) re-times
-    // without its fill cost — deflated, but a number beats a -1 and the
-    // retry line is labeled so the record shows which attempt is which.
-    if (passes.size == 1 &&
-        passes.head.segments.flatMap(_.times).exists(_._2 < 0)) {
-      val failed = passes.head.segments.flatMap(_.times)
-        .collect { case (n, v) if v < 0 => n }.toSet
+    // left -1 entries, retry exactly those keys once, under boundary
+    // kernels like any pass (so a retried key can be clean-backed); the
+    // min then folds a successful retry in, and a key that fails twice
+    // stays -1. Staging memos are NOT cleared: a retried staging
+    // CONSUMER runs against the warm staging it would have had mid-pass
+    // (comparable timing); a retried staging FILLER (t03/t14,
+    // seg_staging) re-times without its fill cost — deflated, but a
+    // number beats a -1 and the retry line is labeled so the record
+    // shows which attempt is which.
+    val failed = passes.flatMap(_.segments.flatMap(_.times))
+      .collect { case (k, v) if v < 0 => k }.toSet
+    if (passes.size == 1 && failed.nonEmpty) {
       System.err.println(s"[bench] single-pass run left -1 entries; " +
         s"retrying once: ${failed.toSeq.sorted.mkString(", ")}")
-      val hf = kernelFactor()
-      val rp = Pass("retry", 1, Seq(Segment(Families(0), timePass(main, failed), hf, -1.0),
-        Segment(Families(1), timePass(scale, failed), hf, -1.0),
-        Segment(Families(2), timeStreamingPass(failed), hf, -1.0)))
-      passes :+= rp
-      val retryLine =
-        s"""{"metric":"retry","host_factor":${r3(rp.hostFactor)},""" +
-        s""""queries":${jsonMap(rp.times(Families(0)))},""" +
-        s""""scale_queries":${jsonMap(rp.times(Families(1)))},""" +
-        s""""streaming_queries":${jsonMap(rp.times(Families(2)))},"sf":"$sfDir"}"""
-      println(retryLine)
-      passLines :+= retryLine
-      writeSummary(None)
+      val f = kernelFactor()
+      runSegments("retry", 1, (f, 0, degraded(f)), failed)
     }
 
     // ---- contention salvage (round-16 mandate: the driver's official
@@ -684,62 +669,33 @@ object Bench {
       salvageAttempt += 1
       val un = Record(passes).uncleanKeys
       System.err.println(s"[bench] salvage $salvageAttempt/$salvageTries: " +
-        s"${un.size} keys lack clean-bracket " +
-        s"provenance: ${un.mkString(", ")}")
-      val (f0, waits, stillDeg) = gatedStartFactor()
-      if (stillDeg) {
+        s"${un.size} keys lack clean-bracket provenance: " +
+        un.mkString(", "))
+      val start = gatedStartFactor()
+      if (start._3) {
         System.err.println("[bench] salvage abandoned: host still " +
-          f"degraded (factor $f0%.2f) after the gate's waits — unclean " +
-          "keys stay flagged")
+          f"degraded (factor ${start._1}%.2f) after the gate's waits — " +
+          "unclean keys stay flagged")
         salvageAbandoned = true
       } else {
-        val w0 = System.nanoTime()
-        val deadline = w0 + ((SalvageBudgetSec - salvageWall) * 1e9).toLong
-        def overBudget: Boolean = System.nanoTime() > deadline
+        val deadline = System.nanoTime() +
+          ((SalvageBudgetSec - salvageWall) * 1e9).toLong
         // staging discipline: a selected FILLER re-pays its fill (its
         // memo is cleared — the first-in-pass-order semantics every
         // pass has), while a selected CONSUMER whose filler is absent
         // times against warm staging exactly as it would mid-pass
         if (un.contains("seg_staging")) CoreQueries.clearStagingCache()
-        if (un.exists(k =>
-          k.startsWith("t03") || k.startsWith("t14")))
+        if (un.exists(k => k.startsWith("t03") || k.startsWith("t14")))
           DataQueries.clearStagingCache()
-        def budgeted(sel: Set[String])(name: String): Boolean =
-          sel(name) && {
-            val over = overBudget
+        def budgeted(name: String): Boolean =
+          un.contains(name) && {
+            val over = System.nanoTime() > deadline
             if (over) System.err.println(s"[bench] salvage budget " +
               s"exhausted before $name — stays unclean")
             !over
           }
-        val sel = un.toSet
-        val pm = timePass(main, budgeted(sel))
-        val fMid1 = boundaryKernelFactor()
-        val ps = timePass(scale, budgeted(sel))
-        val fMid2 = boundaryKernelFactor()
-        val pt = timeStreamingPass(budgeted(sel))
-        val fEnd = boundaryKernelFactor()
-        val p = Pass("salvage", salvageAttempt, Seq(Segment(Families(0), pm, f0, fMid1),
-          Segment(Families(1), ps, fMid1, fMid2),
-          Segment(Families(2), pt, fMid2, fEnd)), gateWaits = waits,
-          streamDetail = streamDetailOf(pt.map(_._1).toSet))
-        passes :+= p
-        salvageWall += (System.nanoTime() - w0) / 1e9
-        val salvageLine =
-          s"""{"metric":"salvage","attempt":$salvageAttempt,""" +
-          s""""host_factor":${r3(p.hostFactor)},""" +
-          s""""host_factor_end":${r3(p.hostFactorEnd)},""" +
-          s""""host_factor_segments":${p.kernels.map(r3).mkString("[", ",", "]")},""" +
-          s""""gate_waits":${p.gateWaits},""" +
-          s""""degraded_mid":${p.degradedMid},""" +
-          s""""queries":${jsonMap(p.times(Families(0)))},""" +
-          s""""scale_queries":${jsonMap(p.times(Families(1)))},""" +
-          s""""streaming_queries":${jsonMap(p.times(Families(2)))},""" +
-          // only streams this attempt actually ran — a stale entry
-          // from the last full pass must not sit next to salvage times
-          s""""streaming_detail":${jsonMap(p.streamDetail)},"sf":"$sfDir"}"""
-        println(salvageLine)
-        passLines :+= salvageLine
-        writeSummary(None)
+        salvageWall +=
+          runSegments("salvage", salvageAttempt, start, budgeted).wall
       }
     }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Physical-plan snapshots: `.explain("formatted")` for every
@@ -46,34 +45,18 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "plans"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus)
     Files.createDirectories(Paths.get(outDir))
     var failed = 0
     // args(2..): optional name filter (accepts bench-only x-keys too) —
-    // the round-16 before/after snapshot path (plans/r16/)
-    val slate: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)] =
-      if (args.length > 2)
-        // resolve lazily: an unknown/typo'd name must report a per-name
-        // FAIL below, not crash the whole dump with a bare
-        // NoSuchElementException (round-16 ADVICE)
-        args.drop(2).toSeq.map(n => n ->
-          SparkEntry.queries.get(n)
-            .orElse(DataQueries.benchOnly.get(n))
-            .getOrElse((_: org.apache.spark.sql.SparkSession,
-                _: String) => sys.error(s"unknown key '$n' (not in " +
-              "SparkEntry.queries or DataQueries.benchOnly)")))
-      else SparkEntry.queries.toSeq.sortBy(_._1)
-    for ((name, build) <- slate) {
+    // the round-16 before/after snapshot path (plans/r16/); an unknown
+    // key reports a per-name FAIL below instead of ending the dump
+    val names =
+      if (args.length > 2) args.drop(2).toSeq
+      else SparkEntry.queries.keys.toSeq.sorted
+    for (name <- names) {
       try {
-        val df = build(spark, sfDir)
+        val df = SparkEntry.byName(name)(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"))
@@ -86,7 +69,7 @@ object PlanDump {
           println(s"[plans] FAIL $name: ${e.getMessage}")
       }
     }
-    println(s"[plans] done: ${slate.size - failed} written, " +
+    println(s"[plans] done: ${names.size - failed} written, " +
       s"$failed failed")
     spark.stop()
     if (failed > 0) sys.exit(1)

@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke main mirroring the driver's t1 gate: SparkEntry.entry must return
   * rows > 0 on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession("4")
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())

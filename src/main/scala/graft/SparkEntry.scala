@@ -23,4 +23,29 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (LSH/simhash candidate generation, media stubs) → rows-only check. */
   def oracleSql: Map[String, String] = Oracles.all
+
+  /** The gated query or bench-only scale twin named `name`; an unknown
+    * or typo'd key fails naming itself, not with a bare
+    * NoSuchElementException. */
+  def byName(name: String): (SparkSession, String) => DataFrame =
+    queries.get(name).orElse(DataQueries.benchOnly.get(name)).getOrElse(
+      sys.error(s"unknown key '$name' (not in SparkEntry.queries or " +
+        "DataQueries.benchOnly)"))
+
+  /** The one session every main runs on: local[cpus] with as many
+    * shuffle partitions, UTC session time, the nanos-as-long read
+    * events.parquet's TIMESTAMP(NANOS) needs, no UI; `conf` entries
+    * apply last. Logs at WARN. */
+  def localSession(cpus: String,
+      conf: Seq[(String, String)] = Nil): SparkSession = {
+    val spark = conf.foldLeft(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")) { case (b, (k, v)) =>
+      b.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Structural lints that pin three audit results so they cannot
+/** Structural lints that pin four audit results so they cannot
   * regress silently:
   *
   *  1. exactSums invariant (round-15 sweep, round-15 verdict item 2):
@@ -30,6 +30,9 @@ import scala.jdk.CollectionConverters._
   *  3. stream door: every AvailableNow stream is started in
   *     `Streams` or the `StreamingQueries` registry, so the bench
   *     times exactly the wiring StreamingSpec checks.
+  *
+  *  4. session door: every main gets its session from
+  *     `SparkEntry.localSession`, the one `SparkSession.builder()` site.
   */
 class LintSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
@@ -129,6 +132,16 @@ class LintSpec extends SparkSpec {
       s"AvailableNow stream sites moved: found $found, audited $audited " +
         "— start a new stream through a Streams start* entry point (or a " +
         "StreamingQueries entry) and pin the count here")
+  }
+
+  test("session door: every main builds its session through " +
+      "SparkEntry.localSession — one SparkSession.builder() site") {
+    // one builder keeps the confs every main needs in one place (the
+    // nanos-as-long read events.parquet needs, UTC, partitions = cpus)
+    val found = sitesPerFile((raw, _) => raw.contains("SparkSession.builder()"))
+    assert(found == Map("SparkEntry.scala" -> 1),
+      s"SparkSession.builder() sites: found $found — build sessions with " +
+        "SparkEntry.localSession(cpus, conf) instead")
   }
 
   /** Per file under src/main/scala/graft (path relative to it), the

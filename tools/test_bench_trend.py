@@ -160,7 +160,26 @@ def main():
     assert hf == 2.5, f"salvage start must not become the record " \
         f"factor, got {hf}"
 
-    # 11. ANCHOR GATE fails LOUDLY when noop-era rounds exist but every
+    # 11. a retry line in the unified line shape (the same fields as a
+    #     pass line: clean segments, degraded_mid false, its own
+    #     streaming_detail) still never becomes the record factor
+    rec = {"passes": [
+        mkpass(1, 2.5, 2.6, segs=[2.5, 2.6, 2.6, 2.6], deg_mid=True),
+        {"metric": "retry", "attempt": 1, "value": 0.5, "unit": "sec",
+         "wall": 3.0, "host_factor": 0.9, "host_factor_end": 0.95,
+         "host_factor_segments": [0.9, 0.92, 0.93, 0.95],
+         "gate_waits": 0, "degraded_start": False, "degraded_mid": False,
+         "queries": {"q1": 0.5}, "scale_queries": {},
+         "streaming_queries": {"s1": 2.0},
+         "streaming_detail": {"s1": {"batches": 2, "max_batch_ms": 930.0,
+                                     "sum_batch_ms": 1500.0}}}],
+        "total": total(2.5, deg_mid=True)}
+    hf, _, stream, deg, _ = load_record(write(tmp, "k.json", rec))
+    assert hf == 2.5 and deg, f"unified retry line must not become the " \
+        f"record factor, got {hf} (degraded {deg})"
+    assert abs(batch_mins(stream)["s1"] - 0.93 / 0.93) < 1e-9, stream
+
+    # 12. ANCHOR GATE fails LOUDLY when noop-era rounds exist but every
     #     one was refused as degraded (round-15 ADVICE: the
     #     informational pre-noop skip let this exit 0) — and still
     #     skips informationally when NO noop-era round exists at all
@@ -193,7 +212,7 @@ def main():
     assert rc == 0 and "anchor comparison skipped" in out.getvalue(), \
         (rc, out.getvalue())
 
-    # 12. HISTORICAL pair flags are report-only: a regression between
+    # 13. HISTORICAL pair flags are report-only: a regression between
     #     two old rounds (adjudicated when it was the latest pair) must
     #     not set the exit code; the same regression on the LATEST pair
     #     must. Records are noop-era so the anchor gate runs cleanly
@@ -230,7 +249,7 @@ def main():
     assert rc == 1 and "REGRESSED q1" in out.getvalue(), \
         (rc, out.getvalue())
 
-    print("bench_trend self-test: 12/12 rules hold")
+    print("bench_trend self-test: 13/13 rules hold")
     return 0
 
 
