@@ -32,10 +32,17 @@ object SparkEntry {
       sys.error(s"unknown key '$name' (not in SparkEntry.queries or " +
         "DataQueries.benchOnly)"))
 
+  /** Entries in Spark's generated-class cache (the static
+    * `spark.sql.codegen.cache.maxEntries`, default 100). One Bench pass
+    * at sf0.1 compiles 3748 distinct sources; with 100 entries an evicted
+    * class is compiled again at its next use, 5750 compiles in all. */
+  private final val CodegenCacheEntries = 4096
+
   /** The one session every main runs on: local[cpus] with as many
     * shuffle partitions, UTC session time, the nanos-as-long read
-    * events.parquet's TIMESTAMP(NANOS) needs, no UI; `conf` entries
-    * apply last. Logs at WARN. */
+    * events.parquet's TIMESTAMP(NANOS) needs, no UI, a generated-class
+    * cache of [[CodegenCacheEntries]]; `conf` entries apply last. Logs
+    * at WARN. */
   def localSession(cpus: String,
       conf: Seq[(String, String)] = Nil): SparkSession = {
     val spark = conf.foldLeft(SparkSession.builder()
@@ -43,7 +50,9 @@ object SparkEntry {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")) { case (b, (k, v)) =>
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)) { case (b, (k, v)) =>
       b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -915,11 +915,16 @@ object GraftFunctions {
     column(GramDigestsExpr(expression(c), n, md5Keys))
   def gram_strings(c: Column, n: Int): Column =
     column(GramStringsExpr(expression(c), n))
-  def band_hit(keys: Column, sets: Broadcast[StaticKernels.BandSets]): Column =
-    column(BandHitExpr(expression(keys), sets))
-  def dsir_sum(text: Column, n: Int, salt: String,
-               terms: Broadcast[Array[Long]]): Column =
-    column(DsirSumExpr(expression(text), n, salt, terms))
+  def near_dup_hit(text: Column, sets: Broadcast[StaticKernels.BandSets],
+                   bands: Int, rowsPerBand: Int, shingleSize: Int,
+                   md5Keys: Boolean): Column =
+    column(NearDupHitExpr(expression(text), sets, bands, rowsPerBand,
+      shingleSize, md5Keys))
+  def dsir_grams(text: Column, n: Int): Column =
+    column(DsirGramsExpr(expression(text), n))
+  def dsir_log_weight(text: Column, n: Int, salt: String,
+                      terms: Broadcast[Array[Long]]): Column =
+    column(DsirLogWeightExpr(expression(text), n, salt, terms))
   def ws_parts(text: Column): Column = column(WsPartsExpr(expression(text)))
   def quality_score(text: Column): Column =
     column(QualityScoreExpr(expression(text)))

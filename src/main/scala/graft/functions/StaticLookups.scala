@@ -5,9 +5,9 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -41,42 +41,64 @@ object StaticKernels {
   /** A band index as per-band key sets: element b holds band b's keys. */
   type BandSets = Array[java.util.HashSet[AnyRef]]
 
-  /** [[dsirSum]]'s sum is typed as a SUM over decimal(27,12) terms. */
-  final val DsirSumPrecision = 37
-
-  /** 1 when some band b's key `keys(b)` is in `sets(b)`, else 0. Keys are
-    * longs (`longKeys`) or strings; a band past the sets' width, or a
-    * null key, never hits. */
-  def bandHit(keys: ArrayData, sets: Broadcast[BandSets],
-              longKeys: Boolean): Long = {
+  /** The near-dup gate's lookup flag of `text`: 0 for a null text or one
+    * with fewer than `shingleSize` whitespace parts
+    * ([[TextKernels.wsParts]]); otherwise 1 when, over the MinHash
+    * signature of `bands · rowsPerBand` rows, some band b's key is in
+    * `sets(b)`, else 0. A band past the sets' width never hits. Band b's
+    * key is what the band-key columns the index is built with give its
+    * rows [b·r, (b+1)·r): in the xxhash64 family (`minhash`)
+    * `xxhash64(slice(sig, b·r+1, r), b)`, i.e. seed 42, `hashLong` folded
+    * over the slice, then `hashInt(b)`, boxed; in the md5 family
+    * (`minhashMd5`) the lowercase hex md5 of the slice's decimal strings
+    * joined by ','. */
+  def nearDupHit(text: UTF8String, sets: Broadcast[BandSets], bands: Int,
+                 rowsPerBand: Int, shingleSize: Int,
+                 md5Keys: Boolean): Long = {
+    if (text == null || TextKernels.wsParts(text) < shingleSize) return 0L
     val s = sets.value
-    val m = math.min(keys.numElements(), s.length)
+    val m = math.min(bands, s.length)
+    val sig =
+      if (md5Keys) SketchKernels.minhashMd5(text, bands * rowsPerBand,
+        shingleSize)
+      else SketchKernels.minhash(text, bands * rowsPerBand, shingleSize)
     var b = 0
     while (b < m) {
-      if (!keys.isNullAt(b)) {
-        val k: AnyRef =
-          if (longKeys) java.lang.Long.valueOf(keys.getLong(b))
-          else keys.getUTF8String(b)
-        if (s(b).contains(k)) return 1L
-      }
+      val lo = b * rowsPerBand
+      val key: AnyRef =
+        if (md5Keys) md5BandKey(sig, lo, rowsPerBand)
+        else {
+          var h = 42L
+          var i = lo
+          while (i < lo + rowsPerBand) { h = XXH64.hashLong(sig(i), h); i += 1 }
+          java.lang.Long.valueOf(XXH64.hashInt(b, h))
+        }
+      if (s(b).contains(key)) return 1L
       b += 1
     }
     0L
   }
 
-  /** (n_grams, sum) of a document's word n-grams against per-bucket
+  /** `md5(array_join(transform(slice(sig, lo+1, r), cast string), ","))`
+    * with the hex encoder of Spark's own `md5`. */
+  private def md5BandKey(sig: Array[Long], lo: Int, r: Int): UTF8String =
+    UTF8String.fromString(org.apache.commons.codec.digest.DigestUtils
+      .md5Hex(sig.slice(lo, lo + r).mkString(",")))
+
+  /** DSIR log weight of a document's word n-grams against per-bucket
     * terms: each gram (the [[SketchKernels.gramStrings]] windows) falls in
     * bucket md5_u32(salt || gram) mod terms.length and adds that bucket's
     * term, an unscaled decimal(27,12) long. The sum is exact: a sum past
-    * the signed 64-bit range throws, naming dsirScore. A document without
-    * a gram returns (0, null). */
-  def dsirSum(text: UTF8String, n: Int, salt: Array[Byte],
-              terms: Broadcast[Array[Long]]): InternalRow = {
+    * the signed 64-bit range throws, naming dsirScore. Returns the sum as
+    * a double (the decimal's own conversion) rounded HALF_UP to 6 places,
+    * or null for a document without a gram. */
+  def dsirLogWeight(text: UTF8String, n: Int, salt: Array[Byte],
+                    terms: Broadcast[Array[Long]]): java.lang.Double = {
     val t = terms.value
     val toks = SketchKernels.columnTokens(text)
       .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val m = toks.length - n
-    if (m < 0) return InternalRow(0L, null)
+    if (m < 0) return null
     val md = SketchKernels.md5Local.get()
     var sum = 0L
     var i = 0
@@ -100,52 +122,62 @@ object StaticKernels {
       }
       i += 1
     }
-    InternalRow((m + 1).toLong, Decimal(sum, DsirSumPrecision, 12))
+    java.math.BigDecimal.valueOf(
+        java.math.BigDecimal.valueOf(sum, 12).doubleValue)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
   }
 }
 
-/** `band_hit(keys, sets)` — 0/1, whether any band's key is in the frozen
-  * band index (see [[StaticKernels.bandHit]]). */
-case class BandHitExpr(child: Expression,
-                       sets: Broadcast[StaticKernels.BandSets])
+/** `near_dup_hit(text, sets, bands, rowsPerBand, shingleSize, md5Keys)` —
+  * 0/1, never null, see [[StaticKernels.nearDupHit]]. */
+case class NearDupHitExpr(child: Expression,
+                          sets: Broadcast[StaticKernels.BandSets],
+                          bands: Int, rowsPerBand: Int, shingleSize: Int,
+                          md5Keys: Boolean)
     extends UnaryExpression {
-  private lazy val longKeys: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == LongType
   override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    StaticKernels.bandHit(input.asInstanceOf[ArrayData], sets, longKeys)
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any =
+    StaticKernels.nearDupHit(child.eval(input).asInstanceOf[UTF8String],
+      sets, bands, rowsPerBand, shingleSize, md5Keys)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val bc = ctx.addReferenceObj("bandSets", sets,
       classOf[Broadcast[_]].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.StaticKernels.bandHit($c, $bc, $longKeys);""")
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      long ${ev.value} = graft.functions.StaticKernels.nearDupHit(
+        ${c.isNull} ? null : ${c.value}, $bc, $bands, $rowsPerBand,
+        $shingleSize, $md5Keys);""", isNull = FalseLiteral)
   }
-  override protected def withNewChildInternal(c: Expression): BandHitExpr =
+  override protected def withNewChildInternal(c: Expression): NearDupHitExpr =
     copy(child = c)
-  override def prettyName: String = "band_hit"
+  override def prettyName: String = "near_dup_hit"
 }
 
-/** `dsir_sum(text, n, salt, terms)` — struct(n_grams, sum) of the text's
-  * grams against the frozen DSIR terms (see [[StaticKernels.dsirSum]]). */
-case class DsirSumExpr(child: Expression, n: Int, salt: String,
-                       terms: Broadcast[Array[Long]])
+/** `dsir_log_weight(text, n, salt, terms)` — double, null for a null text
+  * or one without a gram, see [[StaticKernels.dsirLogWeight]]. */
+case class DsirLogWeightExpr(child: Expression, n: Int, salt: String,
+                             terms: Broadcast[Array[Long]])
     extends UnaryExpression {
   require(n >= 1, s"gram width $n must be >= 1")
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_grams", LongType, nullable = false),
-    StructField("sum", DecimalType(StaticKernels.DsirSumPrecision, 12))))
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   private lazy val saltBytes =
     salt.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  override def nullSafeEval(input: Any): Any =
-    StaticKernels.dsirSum(input.asInstanceOf[UTF8String], n, saltBytes, terms)
+  override def nullSafeEval(input: Any): Any = StaticKernels.dsirLogWeight(
+    input.asInstanceOf[UTF8String], n, saltBytes, terms)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val s = ctx.addReferenceObj("dsirSalt", saltBytes, "byte[]")
     val bc = ctx.addReferenceObj("dsirTerms", terms,
       classOf[Broadcast[_]].getName)
+    val w = ctx.freshName("w")
     nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.StaticKernels.dsirSum($c, $n, $s, $bc);""")
+      java.lang.Double $w =
+        graft.functions.StaticKernels.dsirLogWeight($c, $n, $s, $bc);
+      if ($w == null) ${ev.isNull} = true; else ${ev.value} = $w;""")
   }
-  override protected def withNewChildInternal(c: Expression): DsirSumExpr =
+  override protected def withNewChildInternal(c: Expression): DsirLogWeightExpr =
     copy(child = c)
-  override def prettyName: String = "dsir_sum"
+  override def prettyName: String = "dsir_log_weight"
 }

@@ -14,6 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * returns what the chain returned (TextQualitySpec pins each against its
   * chain, interpreted and codegen'd):
   *  - [[wsParts]]: `size(split(trim(text), "\\s+"))`;
+  *  - [[dsirGrams]]: [[graft.ops.TextOps.dsirScore]]'s `n_grams`;
   *  - [[qualityScore]]: [[graft.ops.TextOps.qualityScore]]'s blend;
   *  - [[piiCount]]: [[graft.ops.TextOps.piiCount]]'s match total.
   *
@@ -60,6 +61,13 @@ object TextKernels {
     }
     parts
   }
+
+  /** The number of word n-grams [[StaticKernels.dsirLogWeight]] sums:
+    * max(0, |tokens| − n + 1) over `split(lower(trim(text)), "\\s+")`,
+    * whose size is [[wsParts]] (`lower` moves no whitespace); 0 for a
+    * null text. */
+  def dsirGrams(text: UTF8String, n: Int): Long =
+    if (text == null) 0L else math.max(0, wsParts(text) - n + 1).toLong
 
   /** [[graft.ops.TextOps.qualityScore]] in one byte pass: counts the
     * `[A-Za-z ]` and `[.,;:!?]` bytes and the tokens of the trimmed text,
@@ -132,6 +140,26 @@ case class WsPartsExpr(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): WsPartsExpr =
     copy(child = c)
   override def prettyName: String = "ws_parts"
+}
+
+/** `dsir_grams(text, n)` — long, never null, see
+  * [[TextKernels.dsirGrams]]. */
+case class DsirGramsExpr(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1, s"gram width $n must be >= 1")
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any =
+    TextKernels.dsirGrams(child.eval(input).asInstanceOf[UTF8String], n)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      long ${ev.value} = graft.functions.TextKernels.dsirGrams(
+        ${c.isNull} ? null : ${c.value}, $n);""", isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(c: Expression): DsirGramsExpr =
+    copy(child = c)
+  override def prettyName: String = "dsir_grams"
 }
 
 /** `quality_score(text)` — double in [0, 1], never null, see

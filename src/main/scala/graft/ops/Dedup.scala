@@ -417,29 +417,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("__j"), 4).as("jaccard"))
   }
 
-  /** Per-bit vote vector for a 64-bit SimHash (Charikar '02) over word
-    * unigram features: votes[b] = sum over features of +/-1 by bit b of the
-    * feature hash. Single aggregate pass (see minHashSignature note on why
-    * staging matters). */
-  private def simHashVotes(text: Column): Column = {
-    // word-bigram features: unigrams over a small vocabulary make long
-    // documents' token SETS near-identical and the sketch degenerates
-    val hashes = TextOps.wordShingleHashes(text, 2)
-    val init = transform(sequence(lit(1), lit(64)), _ => lit(0L))
-    val bitMasks = array((0 until 64).map(b => lit(1L << b)): _*)
-    aggregate(hashes, init, (acc, h) =>
-      zip_with(acc, transform(bitMasks, m =>
-          when(h.bitwiseAND(m) =!= 0L, 1L).otherwise(-1L)),
-        (a, v) => a + v))
-  }
-
-  /** Fold a 64-slot vote vector (an attribute reference, so the fold stays
-    * cheap) into the final 64-bit simhash long. */
-  private def votesToHash(votes: Column): Column =
-    (0 until 64).map { b =>
-      when(element_at(votes, b + 1) > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }.reduce((a, c) => a.bitwiseOR(c))
-
   /** Attach a 64-bit simhash column via the native codegen'd kernel
     * (graft.functions.SimHash64Expr). */
   def withSimHash(df: DataFrame, textCol: String = "text",
@@ -447,39 +424,10 @@ object Dedup {
     df.withColumn(outCol,
       graft.functions.GraftFunctions.simhash64(col(textCol), 2))
 
-  /** 64-bit SimHash as a single Column (convenience for small inputs; at
-    * scale prefer [[withSimHash]] whose staged projection guarantees the
-    * vote pass runs once). */
-  def simHash64(text: Column): Column = votesToHash(simHashVotes(text))
-
-  /** md5-derived 64-bit SimHash votes — cross-engine recomputable (the
-    * DuckDB oracle rebuilds the identical sketch): per-shingle hash = two
-    * 32-bit chunks of md5(shingle); bit b of the feature hash is bit b%32
-    * of chunk b/32. Word-bigram features, distinct (set semantics, so the
-    * SQL recomputation by grouped sums agrees). */
-  private def simHashVotesMd5(text: Column): Column = {
-    val shingles = array_distinct(TextOps.wordShingles(text, 2))
-    val pairs = transform(shingles, s => {
-      val m = md5(s)
-      array(TextOps.md5U32(s),
-        conv(substring(m, 9, 8), 16, 10).cast("long"))
-    })
-    val init = transform(sequence(lit(1), lit(64)), _ => lit(0L))
-    aggregate(pairs, init, (acc, p) =>
-      zip_with(acc, array((0 until 64).map { b =>
-        when(shiftright(element_at(p, b / 32 + 1), b % 32)
-          .bitwiseAND(1L) === 1L, lit(1L)).otherwise(lit(-1L))
-      }: _*), (a, v) => a + v))
-  }
-
-  /** The md5-derived simhash via the HOF formulation — the interpreted
-    * reference the native kernel is cross-checked against (TextDedupSpec). */
-  private[graft] def simHash64Md5Hof(text: Column): Column =
-    votesToHash(simHashVotesMd5(text))
-
   /** Attach the md5-derived simhash via the native codegen'd kernel
-    * (graft.functions.SimHash64Md5Expr, bit-identical to
-    * [[simHash64Md5Hof]]). The xxhash64 kernel stays the scale path. */
+    * (graft.functions.SimHash64Md5Expr, bit-identical to the HOF
+    * formulation TextDedupSpec keeps as its reference). The xxhash64
+    * kernel stays the scale path. */
   def withSimHashMd5(df: DataFrame, textCol: String = "text",
                      outCol: String = "simhash"): DataFrame =
     df.withColumn(outCol,
@@ -635,10 +583,9 @@ object Dedup {
   private def shingles(text: Column, shingleSize: Int): Column =
     graft.functions.GraftFunctions.ws_parts(text) >= shingleSize
 
-  /** The near-dup gate's MinHash signature of `text`; [[nearDupHit]]
-    * reads it. */
-  private[graft] def gateSig(text: Column, bands: Int, rowsPerBand: Int,
-                             shingleSize: Int, md5Keys: Boolean): Column =
+  /** The near-dup gate's MinHash signature of `text`. */
+  private def gateSig(text: Column, bands: Int, rowsPerBand: Int,
+                      shingleSize: Int, md5Keys: Boolean): Column =
     if (md5Keys) graft.functions.GraftFunctions.minhash_sig_md5(
       text, bands * rowsPerBand, shingleSize)
     else graft.functions.GraftFunctions.minhash_sig(
@@ -646,8 +593,8 @@ object Dedup {
 
   /** Element b: band b's key over the signature's rows
     * [b·rowsPerBand, (b+1)·rowsPerBand). */
-  private def bandKeys(sig: Column, bands: Int, rowsPerBand: Int,
-                       md5Keys: Boolean): Column =
+  private[graft] def bandKeys(sig: Column, bands: Int, rowsPerBand: Int,
+                              md5Keys: Boolean): Column =
     array((0 until bands).map { b =>
       if (md5Keys) md5(array_join(
         transform(slice(sig, b * rowsPerBand + 1, rowsPerBand),
@@ -790,13 +737,13 @@ object Dedup {
     * against it would broadcast it), its (band, band_hash) set ships
     * once to the executors ([[graft.functions.StaticCache]]: frozen for
     * a checkpointed index, collected per call otherwise) and the gate is
-    * one map-only projection — the native signature kernel in its own
-    * Project, then a per-row band lookup — one output row per input
-    * row, no join, no shuffle. A corpus-sized index takes the band-keyed
-    * left-semi shuffle join instead, where only (id) rows cross the
-    * flag join back (that path flags per id: copies of an id share a
-    * flag). Works identically on a batch frame and inside `foreachBatch`
-    * on a microbatch — the streaming runner
+    * one map-only projection — one native kernel per row signs the text
+    * and probes its band keys ([[nearDupLookup]]) — one output row per
+    * input row, no join, no shuffle. A corpus-sized index takes the
+    * band-keyed left-semi shuffle join instead, where only (id) rows
+    * cross the flag join back (that path flags per id: copies of an id
+    * share a flag). Works identically on a batch frame and inside
+    * `foreachBatch` on a microbatch — the streaming runner
     * ([[graft.streaming.Streams.startNearDupGate]]) applies it
     * per-microbatch against the checkpointed index. */
   def nearDupFlag(docs: DataFrame, index: DataFrame,
@@ -818,17 +765,11 @@ object Dedup {
                               idCol: String, textCol: String, bands: Int,
                               rowsPerBand: Int, shingleSize: Int,
                               md5Keys: Boolean): DataFrame =
-    if (lookupFits(index)) {
-      // the signature is a Project of its own: inside the flag's when()
-      // each band key would re-run the kernel (conditional branches are
-      // not subexpression-eliminated)
-      val sig = "__nd_sig"
-      docs.select(col("*"), gateSig(col(textCol), bands, rowsPerBand,
-          shingleSize, md5Keys).as(sig))
-        .select(docs.columns.map(col) :+ nearDupHit(col(textCol), col(sig),
-          index, bands, rowsPerBand, shingleSize, md5Keys)
-          .as("is_near_dup"): _*)
-    } else {
+    if (lookupFits(index))
+      docs.select(docs.columns.map(col) :+ nearDupLookup(col(textCol),
+        index, bands, rowsPerBand, shingleSize, md5Keys)
+        .as("is_near_dup"): _*)
+    else {
       val hits = gateBands(docs, idCol, textCol, bands, rowsPerBand,
           shingleSize, md5Keys)
         .join(index, Seq("band", "band_hash"), "left_semi")
@@ -847,22 +788,24 @@ object Dedup {
       .conf.autoBroadcastJoinThreshold
   }
 
-  /** The lookup path's 0/1 near-dup flag of a document from its `text`
-    * and its [[gateSig]] `sig`: 1 when some band key is in the frozen
-    * `index`; 0 for a document too short to shingle. */
-  private[graft] def nearDupHit(text: Column, sig: Column, index: DataFrame,
-                                bands: Int, rowsPerBand: Int,
-                                shingleSize: Int, md5Keys: Boolean): Column =
-    when(shingles(text, shingleSize), graft.functions.GraftFunctions.band_hit(
-        bandKeys(sig, bands, rowsPerBand, md5Keys), bandSets(index)))
-      .otherwise(lit(0L))
+  /** The lookup path's 0/1 near-dup flag of a document's `text` against
+    * the frozen `index`: one native kernel per row that signs the text,
+    * derives the band keys as [[bandKeys]] does and probes the index's
+    * band sets ([[graft.functions.StaticKernels.nearDupHit]]); 0 for a
+    * document too short to shingle. */
+  private[graft] def nearDupLookup(text: Column, index: DataFrame,
+                                   bands: Int, rowsPerBand: Int,
+                                   shingleSize: Int,
+                                   md5Keys: Boolean): Column =
+    graft.functions.GraftFunctions.near_dup_hit(text, bandSets(index),
+      bands, rowsPerBand, shingleSize, md5Keys)
 
   /** A band index as per-band key sets: element b holds band b's
     * band_hash values (boxed longs, or UTF8Strings for the md5 family). */
   private val bandSetsCache =
     new graft.functions.StaticCache[graft.functions.StaticKernels.BandSets]
 
-  private def bandSets(index: DataFrame): org.apache.spark.broadcast
+  private[graft] def bandSets(index: DataFrame): org.apache.spark.broadcast
       .Broadcast[graft.functions.StaticKernels.BandSets] =
     bandSetsCache(index) { index =>
       val rows = index.select(col("band"), col("band_hash")).collect()

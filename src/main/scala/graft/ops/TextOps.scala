@@ -1932,37 +1932,32 @@ object TextOps {
     * executors ([[graft.functions.StaticCache]]: frozen for a
     * checkpointed profile, collected per call otherwise), and a native
     * kernel sums each document's own grams against them as unscaled
-    * longs — one map-only projection, no gram rows, no join, no
-    * shuffle. The sum is exact or loud: past the 64-bit unscaled range
-    * it throws, naming dsirScore. */
+    * longs, beside one that counts the grams — one map-only projection,
+    * no gram rows, no join, no shuffle. The sum is exact or loud: past
+    * the 64-bit unscaled range it throws, naming dsirScore. */
   def dsirScore(docs: DataFrame, profile: DataFrame, n: Int = 2,
                 buckets: Int = 4096, salt: String = "dsir",
                 idCol: String = "doc_id",
                 textCol: String = "text"): DataFrame =
-    // the kernel's struct is a Project of its own, so its two fields
-    // read one evaluation
-    docs.select(col(idCol),
-        dsirSum(col(textCol), profile, n, buckets, salt).as("__dsir"))
-      .select(col(idCol) +: dsirScoreColumns(col("__dsir")): _*)
+    docs.select(col(idCol) +:
+      dsirColumns(col(textCol), profile, n, buckets, salt): _*)
 
-  /** The `dsir_sum` struct of `text`'s grams against `profile`'s frozen
-    * terms; [[dsirScoreColumns]] reads it. */
-  private[graft] def dsirSum(text: Column, profile: DataFrame, n: Int,
-                             buckets: Int, salt: String): Column =
-    graft.functions.GraftFunctions.dsir_sum(text, n, salt,
-      dsirTerms(profile, buckets))
-
-  /** [[dsirScore]]'s (n_grams, log_weight) from a [[dsirSum]] struct. */
-  private[graft] def dsirScoreColumns(dsir: Column): Seq[Column] = Seq(
-    coalesce(dsir("n_grams"), lit(0L)).as("n_grams"),
-    round(dsir("sum").cast("double"), 6).as("log_weight"))
+  /** [[dsirScore]]'s (n_grams, log_weight) of `text` against `profile`'s
+    * frozen terms, one native kernel each
+    * ([[graft.functions.TextKernels.dsirGrams]],
+    * [[graft.functions.StaticKernels.dsirLogWeight]]). */
+  private[graft] def dsirColumns(text: Column, profile: DataFrame, n: Int,
+                                 buckets: Int, salt: String): Seq[Column] =
+    Seq(graft.functions.GraftFunctions.dsir_grams(text, n).as("n_grams"),
+      graft.functions.GraftFunctions.dsir_log_weight(text, n, salt,
+        dsirTerms(profile, buckets)).as("log_weight"))
 
   /** A [[dsirProfile]] as its per-bucket terms: element b is bucket b's
     * ln(p_target / p_raw) cast to decimal(27,12), as an unscaled long.
     * The profile must hold each of the `buckets` buckets exactly once. */
   private val dsirTermsCache = new graft.functions.StaticCache[Array[Long]]
 
-  private def dsirTerms(profile: DataFrame, buckets: Int)
+  private[graft] def dsirTerms(profile: DataFrame, buckets: Int)
     : org.apache.spark.broadcast.Broadcast[Array[Long]] = {
     val terms = dsirTermsCache(profile) { p =>
       val terms = new Array[Long](buckets)

@@ -1046,16 +1046,16 @@ object Streams {
     * (StreamingSpec-pinned); each component's arithmetic is separately
     * oracle-gated (t46 family, t01/t37, t66/t67).
     *
-    * Scale shape: two Projects over `docs` — the MinHash signature and
-    * the DSIR struct, then every gate column — all native kernels, no
-    * regex or split left in the plan; no join, no shuffle, no per-batch
-    * broadcast. Both statics ship once to the executors and the kernels
-    * probe them per row; a checkpointed static (`localCheckpoint()`, as
-    * the build-once discipline asks) is collected on the first call
-    * only, so every later microbatch is one job over its own rows. A
-    * band index past `spark.sql.autoBroadcastJoinThreshold` is the
-    * exception: the near-dup flag then takes the band-keyed semi-join
-    * ([[graft.ops.Dedup.nearDupFlag]]) ahead of the two Projects. */
+    * Scale shape: one Project over `docs`, one native kernel per gate
+    * column — no regex, split or band-key chain left in the plan; no
+    * join, no shuffle, no per-batch broadcast. Both statics ship once to
+    * the executors and the kernels probe them per row; a checkpointed
+    * static (`localCheckpoint()`, as the build-once discipline asks) is
+    * collected on the first call only, so every later microbatch is one
+    * job over its own rows. A band index past
+    * `spark.sql.autoBroadcastJoinThreshold` is the exception: the
+    * near-dup flag then takes the band-keyed semi-join
+    * ([[graft.ops.Dedup.nearDupFlag]]) ahead of the Project. */
   def ingestScreen(docs: DataFrame, bandIndex: DataFrame,
                    dsirProfile: DataFrame,
                    bands: Int = 8, rowsPerBand: Int = 4,
@@ -1064,24 +1064,16 @@ object Streams {
                    salt: String = "dsir"): DataFrame = {
     import graft.ops.{Dedup, TextOps}
     val text = col("text")
-    val (flagged, sig, flag) =
-      if (Dedup.lookupFits(bandIndex)) (docs,
-        Seq(Dedup.gateSig(text, bands, rowsPerBand, shingleSize,
-          md5Keys = false).as("__nd_sig")),
-        Dedup.nearDupHit(text, col("__nd_sig"), bandIndex, bands,
-          rowsPerBand, shingleSize, md5Keys = false))
+    val (flagged, flag) =
+      if (Dedup.lookupFits(bandIndex)) (docs, Dedup.nearDupLookup(text,
+        bandIndex, bands, rowsPerBand, shingleSize, md5Keys = false))
       else (Dedup.nearDupFlag(docs, bandIndex, bands = bands,
-          rowsPerBand = rowsPerBand, shingleSize = shingleSize), Nil,
+          rowsPerBand = rowsPerBand, shingleSize = shingleSize),
         col("is_near_dup"))
-    // the signature and the DSIR struct are a Project of their own: the
-    // flag reads the signature once per band and the score reads both
-    // struct fields, so one evaluation each
-    flagged.select(col("*") +: sig :+
-        TextOps.dsirSum(text, dsirProfile, n, buckets, salt).as("__dsir"): _*)
-      .select((docs.columns.map(col) :+ flag.as("is_near_dup")) ++
-        TextOps.dsirScoreColumns(col("__dsir")) :+
-        TextOps.qualityScore(text).as("quality") :+
-        TextOps.piiCount(text).as("pii"): _*)
+    flagged.select((docs.columns.map(col) :+ flag.as("is_near_dup")) ++
+      TextOps.dsirColumns(text, dsirProfile, n, buckets, salt) :+
+      TextOps.qualityScore(text).as("quality") :+
+      TextOps.piiCount(text).as("pii"): _*)
   }
 
   /** Streaming form of [[ingestScreen]] — the s10 bench shape: paced

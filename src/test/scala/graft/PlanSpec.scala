@@ -353,7 +353,7 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("BroadcastExchange"), p.take(2500))
       assert(!p.contains("Join") && !p.contains("Generate"), p.take(2500))
       assert("Exchange".r.findAllIn(p).size === 1, p.take(2500))
-      assert(p.contains("dsir_sum("), p.take(2500))
+      assert(p.contains("dsir_log_weight("), p.take(2500))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
@@ -398,9 +398,9 @@ class PlanSpec extends SparkSpec {
       val p = screened.queryExecution.executedPlan.toString
       // "Exchange" covers BroadcastExchange and ShuffleExchange alike
       assert(!p.contains("Exchange") && !p.contains("Join"), p.take(2500))
-      // the signature is its own Project: once in the plan, not once per
-      // band key inside the flag's CASE WHEN
-      assert("minhash_sig\\(".r.findAllIn(p).size === 1, p.take(2500))
+      // the signature is signed and probed inside one kernel: once in the
+      // plan, not once per band key
+      assert("near_dup_hit\\(".r.findAllIn(p).size === 1, p.take(2500))
     } finally {
       sc.setLocalProperty(tag, null)
       sc.removeSparkListener(listener)
@@ -421,6 +421,23 @@ class PlanSpec extends SparkSpec {
     val projects = plan.collect {
       case x: org.apache.spark.sql.execution.ProjectExec => x }
     assert(projects.size <= 2, p.take(2500))
+    assert(screened.collect().length === 20)
+  }
+
+  test("ingestScreen's lookup-path microbatch plan is one Project with " +
+      "one near_dup_hit kernel: no minhash_sig, xxhash64 or slice") {
+    import org.apache.spark.sql.functions.col
+    val (docs, idx, prof) = screenInputs
+    val screened = graft.streaming.Streams.ingestScreen(
+      docs.filter(col("doc_id") < 20), idx, prof)
+    val plan = screened.queryExecution.executedPlan
+    val p = plan.toString
+    val projects = plan.collect {
+      case x: org.apache.spark.sql.execution.ProjectExec => x }
+    assert(projects.size === 1, p.take(2500))
+    assert("near_dup_hit\\(".r.findAllIn(p).size === 1, p.take(2500))
+    for (k <- Seq("minhash_sig(", "xxhash64(", "slice("))
+      assert(!p.contains(k), s"$k in\n${p.take(2500)}")
     assert(screened.collect().length === 20)
   }
 

@@ -168,6 +168,39 @@ class TextDedupSpec extends SparkSpec {
       5L -> 1L, 6L -> 6L, 9L -> 6L, 10L -> 10L, 11L -> 10L))
   }
 
+  /** md5-derived 64-bit SimHash votes — cross-engine recomputable (the
+    * DuckDB oracle rebuilds the identical sketch): per-shingle hash = two
+    * 32-bit chunks of md5(shingle); bit b of the feature hash is bit b%32
+    * of chunk b/32. Word-bigram features, distinct (set semantics, so the
+    * SQL recomputation by grouped sums agrees). */
+  private def simHashVotesMd5(text: org.apache.spark.sql.Column)
+    : org.apache.spark.sql.Column = {
+    val shingles = array_distinct(TextOps.wordShingles(text, 2))
+    val pairs = transform(shingles, s => {
+      val m = md5(s)
+      array(TextOps.md5U32(s),
+        conv(substring(m, 9, 8), 16, 10).cast("long"))
+    })
+    val init = transform(sequence(lit(1), lit(64)), _ => lit(0L))
+    aggregate(pairs, init, (acc, p) =>
+      zip_with(acc, array((0 until 64).map { b =>
+        when(shiftright(element_at(p, b / 32 + 1), b % 32)
+          .bitwiseAND(1L) === 1L, lit(1L)).otherwise(lit(-1L))
+      }: _*), (a, v) => a + v))
+  }
+
+  /** Fold a 64-slot vote vector into the final 64-bit simhash long. */
+  private def votesToHash(votes: org.apache.spark.sql.Column)
+    : org.apache.spark.sql.Column =
+    (0 until 64).map { b =>
+      when(element_at(votes, b + 1) > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
+    }.reduce((a, c) => a.bitwiseOR(c))
+
+  /** The md5-derived simhash via the HOF formulation — the interpreted
+    * reference the native kernel is cross-checked against. */
+  private def simHash64Md5Hof(text: org.apache.spark.sql.Column)
+    : org.apache.spark.sql.Column = votesToHash(simHashVotesMd5(text))
+
   test("native md5 sketch kernels are bit-identical to the HOF formulations") {
     // fixture docs + adversarial strings: empty, short, tabs/newlines
     // (space-only trim leaves them), repeated shingles, unicode case
@@ -180,7 +213,7 @@ class TextDedupSpec extends SparkSpec {
       graft.functions.GraftFunctions.minhash_sig_md5(col("text"), 32, 3).as("n_sig"),
       Dedup.minHashSignatureMd5(col("text"), 32, 3).as("h_sig"),
       graft.functions.GraftFunctions.simhash64_md5(col("text"), 2).as("n_sh"),
-      Dedup.simHash64Md5Hof(col("text")).as("h_sh"))
+      simHash64Md5Hof(col("text")).as("h_sh"))
     assert(cmp.filter(col("n_sig") =!= col("h_sig") ||
       col("n_sh") =!= col("h_sh")).count() == 0)
   }

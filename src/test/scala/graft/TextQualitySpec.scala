@@ -1065,4 +1065,88 @@ class TextQualitySpec extends SparkSpec {
         byText(t100k1).getDouble(1) == 0.75)
     }
   }
+
+  test("near_dup_hit, dsir_grams and dsir_log_weight == the band-key and " +
+      "dsir_sum chains they replaced, interpreted and codegen'd, both hash " +
+      "families, over the sf0.01 documents and short texts") {
+    import graft.functions.ReferenceKernels.{band_hit, dsir_sum}
+    import graft.ops.Dedup
+    val corpus = graft.etl.Tables.documents(spark, "/root/testdata/sf0.01")
+      .select(col("doc_id"), col("lang"), col("text"))
+    // an index over half the corpus: the other half mostly misses
+    val half = corpus.filter(col("doc_id") % 2 === 0)
+    val idx = Dedup.nearDupIndex(half).localCheckpoint()
+    val idxMd5 = Dedup.nearDupIndexMd5(half).localCheckpoint()
+    val prof = TextOps.dsirProfile(corpus,
+      corpus.filter(col("lang") === "en")).localCheckpoint()
+    val edges = Seq[String](null, "", "   ", "word", "two words",
+      "three word text", "  Three\tWORD  text\n", "a\u000Bb\fc\rd")
+    val texts = corpus.select(col("text")).collect().map(_.getString(0))
+    val df = (texts.toSeq ++ edges).map(Tuple1(_)).toDF("text")
+    val text = col("text")
+    val terms = TextOps.dsirTerms(prof, 4096)
+    def reference(index: org.apache.spark.sql.DataFrame, md5Keys: Boolean) = {
+      val sig =
+        if (md5Keys) GraftFunctions.minhash_sig_md5(text, 32, 3)
+        else GraftFunctions.minhash_sig(text, 32, 3)
+      when(GraftFunctions.ws_parts(text) >= 3, band_hit(
+          Dedup.bandKeys(sig, 8, 4, md5Keys), Dedup.bandSets(index)))
+        .otherwise(lit(0L))
+    }
+    val dsir = dsir_sum(text, 2, "dsir", terms)
+    // (name, kernel columns, the chains they replaced); the md5 chain's
+    // lambdas keep it out of generated code, so each side is its own
+    // projection and rows pair up by text
+    val pairs = Seq(
+      ("near_dup_hit", Seq(Dedup.nearDupLookup(text, idx, 8, 4, 3,
+        md5Keys = false)), Seq(reference(idx, md5Keys = false))),
+      ("near_dup_hit md5", Seq(Dedup.nearDupLookup(text, idxMd5, 8, 4, 3,
+        md5Keys = true)), Seq(reference(idxMd5, md5Keys = true))),
+      ("dsir_grams, dsir_log_weight",
+        TextOps.dsirColumns(text, prof, 2, 4096, "dsir"),
+        Seq(coalesce(dsir("n_grams"), lit(0L)),
+          round(dsir("sum").cast("double"), 6))))
+    def sortedByText(rs: Array[org.apache.spark.sql.Row]) =
+      rs.sortBy(r => (r.isNullAt(0), Option(r.getString(0)).getOrElse("")))
+    // a projection over local rows is folded into the local relation at
+    // planning (interpreted); above an exchange it runs in generated code
+    for ((frame, shape) <- Seq(df -> "LocalTableScan",
+        df.repartition(2) -> "*(1) Project");
+        (what, kernels, chains) <- pairs) {
+      val out = frame.select(text +: kernels: _*)
+      val ref = frame.select(text +: chains: _*)
+      val w = kernels.size
+      for (k <- 1 to w)
+        assert(out.schema(k).copy(name = "") === ref.schema(k)
+          .copy(name = ""), s"$shape $what: ${out.schema(k)} vs " +
+          s"${ref.schema(k)}")
+      val rows = out.collect()
+      assert(rows.length === texts.length + edges.size)
+      assert(out.queryExecution.executedPlan.toString.contains(shape),
+        s"$shape $what")
+      val want = ref.collect()
+      assert(want.length === rows.length)
+      sortedByText(rows).zip(sortedByText(want)).foreach { case (r, c) =>
+        val t = Option(r.getString(0)).map(_.take(60)).orNull
+        assert(r.getString(0) == c.getString(0))
+        for (k <- 1 to w)
+          assert(r.get(k) == c.get(k), s"$shape $what($t) col $k: " +
+            s"${r.get(k)} != chain ${c.get(k)}")
+      }
+      val nulls = rows.filter(_.isNullAt(0))
+      val byText = rows.filter(!_.isNullAt(0))
+        .map(r => r.getString(0) -> r).toMap
+      assert(nulls.length == 1 && nulls.head.getLong(1) == 0L)
+      if (w == 1) {
+        // each family both hits and misses on the corpus
+        assert(rows.map(_.getLong(1)).toSet === Set(0L, 1L), s"$what")
+      } else {
+        assert(nulls.head.isNullAt(2))
+        assert(byText("word").getLong(1) == 0L && byText("word").isNullAt(2))
+        assert(byText("two words").getLong(1) == 1L &&
+          !byText("two words").isNullAt(2))
+        assert(byText("three word text").getLong(1) == 2L)
+      }
+    }
+  }
 }

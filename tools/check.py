@@ -2,12 +2,19 @@
 """Local stand-in for the driver's correctness gate.
 
 Usage: python3 tools/check.py <verify_out_dir> <sf_dir>
+       python3 tools/check.py --compare <verify_out_dir_a> <verify_out_dir_b>
 
 Reads each <out_dir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from <out_dir>/oracle_sql.json in DuckDB over the
 <sf_dir> tables, and compares after sorting columns by name and rows by
-all columns. Prints a per-query verdict."""
-import sys, json, glob, os
+all columns. Prints a per-query verdict.
+
+--compare hashes every query output of two Verify directories in the same
+canonical form (columns by name, rows by all columns, dtypes included) and
+reports each query as identical or not, rows-only queries included; it
+exits nonzero unless both directories hold the same queries with identical
+hashes."""
+import sys, json, glob, os, hashlib
 import duckdb
 import pandas as pd
 
@@ -20,6 +27,60 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     if len(df):
         df = df.sort_values(by=list(df.columns), ignore_index=True)
     return df.reset_index(drop=True)
+
+
+def _plain(v):
+    """An array, struct or map cell as a sortable, hashable string."""
+    if hasattr(v, "tolist"):
+        v = v.tolist()
+    return repr(v) if isinstance(v, (list, dict, tuple)) else v
+
+
+def canon_hash(df: pd.DataFrame) -> str:
+    for c in df.columns:
+        if df[c].dtype == object:
+            df[c] = df[c].map(_plain)
+    df = canon(df)
+    h = hashlib.sha256(json.dumps(
+        [[c, str(t)] for c, t in zip(df.columns, df.dtypes)]).encode())
+    h.update(pd.util.hash_pandas_object(df, index=False).values.tobytes())
+    return h.hexdigest()
+
+
+def compare(dir_a, dir_b):
+    con = duckdb.connect()
+
+    def outputs(d):
+        return {os.path.basename(p) for p in glob.glob(f"{d}/*")
+                if os.path.isdir(p)}
+
+    a_names, b_names = outputs(dir_a), outputs(dir_b)
+    n_same = n_diff = 0
+    for name in sorted(a_names | b_names):
+        if name not in a_names or name not in b_names:
+            side = dir_a if name in a_names else dir_b
+            print(f"DIFF  {name}: only in {side}")
+            n_diff += 1
+            continue
+        hashes, rows = [], []
+        for d in (dir_a, dir_b):
+            if not glob.glob(f"{d}/{name}/*.parquet"):
+                hashes.append(None)
+                rows.append(0)
+                continue
+            df = con.sql(f"SELECT * FROM '{d}/{name}/*.parquet'").df()
+            hashes.append(canon_hash(df))
+            rows.append(len(df))
+        if hashes[0] is not None and hashes[0] == hashes[1]:
+            print(f"SAME  {name}: {rows[0]} rows, {hashes[0][:16]}")
+            n_same += 1
+        else:
+            print(f"DIFF  {name}: rows {rows[0]} vs {rows[1]}, "
+                  f"hash {str(hashes[0])[:16]} vs {str(hashes[1])[:16]}")
+            n_diff += 1
+    print(f"\n{n_same} identical, {n_diff} differ, "
+          f"{len(a_names | b_names)} total")
+    sys.exit(1 if n_diff else 0)
 
 
 def main():
@@ -81,4 +142,7 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--compare"] and len(sys.argv) == 4:
+        compare(sys.argv[2], sys.argv[3])
+    else:
+        main()
