@@ -97,8 +97,8 @@ object DataQueries {
           k._1.sparkContext.isStopped)
         .foreach(k => pairsMemo.remove(k).foreach(CoreQueries.releaseStaging))
       val docs = withPlantedDups(T.documents(s, d))
-      val cands = Dedup.minHashLshCandidatesMd5(docs, bands = 8,
-        rowsPerBand = 4, shingleSize = 3)
+      val cands = Dedup.minHashLshCandidates(docs, bands = 8,
+        rowsPerBand = 4, shingleSize = 3, md5Keys = true)
       Dedup.jaccardVerify(cands, docs, threshold = 0.5).localCheckpoint()
     })
   }
@@ -165,8 +165,8 @@ object DataQueries {
     * bucketing, Hamming <= 6. Uses the md5-derived sketch so the DuckDB
     * oracle recomputes identical hashes, blocks and distances. */
   val t05SimHash: Q = (s, d) =>
-    Dedup.simHashCandidatesMd5(withPlantedDups(T.documents(s, d)),
-        blocks = 4, maxHamming = 6)
+    Dedup.simHashCandidates(withPlantedDups(T.documents(s, d)),
+        blocks = 4, maxHamming = 6, md5Keys = true)
       .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
       .orderBy(col("id_a"), col("id_b"))
 
@@ -743,7 +743,8 @@ object DataQueries {
     val incoming = docs.select((col("doc_id") + 100000L).as("doc_id"),
       concat_ws(" ",
         slice(split(trim(col("text")), "\\s+"), 2, 1000000)).as("text"))
-    Dedup.nearDupFlagMd5(incoming, Dedup.nearDupIndexMd5(docs))
+    Dedup.nearDupFlag(incoming, Dedup.nearDupIndex(docs, md5Keys = true),
+        md5Keys = true)
       .select(col("doc_id").cast("long").as("doc_id"), col("is_near_dup"))
       .orderBy(col("doc_id"))
   }
@@ -770,7 +771,7 @@ object DataQueries {
         .when(col("doc_id") % 3 === 1,
           concat(col("text"), lit(" "), lit(boiler)))
         .otherwise(col("text")).as("text"))
-    TextOps.repeatedNgramRemovalMd5(docs, n = 5, minDocs = 3)
+    TextOps.repeatedNgramRemoval(docs, n = 5, minDocs = 3, md5Keys = true)
       .select(col("doc_id").cast("long").as("doc_id"), col("clean_text"),
         col("n_kept"), col("n_removed"))
       .orderBy(col("doc_id"))
@@ -785,19 +786,20 @@ object DataQueries {
     * save, so a single span cut in the wrong document breaks the
     * hash. */
   val t122KeepFirstDedup: Q = (s, d) =>
-    TextOps.repeatedNgramRemovalMd5(T.documents(s, d), n = 5,
-        minDocs = 2, keepFirst = true)
+    TextOps.repeatedNgramRemoval(T.documents(s, d), n = 5,
+        minDocs = 2, keepFirst = true, md5Keys = true)
       .select(col("doc_id").cast("long").as("doc_id"), col("clean_text"),
         col("n_kept"), col("n_removed"))
       .orderBy(col("doc_id"))
 
-  /** Duplicated-span audit report ([[TextOps.duplicateSpansMd5]]): the
+  /** Duplicated-span audit report ([[TextOps.duplicateSpans]]): the
     * maximal cross-doc duplicated token runs per document, BEFORE any
     * removal — where the duplication sits and how big it is. The
     * oracle replays the interval merge (running covered-end window +
     * break-flag running sum) span for span. */
   val t123DupSpans: Q = (s, d) =>
-    TextOps.duplicateSpansMd5(T.documents(s, d), n = 5, minDocs = 2)
+    TextOps.duplicateSpans(T.documents(s, d), n = 5, minDocs = 2,
+        md5Keys = true)
       .orderBy(col("doc_id"), col("span_start"))
 
   /** Deterministic shard-shuffle of the corpus into 8 equal shards:
@@ -828,9 +830,11 @@ object DataQueries {
     val incoming = docs.select((col("doc_id") + 100000L).as("doc_id"),
       concat_ws(" ",
         slice(split(trim(col("text")), "\\s+"), 2, 1000000)).as("text"))
-    val idx = Dedup.nearDupIndexMd5(docs)
-    val bloom = Dedup.nearDupIndexBloomMd5(idx, m = 1 << 16, k = 3)
-    Dedup.nearDupFlagBloomedMd5(incoming, idx, bloom, m = 1 << 16, k = 3)
+    val idx = Dedup.nearDupIndex(docs, md5Keys = true)
+    val bloom = Dedup.nearDupIndexBloom(idx, m = 1 << 16, k = 3,
+      md5Keys = true)
+    Dedup.nearDupFlagBloomed(incoming, idx, bloom, m = 1 << 16, k = 3,
+        md5Keys = true)
       .select(col("doc_id").cast("long").as("doc_id"), col("is_near_dup"))
       .orderBy(col("doc_id"))
   }

@@ -109,8 +109,8 @@ object SketchKernels {
   /** Tokens exactly as the Column path produces them:
     * `split(lower(trim(text)), "\\s+")` — UTF8String.trim strips ASCII
     * spaces only (Spark's `trim`), then lowercase, then regex split. The
-    * md5 kernels below must agree bit-for-bit with the HOF formulation in
-    * graft.ops.Dedup (and hence the DuckDB oracle), so they share this
+    * md5 kernels below must agree bit-for-bit with the HOF formulations
+    * the specs keep (and hence the DuckDB oracle), so they share this
     * tokenizer rather than the trimAll-based one above. */
   private[functions] def columnTokens(text: UTF8String): Array[String] = {
     val s = text.trim().toLowerCase.toString
@@ -261,9 +261,9 @@ object SketchKernels {
 
   private final val MersennePrime = 2147483647L
 
-  /** md5-derived MinHash signature — bit-identical to
-    * graft.ops.Dedup.minHashSignatureMd5's HOF formulation (and the DuckDB
-    * oracle): x = first 32 bits of md5(shingle),
+  /** md5-derived MinHash signature — bit-identical to the test-scope
+    * HOF formulation ReferenceKernels.minHashSignatureMd5 (and the
+    * DuckDB oracle): x = first 32 bits of md5(shingle),
     * h_i(x) = (a_i*x + b_i) mod (2^31-1), a_i = 2654435761*(i+1) mod p,
     * b_i = 40503*(i+1) mod p. One tight loop, no per-shingle allocation
     * beyond the joined shingle string (which md5 needs materialized). */
@@ -296,9 +296,8 @@ object SketchKernels {
     sig
   }
 
-  /** md5-derived 64-bit SimHash — bit-identical to
-    * graft.ops.Dedup.withSimHashMd5's HOF formulation (and the DuckDB
-    * oracle): distinct word shingles; bit b of a shingle's feature hash is
+  /** md5-derived 64-bit SimHash — bit-identical to the HOF formulation
+    * TextDedupSpec keeps (and the DuckDB oracle): distinct word shingles; bit b of a shingle's feature hash is
     * bit b%32 of md5 chunk b/32; majority vote per bit (>0 sets the bit). */
   def simhashMd5(text: UTF8String, shingleSize: Int): Long = {
     val toks = columnTokens(text)

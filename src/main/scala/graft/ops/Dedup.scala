@@ -130,83 +130,6 @@ object Dedup {
         col("comp").as("cluster_id"), col("cluster_size"))
   }
 
-  /** MinHash signature as an array<long> of `numHashes` minima over word
-    * `shingleSize`-shingles. Hash family: xxhash64(shingle, seed_i) — i.i.d.
-    * enough for Jaccard estimation (Broder '97 resemblance sketches).
-    *
-    * Single-pass formulation: one `aggregate` over the shingle array
-    * updating all minima via `zip_with`, so the (expensive) shingle builder
-    * is evaluated once per row — NOT once per hash function. (A naive
-    * `array(array_min(transform(shingles, …)) * numHashes)` duplicates the
-    * shingle expression numHashes times in one projection; Catalyst's
-    * CollapseProject/CSE does not reliably dedupe it and the plan goes
-    * O(numHashes × tokens) per row.) */
-  def minHashSignature(text: Column, numHashes: Int = 32,
-                       shingleSize: Int = 3): Column = {
-    val shingles = TextOps.wordShingleHashes(text, shingleSize)
-    val init = transform(sequence(lit(1), lit(numHashes)),
-      _ => lit(Long.MaxValue))
-    aggregate(shingles, init, (acc, s) =>
-      zip_with(acc,
-        transform(sequence(lit(0), lit(numHashes - 1)), i => xxhash64(s, i)),
-        (a, h) => least(a, h)))
-  }
-
-  /** md5-derived MinHash signature — cross-engine recomputable (any SQL
-    * engine with md5 can rebuild it, which is how the DuckDB oracle checks
-    * t03 end to end): x = first 32 bits of md5(shingle), then the classic
-    * universal family h_i(x) = (a_i*x + b_i) mod (2^31-1) with
-    * deterministic a_i = 2654435761*(i+1) mod p, b_i = 40503*(i+1) mod p.
-    * All arithmetic stays under 2^63 so Java long and SQL BIGINT agree.
-    * The xxhash64 kernel ([[minHashLshCandidates]]) stays the scale path. */
-  def minHashSignatureMd5(text: Column, numHashes: Int = 32,
-                          shingleSize: Int = 3): Column = {
-    val P = 2147483647L
-    val xs = transform(TextOps.wordShingles(text, shingleSize),
-      s => TextOps.md5U32(s))
-    val init = transform(sequence(lit(1), lit(numHashes)),
-      _ => lit(Long.MaxValue))
-    aggregate(xs, init, (acc, x) =>
-      zip_with(acc,
-        transform(sequence(lit(0), lit(numHashes - 1)), i =>
-          (((lit(2654435761L) * (i + 1)) % P) * x +
-            ((lit(40503L) * (i + 1)) % P)) % P),
-        (a, h) => least(a, h)))
-  }
-
-  /** [[minHashLshCandidates]] over the md5-derived signature, with band
-    * buckets keyed by md5 of the comma-joined band minima (a hash both
-    * engines can recompute, unlike xxhash64). Signature computed by the
-    * native codegen'd kernel (graft.functions.MinHashSigMd5Expr), which is
-    * bit-identical to [[minHashSignatureMd5]] — the interpreted HOF
-    * formulation kept as the cross-check reference (TextDedupSpec). */
-  def minHashLshCandidatesMd5(docs: DataFrame, idCol: String = "doc_id",
-                              textCol: String = "text", bands: Int = 8,
-                              rowsPerBand: Int = 4,
-                              shingleSize: Int = 3): DataFrame = {
-    val sig = graft.functions.GraftFunctions.minhash_sig_md5(col(textCol),
-      bands * rowsPerBand, shingleSize)
-    val banded = docs
-      .select(col(idCol).as("id"), sig.as("sig"))
-      .select(col("id"), posexplode(array(
-        (0 until bands).map(b => md5(array_join(
-          transform(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
-            e => e.cast("string")), ","))): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-      // the self-join's two branches would otherwise each re-run the
-      // signature kernel over the corpus; the band frame is ~10x smaller
-      // than the corpus (id + digest per band), so materialize it once
-      .localCheckpoint()
-    val l = banded.alias("l")
-    val r = banded.alias("r")
-    l.join(r,
-        col("l.band") === col("r.band") &&
-        col("l.band_hash") === col("r.band_hash") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-  }
-
   /** MinHash-LSH near-duplicate candidate pairs.
     *
     * signature -> split into `bands` bands of `rowsPerBand` -> hash each
@@ -215,21 +138,25 @@ object Dedup {
     * 8 bands x 4 rows, J=0.8 pairs are caught w.p. ~97%.
     * The band-bucket join is the only shuffle over pairs; fan-out is bounded
     * by bucket size, never n^2.
-    */
+    *
+    * The signature is a native codegen'd kernel (one JVM loop per row,
+    * no per-shingle array allocation). `md5Keys` selects the
+    * cross-engine family: the md5-derived signature
+    * (graft.functions.MinHashSigMd5Expr) with band buckets keyed by md5
+    * of the comma-joined band minima, both of which the DuckDB oracle
+    * recomputes for t03. The default xxhash64 family is the scale path.
+    * The interpreted HOF formulations of both signatures are the
+    * references TextDedupSpec pins the kernels against
+    * (graft.functions.ReferenceKernels). */
   def minHashLshCandidates(docs: DataFrame, idCol: String = "doc_id",
                            textCol: String = "text", bands: Int = 8,
-                           rowsPerBand: Int = 4,
-                           shingleSize: Int = 3): DataFrame = {
-    // native codegen'd kernel (graft.functions.MinHashSigExpr): one JVM
-    // loop per row, no per-shingle array allocation; the HOF
-    // minHashSignature stays as the pure-functions._ reference path
-    val sig = graft.functions.GraftFunctions.minhash_sig(col(textCol),
-      bands * rowsPerBand, shingleSize)
+                           rowsPerBand: Int = 4, shingleSize: Int = 3,
+                           md5Keys: Boolean = false): DataFrame = {
     val banded = docs
-      .select(col(idCol).as("id"), sig.as("sig"))
-      .select(col("id"), posexplode(array(
-        (0 until bands).map(b =>
-          xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand), lit(b))): _*)))
+      .select(col(idCol).as("id"), gateSig(col(textCol), bands, rowsPerBand,
+        shingleSize, md5Keys).as("sig"))
+      .select(col("id"), posexplode(
+        bandKeys(col("sig"), bands, rowsPerBand, md5Keys)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
       // the self-join's two branches would otherwise each re-run the
       // signature kernel over the corpus; the band frame is ~10x smaller
@@ -417,22 +344,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("__j"), 4).as("jaccard"))
   }
 
-  /** Attach a 64-bit simhash column via the native codegen'd kernel
-    * (graft.functions.SimHash64Expr). */
-  def withSimHash(df: DataFrame, textCol: String = "text",
-                  outCol: String = "simhash"): DataFrame =
-    df.withColumn(outCol,
-      graft.functions.GraftFunctions.simhash64(col(textCol), 2))
-
-  /** Attach the md5-derived simhash via the native codegen'd kernel
-    * (graft.functions.SimHash64Md5Expr, bit-identical to the HOF
-    * formulation TextDedupSpec keeps as its reference). The xxhash64
-    * kernel stays the scale path. */
-  def withSimHashMd5(df: DataFrame, textCol: String = "text",
-                     outCol: String = "simhash"): DataFrame =
-    df.withColumn(outCol,
-      graft.functions.GraftFunctions.simhash64_md5(col(textCol), 2))
-
   /** A document has at least one word-bigram shingle iff it has >= 2
     * tokens (every 2-token window passes wordShingles' size filter, empty
     * tokens included) — checked with a plain codegen'd split instead of
@@ -443,32 +354,26 @@ object Dedup {
   /** SimHash near-dup candidates: split the 64-bit hash into `blocks`
     * blocks; docs sharing any block collide (covers Hamming distance
     * <= blocks-1 by pigeonhole). Returns pairs with exact Hamming distance
-    * <= maxHamming. */
+    * <= maxHamming. The sketch is a native codegen'd kernel over word
+    * bigrams; `md5Keys` selects the md5-derived sketch
+    * (graft.functions.SimHash64Md5Expr), which the DuckDB oracle
+    * recomputes for t05, over the default xxhash64 scale family. */
   def simHashCandidates(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text", blocks: Int = 4,
-                        maxHamming: Int = 3): DataFrame = {
-    val base = withSimHash(
-        docs.select(col(idCol).as("id"), col(textCol).as("__text"))
-          .filter(hasBigram(col("__text"))),
-        "__text", "sh")
-      .select(col("id"), col("sh"))
-    blockCandidates(base, blocks, maxHamming)
-  }
-
-  /** [[simHashCandidates]] over the md5-derived sketch (oracle path). */
-  def simHashCandidatesMd5(docs: DataFrame, idCol: String = "doc_id",
-                           textCol: String = "text", blocks: Int = 4,
-                           maxHamming: Int = 3): DataFrame = {
+                        maxHamming: Int = 3,
+                        md5Keys: Boolean = false): DataFrame = {
+    val text = col("__text")
+    val sketch =
+      if (md5Keys) graft.functions.GraftFunctions.simhash64_md5(text, 2)
+      else graft.functions.GraftFunctions.simhash64(text, 2)
     // docs without a single word-bigram have NO features: their sketch
     // would be the all-zero vote default and every such doc would collide
     // in every block (a degenerate candidate clique the oracle rightly
     // excludes) — drop them before sketching, mirroring the oracle's
     // empty-shingle-set semantics
-    val base = withSimHashMd5(
-        docs.select(col(idCol).as("id"), col(textCol).as("__text"))
-          .filter(hasBigram(col("__text"))),
-        "__text", "sh")
-      .select(col("id"), col("sh"))
+    val base = docs.select(col(idCol).as("id"), col(textCol).as("__text"))
+      .filter(hasBigram(text))
+      .select(col("id"), sketch.as("sh"))
     blockCandidates(base, blocks, maxHamming)
   }
 
@@ -541,7 +446,7 @@ object Dedup {
     * untouched sentinel vector, which would declare every short doc a
     * near-dup of every other. `md5Keys` selects the cross-engine
     * (DuckDB-recomputable) hash family; the xxhash64 family is the
-    * scale path — same twin discipline as the candidate generators. */
+    * scale path — the same argument every dedup operator takes. */
   private[graft] def gateBands(docs: DataFrame, idCol: String, textCol: String,
                         bands: Int, rowsPerBand: Int, shingleSize: Int,
                         md5Keys: Boolean): DataFrame = {
@@ -583,7 +488,7 @@ object Dedup {
   private def shingles(text: Column, shingleSize: Int): Column =
     graft.functions.GraftFunctions.ws_parts(text) >= shingleSize
 
-  /** The near-dup gate's MinHash signature of `text`. */
+  /** The MinHash signature of `text` in the `md5Keys` hash family. */
   private def gateSig(text: Column, bands: Int, rowsPerBand: Int,
                       shingleSize: Int, md5Keys: Boolean): Column =
     if (md5Keys) graft.functions.GraftFunctions.minhash_sig_md5(
@@ -592,83 +497,66 @@ object Dedup {
       text, bands * rowsPerBand, shingleSize)
 
   /** Element b: band b's key over the signature's rows
-    * [b·rowsPerBand, (b+1)·rowsPerBand). */
+    * [b·rowsPerBand, (b+1)·rowsPerBand). The md5 key joins the band's
+    * decimal strings through an array cast, not a per-element lambda:
+    * a lambda falls back to interpreted evaluation and keeps its
+    * operator out of whole-stage codegen (PlanSpec pins this). */
   private[graft] def bandKeys(sig: Column, bands: Int, rowsPerBand: Int,
                               md5Keys: Boolean): Column =
     array((0 until bands).map { b =>
-      if (md5Keys) md5(array_join(
-        transform(slice(sig, b * rowsPerBand + 1, rowsPerBand),
-          e => e.cast("string")), ","))
-      else xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand), lit(b))
+      val band = slice(sig, b * rowsPerBand + 1, rowsPerBand)
+      if (md5Keys) md5(array_join(band.cast("array<string>"), ","))
+      else xxhash64(band, lit(b))
     }: _*)
 
   /** Static band index for the streaming/batch near-dup ingest gate:
     * the distinct (band, band_hash) set of a reference corpus. Build
     * once, `localCheckpoint()` (or persist) it, and screen every
     * incoming batch against it with [[nearDupFlag]] — the stream-static
-    * shape of the ingest dedup gate. xxhash64 scale family; the
-    * [[nearDupIndexMd5]] twin is the oracle-recomputable path. */
+    * shape of the ingest dedup gate. xxhash64 scale family by default;
+    * `md5Keys` builds the oracle-recomputable index (the t46 path), and
+    * the probe must use the same family. */
   def nearDupIndex(corpus: DataFrame, idCol: String = "doc_id",
                    textCol: String = "text", bands: Int = 8,
-                   rowsPerBand: Int = 4, shingleSize: Int = 3): DataFrame =
+                   rowsPerBand: Int = 4, shingleSize: Int = 3,
+                   md5Keys: Boolean = false): DataFrame =
     gateBands(corpus, idCol, textCol, bands, rowsPerBand, shingleSize,
-        md5Keys = false)
-      .select(col("band"), col("band_hash")).distinct()
-
-  /** md5-family twin of [[nearDupIndex]] (DuckDB-recomputable — the t46
-    * oracle path). */
-  def nearDupIndexMd5(corpus: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text", bands: Int = 8,
-                      rowsPerBand: Int = 4,
-                      shingleSize: Int = 3): DataFrame =
-    gateBands(corpus, idCol, textCol, bands, rowsPerBand, shingleSize,
-        md5Keys = true)
+        md5Keys)
       .select(col("band"), col("band_hash")).distinct()
 
   /** The k Bloom bit positions of a (band, band_hash) pair — a pure
     * column expression, so the index BUILD ([[nearDupIndexBloom]]) and
     * the probe ([[nearDupFlagBloomed]]) provably derive positions with
-    * the same function: pos_i = xxhash64(band, band_hash, i) mod m. */
+    * the same function: pos_i = xxhash64(band, band_hash, i) mod m, or
+    * with `md5Keys` (cross-engine recomputable — the t56 oracle replays
+    * every position) pos_i = first-32-bits-of-md5(band ':' band_hash
+    * ':' i) mod m. */
   private[graft] def bloomPositions(band: Column, bandHash: Column, m: Int,
-                             k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => pmod(xxhash64(band, bandHash, i), lit(m.toLong)))
+                                    k: Int, md5Keys: Boolean): Column =
+    transform(sequence(lit(0), lit(k - 1)), i => pmod(
+      if (md5Keys) TextOps.md5U32(concat_ws(":", band.cast("string"),
+        bandHash.cast("string"), i.cast("string")))
+      else xxhash64(band, bandHash, i),
+      lit(m.toLong)))
 
-  /** md5-family twin of [[bloomPositions]] — cross-engine recomputable
-    * (the t56 oracle replays every position):
-    * pos_i = first-32-bits-of-md5(band ':' band_hash ':' i) mod m. */
-  private[graft] def bloomPositionsMd5(band: Column, bandHash: Column,
-                                       m: Int, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => pmod(TextOps.md5U32(concat_ws(":", band.cast("string"),
-        bandHash.cast("string"), i.cast("string"))), lit(m.toLong)))
-
-  private def bloomOf(index: DataFrame, m: Int,
-                      pos: (Column, Column) => Column): DataFrame = {
+  /** Bloom summary of a [[nearDupIndex]]: one m-element boolean vector
+    * (1-row frame, default 1 MB at m = 2^20) covering every (band,
+    * band_hash) the index holds — the broadcastable pre-filter for
+    * miss-dominated ingest streams. Build once with the index; k, m and
+    * `md5Keys` (the index's family; md5 is the t56 oracle path, where
+    * DuckDB rebuilds the same position set) must match the probe side. */
+  def nearDupIndexBloom(index: DataFrame, m: Int = 1 << 20, k: Int = 4,
+                        md5Keys: Boolean = false): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
     index
-      .select(explode(pos(col("band"), col("band_hash"))).as("p"))
+      .select(explode(bloomPositions(col("band"), col("band_hash"), m, k,
+        md5Keys)).as("p"))
       .distinct()
       .as[Long]
       .select(graft.functions.BloomBits.bits(m))
       .toDF("bf")
   }
-
-  /** Bloom summary of a [[nearDupIndex]]: one m-element boolean vector
-    * (1-row frame, default 1 MB at m = 2^20) covering every (band,
-    * band_hash) the index holds — the broadcastable pre-filter for
-    * miss-dominated ingest streams. Build once with the index; k and m
-    * must match the probe side. */
-  def nearDupIndexBloom(index: DataFrame, m: Int = 1 << 20,
-                        k: Int = 4): DataFrame =
-    bloomOf(index, m, bloomPositions(_, _, m, k))
-
-  /** md5-family twin of [[nearDupIndexBloom]] over a [[nearDupIndexMd5]]
-    * (the t56 oracle path — DuckDB rebuilds the same position set). */
-  def nearDupIndexBloomMd5(index: DataFrame, m: Int = 1 << 20,
-                           k: Int = 4): DataFrame =
-    bloomOf(index, m, bloomPositionsMd5(_, _, m, k))
 
   /** [[nearDupFlag]] with a Bloom pre-filter: exploded incoming bands
     * first probe the broadcast [[nearDupIndexBloom]] vector (a map-side
@@ -678,44 +566,21 @@ object Dedup {
     * candidate bands at the cost of the Bloom's false-positive rate,
     * which only ever lets EXTRA bands through to the exact join. A
     * Bloom filter has no false negatives, so the flags are IDENTICAL to
-    * [[nearDupFlag]]'s for any m — the spec pins that equality. */
+    * [[nearDupFlag]]'s for any m — the spec pins that equality.
+    * `md5Keys` takes band keys AND bloom positions from the md5 family:
+    * the t56 oracle replays the bloom build, the k-position probe and
+    * the exact semi-join end to end. */
   def nearDupFlagBloomed(docs: DataFrame, index: DataFrame,
                          bloom: DataFrame,
                          idCol: String = "doc_id", textCol: String = "text",
                          bands: Int = 8, rowsPerBand: Int = 4,
                          shingleSize: Int = 3, m: Int = 1 << 20,
-                         k: Int = 4): DataFrame =
-    nearDupFlagBloomedImpl(docs, index, bloom, idCol, textCol, bands,
-      rowsPerBand, shingleSize, bloomPositions(_, _, m, k),
-      md5Keys = false)
-
-  /** md5-family twin of [[nearDupFlagBloomed]] (band keys AND bloom
-    * positions from the md5 family — the t56 oracle replays the bloom
-    * build, the k-position probe and the exact semi-join end to end;
-    * flags still equal [[nearDupFlagMd5]]'s by the no-false-negatives
-    * argument). */
-  def nearDupFlagBloomedMd5(docs: DataFrame, index: DataFrame,
-                            bloom: DataFrame,
-                            idCol: String = "doc_id",
-                            textCol: String = "text",
-                            bands: Int = 8, rowsPerBand: Int = 4,
-                            shingleSize: Int = 3, m: Int = 1 << 20,
-                            k: Int = 4): DataFrame =
-    nearDupFlagBloomedImpl(docs, index, bloom, idCol, textCol, bands,
-      rowsPerBand, shingleSize, bloomPositionsMd5(_, _, m, k),
-      md5Keys = true)
-
-  private def nearDupFlagBloomedImpl(docs: DataFrame, index: DataFrame,
-                                     bloom: DataFrame, idCol: String,
-                                     textCol: String, bands: Int,
-                                     rowsPerBand: Int, shingleSize: Int,
-                                     pos: (Column, Column) => Column,
-                                     md5Keys: Boolean): DataFrame = {
+                         k: Int = 4, md5Keys: Boolean = false): DataFrame = {
     val pre = gateBands(docs, idCol, textCol, bands, rowsPerBand,
         shingleSize, md5Keys)
       .crossJoin(broadcast(bloom))
       .filter(forall(
-        pos(col("band"), col("band_hash")),
+        bloomPositions(col("band"), col("band_hash"), m, k, md5Keys),
         p => element_at(col("bf"), (p + 1).cast("int"))))
       .drop("bf")
     val hits = pre.join(index, Seq("band", "band_hash"), "left_semi")
@@ -729,8 +594,9 @@ object Dedup {
   /** Near-dup ingest gate: every `docs` row back, plus an `is_near_dup`
     * 0/1 flag — 1 when any of the doc's MinHash bands collides with the
     * static corpus index ([[nearDupIndex]]). Docs too short to shingle
-    * pass with flag 0 (no evidence either way). Band params must match
-    * the ones the index was built with.
+    * pass with flag 0 (no evidence either way). Band params and
+    * `md5Keys` must match the ones the index was built with (md5: the
+    * t46 oracle path).
     *
     * Scale shape: when the index fits
     * `spark.sql.autoBroadcastJoinThreshold` (the size at which a join
@@ -749,22 +615,8 @@ object Dedup {
   def nearDupFlag(docs: DataFrame, index: DataFrame,
                   idCol: String = "doc_id", textCol: String = "text",
                   bands: Int = 8, rowsPerBand: Int = 4,
-                  shingleSize: Int = 3): DataFrame =
-    nearDupFlagImpl(docs, index, idCol, textCol, bands, rowsPerBand,
-      shingleSize, md5Keys = false)
-
-  /** md5-family twin of [[nearDupFlag]] (the t46 oracle path). */
-  def nearDupFlagMd5(docs: DataFrame, index: DataFrame,
-                     idCol: String = "doc_id", textCol: String = "text",
-                     bands: Int = 8, rowsPerBand: Int = 4,
-                     shingleSize: Int = 3): DataFrame =
-    nearDupFlagImpl(docs, index, idCol, textCol, bands, rowsPerBand,
-      shingleSize, md5Keys = true)
-
-  private def nearDupFlagImpl(docs: DataFrame, index: DataFrame,
-                              idCol: String, textCol: String, bands: Int,
-                              rowsPerBand: Int, shingleSize: Int,
-                              md5Keys: Boolean): DataFrame =
+                  shingleSize: Int = 3,
+                  md5Keys: Boolean = false): DataFrame =
     if (lookupFits(index))
       docs.select(docs.columns.map(col) :+ nearDupLookup(col(textCol),
         index, bands, rowsPerBand, shingleSize, md5Keys)

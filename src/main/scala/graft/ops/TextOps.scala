@@ -34,41 +34,22 @@ object TextOps {
   def qualityScore(text: Column): Column =
     graft.functions.GraftFunctions.quality_score(text)
 
-  /** Word n-gram shingles, in position order. Built with the same
-    * chained zip_with-over-shifted-slices discipline as
-    * [[wordShingleHashes]]: every lambda reads ONLY its input elements.
-    * (The earlier transform-over-positions formulation captured `toks`
-    * inside its lambda via slice(toks, i+1, n), and a captured outer
-    * expression re-evaluates per element — every shingle position
-    * re-split the whole text, which benched ~5x slower on the corpus
-    * bigram count.) zip_with pads the shorter side with null and
-    * concat_ws skips nulls, so the trailing (n-1) short entries are cut
-    * by the final slice instead of a per-shingle token-count filter —
-    * output is identical to the old formulation. */
+  /** Word n-gram shingles, in position order. Built by chained
+    * zip_with over shifted slices: every lambda reads ONLY its input
+    * elements. (The earlier transform-over-positions formulation
+    * captured `toks` inside its lambda via slice(toks, i+1, n), and a
+    * captured outer expression re-evaluates per element — every
+    * shingle position re-split the whole text, which benched ~5x slower
+    * on the corpus bigram count.) zip_with pads the shorter side with
+    * null and concat_ws skips nulls, so the trailing (n-1) short entries
+    * are cut by the final slice instead of a per-shingle token-count
+    * filter — output is identical to the old formulation. */
   def wordShingles(text: Column, n: Int): Column = {
     val toks = split(lower(trim(text)), "\\s+")
     val rolled = (2 to n).foldLeft(toks) { (acc, k) =>
       zip_with(acc, slice(toks, k, 1 << 30), (a, b) => concat_ws(" ", a, b))
     }
     slice(rolled, lit(1), greatest(size(toks) - (n - 1), lit(0)))
-  }
-
-  /** Word n-gram shingles as 64-bit hashes, built WITHOUT materializing the
-    * shingle strings: one multi-argument xxhash64 over the n tokens of each
-    * window. At corpus scale the string-free form is several times cheaper
-    * than hashing concatenated shingles (no per-shingle concat/alloc). */
-  def wordShingleHashes(text: Column, n: Int): Column = {
-    // Chained zip_with over shifted slices: every lambda reads ONLY its
-    // input elements. A lambda capturing an outer expression (e.g.
-    // element_at(split(...), i+k)) re-evaluates that expression per array
-    // element — per-shingle re-splits made that formulation ~3x slower.
-    val toks = split(lower(trim(text)), "\\s+")
-    val rolled = (2 to n).foldLeft(transform(toks, t => xxhash64(t))) {
-      (acc, k) => zip_with(acc, slice(toks, k, 1 << 30),
-        (a, b) => xxhash64(a, b))
-    }
-    array_distinct(slice(rolled, lit(1),
-      greatest(size(toks) - (n - 1), lit(0))))
   }
 
   /** Stopword-profile language ID: scores each candidate language by hits
@@ -327,101 +308,17 @@ object TextOps {
     * digest-keyed semi-join; coverage is a doc-keyed aggregate over
     * FLAGGED rows only (boilerplate-sized, bounded per doc by token
     * count); and document text moves exactly once, in the final
-    * doc-keyed join that projects kept tokens by index. */
+    * doc-keyed join that projects kept tokens by index.
+    *
+    * `md5Keys` keys the grams by hash60 (md5-derived, so DuckDB
+    * recomputes the digests: the t54/t122 oracle path); the default
+    * xxhash64 family is the scale path. Family parity on fixture
+    * corpora is spec-guarded (TextDedupSpec). */
   def repeatedNgramRemoval(docs: DataFrame, n: Int = 5, minDocs: Int = 2,
                            idCol: String = "doc_id",
                            textCol: String = "text",
-                           keepFirst: Boolean = false): DataFrame =
-    repeatedNgramRemovalImpl(docs, n, minDocs, idCol, textCol,
-      md5Keys = false, keepFirst = keepFirst)
-
-  /** md5-family twin of [[repeatedNgramRemoval]] (the t54 oracle path —
-    * DuckDB recomputes the same digests). The xxhash64 family is the
-    * scale path; family parity on fixture corpora is spec-guarded
-    * (TextDedupSpec). */
-  def repeatedNgramRemovalMd5(docs: DataFrame, n: Int = 5,
-                              minDocs: Int = 2, idCol: String = "doc_id",
-                              textCol: String = "text",
-                              keepFirst: Boolean = false): DataFrame =
-    repeatedNgramRemovalImpl(docs, n, minDocs, idCol, textCol,
-      md5Keys = true, keepFirst = keepFirst)
-
-  /** Cross-document duplicated-SPAN report — the audit artifact next to
-    * [[repeatedNgramRemoval]]'s excision (the t61 decontamination-report
-    * discipline applied to dedup): for every document, the maximal runs
-    * of tokens covered by word `n`-grams that occur in >= `minDocs`
-    * distinct documents. Spans are maximal unions of the covered
-    * intervals [start, start+n-1]: interval merging over sorted starts
-    * (a new span opens only where a start clears the running covered
-    * end by more than one), NOT consecutive-start islands — two flagged
-    * starts 2 apart with an unflagged start between them still overlap
-    * in coverage and must report as ONE span.
-    *
-    * Output: (doc_id, span_start, span_end, span_tokens, n_windows) —
-    * 1-based inclusive token positions, `n_windows` = flagged window
-    * starts merged into the span. What it's for: sizing a dedup BEFORE
-    * running it (how much mass would keepFirst cut, which sources
-    * carry it), and pinning down WHERE the duplication sits for audit.
-    *
-    * Scale shape: the same digest-keyed aggregate + semi-join as the
-    * removal (nothing new shuffles corpus-wide); the islands window
-    * partitions by doc_id — bounded by one document's own flagged
-    * windows, never corpus-sized. */
-  def duplicateSpans(docs: DataFrame, n: Int = 5, minDocs: Int = 2,
-                     idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame =
-    duplicateSpansImpl(docs, n, minDocs, idCol, textCol, md5Keys = false)
-
-  /** md5-family twin of [[duplicateSpans]] (the t123 oracle path). */
-  def duplicateSpansMd5(docs: DataFrame, n: Int = 5, minDocs: Int = 2,
-                        idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame =
-    duplicateSpansImpl(docs, n, minDocs, idCol, textCol, md5Keys = true)
-
-  private def duplicateSpansImpl(docs: DataFrame, n: Int, minDocs: Int,
-                                 idCol: String, textCol: String,
-                                 md5Keys: Boolean): DataFrame = {
-    require(n > 0, "shingle width must be positive")
-    require(minDocs > 1, "minDocs < 2 would flag every gram")
-    // one materialization, two consumers — same rationale as the
-    // removal's gram checkpoint above
-    val grams = gramPositionRows(docs, n, idCol, textCol, md5Keys)
-      .localCheckpoint()
-    val flagged = grams.groupBy(col("dg"))
-      .agg(count_distinct(col("doc_id")).as("__df"))
-      .filter(col("__df") >= minDocs)
-      .select(col("dg"))
-    // one row per flagged window start (a start can carry only one
-    // digest, so the semi-join cannot duplicate it); interval merging:
-    // a start opens a NEW span only when it clears the running covered
-    // end (max prior start + n - 1) by more than one — running-sum of
-    // the break flag is the span id
-    val starts = grams.join(flagged, Seq("dg"), "left_semi")
-      .select(col("doc_id"), (col("pos") + 1).as("p")) // 1-based
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("p"))
-    val prevEnd = max(col("p"))
-      .over(w.rowsBetween(Window.unboundedPreceding, -1)) + (n - 1)
-    starts
-      .withColumn("__new",
-        when(prevEnd.isNull || col("p") > prevEnd + 1, 1).otherwise(0))
-      .withColumn("__isl", sum(col("__new"))
-        .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col("doc_id"), col("__isl"))
-      .agg(min(col("p")).as("span_start"),
-        (max(col("p")) + (n - 1)).as("span_end"),
-        count(lit(1)).as("n_windows"))
-      .select(col("doc_id"), col("span_start").cast("long").as("span_start"),
-        col("span_end").cast("long").as("span_end"),
-        (col("span_end") - col("span_start") + 1).cast("long")
-          .as("span_tokens"),
-        col("n_windows").cast("long").as("n_windows"))
-  }
-
-  private def repeatedNgramRemovalImpl(docs: DataFrame, n: Int,
-                                       minDocs: Int, idCol: String,
-                                       textCol: String,
-                                       md5Keys: Boolean,
-                                       keepFirst: Boolean = false): DataFrame = {
+                           keepFirst: Boolean = false,
+                           md5Keys: Boolean = false): DataFrame = {
     require(n > 0, "shingle width must be positive")
     require(minDocs > 1, "minDocs < 2 would flag every gram")
     // materialized once — the gram frame feeds TWO branches (the
@@ -497,6 +394,70 @@ object TextOps {
           p => element_at(col("__toks"), p)), " ").as("clean_text"),
         size(col("__kept")).cast("long").as("n_kept"),
         size(col("__cov")).cast("long").as("n_removed"))
+  }
+
+  /** Cross-document duplicated-SPAN report — the audit artifact next to
+    * [[repeatedNgramRemoval]]'s excision (the t61 decontamination-report
+    * discipline applied to dedup): for every document, the maximal runs
+    * of tokens covered by word `n`-grams that occur in >= `minDocs`
+    * distinct documents. Spans are maximal unions of the covered
+    * intervals [start, start+n-1]: interval merging over sorted starts
+    * (a new span opens only where a start clears the running covered
+    * end by more than one), NOT consecutive-start islands — two flagged
+    * starts 2 apart with an unflagged start between them still overlap
+    * in coverage and must report as ONE span.
+    *
+    * Output: (doc_id, span_start, span_end, span_tokens, n_windows) —
+    * 1-based inclusive token positions, `n_windows` = flagged window
+    * starts merged into the span. What it's for: sizing a dedup BEFORE
+    * running it (how much mass would keepFirst cut, which sources
+    * carry it), and pinning down WHERE the duplication sits for audit.
+    *
+    * Scale shape: the same digest-keyed aggregate + semi-join as the
+    * removal (nothing new shuffles corpus-wide); the islands window
+    * partitions by doc_id — bounded by one document's own flagged
+    * windows, never corpus-sized.
+    *
+    * `md5Keys` picks the gram-digest family as in
+    * [[repeatedNgramRemoval]] (md5: the t123 oracle path). */
+  def duplicateSpans(docs: DataFrame, n: Int = 5, minDocs: Int = 2,
+                     idCol: String = "doc_id",
+                     textCol: String = "text",
+                     md5Keys: Boolean = false): DataFrame = {
+    require(n > 0, "shingle width must be positive")
+    require(minDocs > 1, "minDocs < 2 would flag every gram")
+    // one materialization, two consumers — same rationale as the
+    // removal's gram checkpoint above
+    val grams = gramPositionRows(docs, n, idCol, textCol, md5Keys)
+      .localCheckpoint()
+    val flagged = grams.groupBy(col("dg"))
+      .agg(count_distinct(col("doc_id")).as("__df"))
+      .filter(col("__df") >= minDocs)
+      .select(col("dg"))
+    // one row per flagged window start (a start can carry only one
+    // digest, so the semi-join cannot duplicate it); interval merging:
+    // a start opens a NEW span only when it clears the running covered
+    // end (max prior start + n - 1) by more than one — running-sum of
+    // the break flag is the span id
+    val starts = grams.join(flagged, Seq("dg"), "left_semi")
+      .select(col("doc_id"), (col("pos") + 1).as("p")) // 1-based
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("p"))
+    val prevEnd = max(col("p"))
+      .over(w.rowsBetween(Window.unboundedPreceding, -1)) + (n - 1)
+    starts
+      .withColumn("__new",
+        when(prevEnd.isNull || col("p") > prevEnd + 1, 1).otherwise(0))
+      .withColumn("__isl", sum(col("__new"))
+        .over(w.rowsBetween(Window.unboundedPreceding, 0)))
+      .groupBy(col("doc_id"), col("__isl"))
+      .agg(min(col("p")).as("span_start"),
+        (max(col("p")) + (n - 1)).as("span_end"),
+        count(lit(1)).as("n_windows"))
+      .select(col("doc_id"), col("span_start").cast("long").as("span_start"),
+        col("span_end").cast("long").as("span_end"),
+        (col("span_end") - col("span_start") + 1).cast("long")
+          .as("span_tokens"),
+        col("n_windows").cast("long").as("n_windows"))
   }
 
   /** Deterministic corpus shard-shuffle — the training-order
@@ -1770,8 +1731,8 @@ object TextOps {
     // reads the INDEX size (always past the floor), so a streaming
     // microbatch probe would pay the exchanges EVERY trigger for a
     // fan-out a ~75 KB probe never produces — the round-14 s12 floor
-    // lesson; the streaming runner opts out at the call site (the
-    // round-16 x63 discipline). Dev-lens A/B read s12 flat either way
+    // lesson; [[bm25ScreenFlag]], the streaming runner's screen, opts
+    // out at its call (the round-16 x63 discipline). Dev-lens A/B read s12 flat either way
     // (cold-JVM floor dominates a single-key stream run); the opt-out
     // is kept on the floor principle, not a measured win.
     val want = queries.sparkSession.sparkContext.defaultParallelism
@@ -1828,16 +1789,15 @@ object TextOps {
   def bm25ScreenFlag(docs: DataFrame, index: DataFrame, tau: Double,
                      minLen: Int = 3, idCol: String = "doc_id",
                      textCol: String = "text",
-                     exactSums: Boolean = true,
-                     pinWidth: Boolean = false): DataFrame = {
-    // pinWidth defaults OFF for the screen shape (round-17 full-bench
-    // A/B): its query side is a corpus-sized incoming batch, so the
-    // postings fan-out is bytes-large and AQE keeps natural width
-    // anyway (t84's pair stage already ran 32-wide) — the pin only
-    // added exchanges (t84 2.77 -> 3.11 s). The few-query topK probes
-    // (t78/t79: 0.74x/0.70x) keep it.
+                     exactSums: Boolean = true): DataFrame = {
+    // no width pin for the screen shape (round-17 full-bench A/B): its
+    // query side is a corpus-sized incoming batch, so the postings
+    // fan-out is bytes-large and AQE keeps natural width anyway (t84's
+    // pair stage already ran 32-wide) — the pin only added exchanges
+    // (t84 2.77 -> 3.11 s). The few-query topK probes (t78/t79:
+    // 0.74x/0.70x) keep it.
     val top = bm25Scores(docs, index, minLen, idCol, textCol, exactSums,
-      pinWidth)
+      pinWidth = false)
       .groupBy(col("__qid").as(idCol))
       .agg(max(col("__score")).as("__top"))
     docs.join(top, Seq(idCol), "left")

@@ -33,6 +33,9 @@ import scala.jdk.CollectionConverters._
   *
   *  4. session door: every main gets its session from
   *     `SparkEntry.localSession`, the one `SparkSession.builder()` site.
+  *
+  *  5. twin door: an operator under `ops/` takes its hash family as an
+  *     `md5Keys` argument; no `…Md5` def duplicates an entry point.
   */
 class LintSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
@@ -142,6 +145,16 @@ class LintSpec extends SparkSpec {
     assert(found == Map("SparkEntry.scala" -> 1),
       s"SparkSession.builder() sites: found $found — build sessions with " +
         "SparkEntry.localSession(cpus, conf) instead")
+  }
+
+  test("twin door: no operator under ops/ defines an …Md5 twin — the " +
+      "hash family is the md5Keys argument") {
+    val twin = "\\bdef \\w+Md5\\(".r
+    val found = sitesPerFile((raw, _) => twin.findFirstIn(raw).isDefined)
+      .filter(_._1.startsWith("ops/"))
+    assert(found.isEmpty,
+      s"…Md5 defs under ops/: $found — take `md5Keys: Boolean = false` " +
+        "as the last parameter of the one entry point instead")
   }
 
   /** Per file under src/main/scala/graft (path relative to it), the

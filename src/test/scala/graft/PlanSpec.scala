@@ -626,10 +626,40 @@ class PlanSpec extends SparkSpec {
       s"bruteForceTopK re-spread its stream side:\n${pBrute.take(1500)}")
     val docs = graft.etl.Tables.documents(spark, d)
       .select(col("doc_id"), col("text"))
-    val idx2 = Dedup.nearDupIndexMd5(docs)
-    val pGate = Dedup.nearDupFlagMd5(docs, idx2)
+    val idx2 = Dedup.nearDupIndex(docs, md5Keys = true)
+    val pGate = Dedup.nearDupFlag(docs, idx2, md5Keys = true)
       .queryExecution.executedPlan.toString
     assert(!pGate.contains("RoundRobinPartitioning"),
       s"gateBands re-spread its corpus:\n${pGate.take(1500)}")
+  }
+
+  test("t56: every md5 band key of the final adaptive plan is computed " +
+      "inside whole-stage codegen (no per-element lambda in the key)") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayJoin, Md5}
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object stages extends AdaptiveSparkPlanHelper
+    val df = SparkEntry.queries("t56_neardup_gate_bloom")(spark, d)
+    df.collect()
+    val top = df.queryExecution.executedPlan
+    val keyed = stages.collect(top) {
+      case p if p.expressions.exists(_.exists {
+        case m: Md5 => m.child.exists(_.isInstanceOf[ArrayJoin])
+        case _ => false
+      }) => p
+    }
+    // the keys sit in the band explode (Generate); a codegen stage's
+    // fused operators end at its input adapters
+    def fused(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _ => p.children.flatMap(fused)
+    })
+    val inside = stages.collect(top) { case w: WholeStageCodegenExec => w }
+      .flatMap(w => fused(w.child))
+    assert(keyed.nonEmpty, s"no md5 band key in the plan:\n$top")
+    val out = keyed.filterNot(k => inside.exists(_ eq k))
+    assert(out.isEmpty, s"md5 band keys outside whole-stage codegen: " +
+      s"${out.map(_.nodeName).mkString(", ")}\n$top")
   }
 }

@@ -50,7 +50,8 @@ class TextDedupSpec extends SparkSpec {
   test("minhash signature: identical docs match, disjoint docs don't") {
     val df = Seq(("a b c d e f g h"), ("a b c d e f g h"), ("q r s t u v w x"))
       .toDF("text")
-      .select(Dedup.minHashSignature(col("text"), 16, 2).as("sig"))
+      .select(graft.functions.ReferenceKernels.minHashSignature(
+        col("text"), 16, 2).as("sig"))
     val sigs = df.collect().map(_.getSeq[Long](0))
     assert(sigs(0) == sigs(1))
     assert(sigs(0) != sigs(2))
@@ -211,7 +212,8 @@ class TextDedupSpec extends SparkSpec {
       .select(col("text")).unionByName(edge)
     val cmp = docs.select(
       graft.functions.GraftFunctions.minhash_sig_md5(col("text"), 32, 3).as("n_sig"),
-      Dedup.minHashSignatureMd5(col("text"), 32, 3).as("h_sig"),
+      graft.functions.ReferenceKernels.minHashSignatureMd5(col("text"), 32,
+        3).as("h_sig"),
       graft.functions.GraftFunctions.simhash64_md5(col("text"), 2).as("n_sh"),
       simHash64Md5Hof(col("text")).as("h_sh"))
     assert(cmp.filter(col("n_sig") =!= col("h_sig") ||
@@ -374,13 +376,26 @@ class TextDedupSpec extends SparkSpec {
     def flags(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.select(col("doc_id"), col("is_near_dup"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val exact = flags(Dedup.nearDupFlag(incoming, idx))
     // equality must hold for a roomy filter AND a tiny, FP-heavy one —
-    // false positives only ever send extra bands to the exact join
-    for (m <- Seq(1 << 20, 1 << 10)) {
-      val bloom = Dedup.nearDupIndexBloom(idx, m = m).localCheckpoint()
-      val got = flags(Dedup.nearDupFlagBloomed(incoming, idx, bloom, m = m))
-      assert(got === exact, s"bloomed gate diverged at m=$m")
+    // false positives only ever send extra bands to the exact join; the
+    // md5 family (the t56 oracle path) obeys it against ITS exact gate,
+    // at the oracle's own (m=2^16, k=3) sizing
+    for (md5Keys <- Seq(false, true)) {
+      val ix =
+        if (md5Keys) Dedup.nearDupIndex(corpus, md5Keys = true)
+          .localCheckpoint()
+        else idx
+      val exact = flags(Dedup.nearDupFlag(incoming, ix, md5Keys = md5Keys))
+      val sizes =
+        if (md5Keys) Seq((1 << 16, 3)) else Seq((1 << 20, 4), (1 << 10, 4))
+      for ((m, k) <- sizes) {
+        val bloom = Dedup.nearDupIndexBloom(ix, m, k, md5Keys)
+          .localCheckpoint()
+        val got = flags(Dedup.nearDupFlagBloomed(incoming, ix, bloom,
+          m = m, k = k, md5Keys = md5Keys))
+        assert(got === exact,
+          s"bloomed gate diverged at m=$m, k=$k, md5Keys=$md5Keys")
+      }
     }
     // every fresh doc is a miss; with the roomy filter its 8 bands
     // should rarely survive the pre-filter — measure the cut
@@ -391,23 +406,14 @@ class TextDedupSpec extends SparkSpec {
     val total = freshBands.count()
     val surviving = freshBands.crossJoin(broadcast(bloom))
       .filter(forall(
-        Dedup.bloomPositions(col("band"), col("band_hash"), m, 4),
+        Dedup.bloomPositions(col("band"), col("band_hash"), m, 4,
+          md5Keys = false),
         p => element_at(col("bf"), (p + 1).cast("int"))))
       .count()
     info(s"bloom pre-filter: $surviving of $total miss bands survive " +
       s"to the semi-join (m=$m)")
     assert(surviving < total / 2,
       s"pre-filter failed to cut miss volume: $surviving of $total")
-    // the md5-family twin (the t56 oracle path) obeys the same
-    // no-false-negatives equality against ITS exact gate, at the
-    // oracle's own (m=2^16, k=3) sizing
-    val idxMd5 = Dedup.nearDupIndexMd5(corpus).localCheckpoint()
-    val exactMd5 = flags(Dedup.nearDupFlagMd5(incoming, idxMd5))
-    val bloomMd5 = Dedup.nearDupIndexBloomMd5(idxMd5, m = 1 << 16, k = 3)
-      .localCheckpoint()
-    val gotMd5 = flags(Dedup.nearDupFlagBloomedMd5(incoming, idxMd5,
-      bloomMd5, m = 1 << 16, k = 3))
-    assert(gotMd5 === exactMd5, "md5-family bloomed gate diverged")
   }
 
   test("repeatedNgramRemoval excises a REFLOWED license block across " +
@@ -453,8 +459,9 @@ class TextDedupSpec extends SparkSpec {
           .when(col("doc_id") % 3 === 1,
             concat(col("text"), lit(" "), lit(boiler)))
           .otherwise(col("text")).as("text"))
-    val md5Out = TextOps.repeatedNgramRemovalMd5(docs, n = 5, minDocs = 3)
-    val xxOut = TextOps.repeatedNgramRemoval(docs, n = 5, minDocs = 3)
+    val Seq(xxOut, md5Out) = Seq(false, true).map(md5Keys =>
+      TextOps.repeatedNgramRemoval(docs, n = 5, minDocs = 3,
+        md5Keys = md5Keys))
     assert(md5Out.except(xxOut).count() === 0L &&
       xxOut.except(md5Out).count() === 0L,
       "hash families disagree on survivorship")
@@ -493,12 +500,10 @@ class TextDedupSpec extends SparkSpec {
     // corpus-wide conservation: exactly one copy of the span remains
     // across the whole output
     // family parity on the real corpus at the t122 parameters
-    val md5Out = TextOps.repeatedNgramRemovalMd5(
-      graft.etl.Tables.documents(spark, "/root/testdata/sf0.001"),
-      n = 5, minDocs = 2, keepFirst = true)
-    val xxOut = TextOps.repeatedNgramRemoval(
-      graft.etl.Tables.documents(spark, "/root/testdata/sf0.001"),
-      n = 5, minDocs = 2, keepFirst = true)
+    val Seq(xxOut, md5Out) = Seq(false, true).map(md5Keys =>
+      TextOps.repeatedNgramRemoval(
+        graft.etl.Tables.documents(spark, "/root/testdata/sf0.001"),
+        n = 5, minDocs = 2, keepFirst = true, md5Keys = md5Keys))
     assert(md5Out.except(xxOut).count() === 0L &&
       xxOut.except(md5Out).count() === 0L,
       "hash families disagree under keepFirst")
@@ -540,8 +545,8 @@ class TextDedupSpec extends SparkSpec {
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(4))).toSet
     assert(t === Set((1L, 6L, 2L)), t.toString)
     // md5 family parity (the t123 oracle path)
-    val a = TextOps.duplicateSpans(docs, n = 4, minDocs = 2)
-    val b = TextOps.duplicateSpansMd5(docs, n = 4, minDocs = 2)
+    val Seq(a, b) = Seq(false, true).map(md5Keys =>
+      TextOps.duplicateSpans(docs, n = 4, minDocs = 2, md5Keys = md5Keys))
     assert(a.except(b).count() === 0L && b.except(a).count() === 0L)
   }
 
@@ -565,7 +570,7 @@ class TextDedupSpec extends SparkSpec {
     // kept = number of clusters
     val corpus = graft.etl.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"))
-    val cands = Dedup.minHashLshCandidatesMd5(corpus)
+    val cands = Dedup.minHashLshCandidates(corpus, md5Keys = true)
     val verified = Dedup.jaccardVerify(cands, corpus, threshold = 0.5)
       .select(col("id_a"), col("id_b"))
     val kept = Dedup.retainBest(corpus, verified,
@@ -662,16 +667,15 @@ class TextDedupSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def plan(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.executedPlan.toString
-    type Gate = (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame
     // the xxhash64 index is checkpointed (frozen once), the md5 one is
     // not (collected per call): both StaticCache branches
-    val families: Seq[(String, org.apache.spark.sql.DataFrame, Gate)] = Seq(
-      ("xxhash64", Dedup.nearDupIndex(corpus).localCheckpoint(),
-        (df, ix) => Dedup.nearDupFlag(df, ix)),
-      ("md5", Dedup.nearDupIndexMd5(corpus),
-        (df, ix) => Dedup.nearDupFlagMd5(df, ix)))
-    for ((family, idx, gate) <- families) {
+    for (md5Keys <- Seq(false, true)) {
+      val family = if (md5Keys) "md5" else "xxhash64"
+      val built = Dedup.nearDupIndex(corpus, md5Keys = md5Keys)
+      val idx = if (md5Keys) built else built.localCheckpoint()
+      def gate(df: org.apache.spark.sql.DataFrame,
+               ix: org.apache.spark.sql.DataFrame) =
+        Dedup.nearDupFlag(df, ix, md5Keys = md5Keys)
       val lookup = gate(incoming, idx)
       assert(!plan(lookup).contains("Join"),
         s"$family: a small index must take the lookup:\n${plan(lookup)}")

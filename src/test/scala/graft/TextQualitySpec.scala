@@ -1075,8 +1075,8 @@ class TextQualitySpec extends SparkSpec {
       .select(col("doc_id"), col("lang"), col("text"))
     // an index over half the corpus: the other half mostly misses
     val half = corpus.filter(col("doc_id") % 2 === 0)
-    val idx = Dedup.nearDupIndex(half).localCheckpoint()
-    val idxMd5 = Dedup.nearDupIndexMd5(half).localCheckpoint()
+    val families = Seq(false, true).map(md5Keys =>
+      md5Keys -> Dedup.nearDupIndex(half, md5Keys = md5Keys).localCheckpoint())
     val prof = TextOps.dsirProfile(corpus,
       corpus.filter(col("lang") === "en")).localCheckpoint()
     val edges = Seq[String](null, "", "   ", "word", "two words",
@@ -1094,18 +1094,17 @@ class TextQualitySpec extends SparkSpec {
         .otherwise(lit(0L))
     }
     val dsir = dsir_sum(text, 2, "dsir", terms)
-    // (name, kernel columns, the chains they replaced); the md5 chain's
-    // lambdas keep it out of generated code, so each side is its own
-    // projection and rows pair up by text
-    val pairs = Seq(
-      ("near_dup_hit", Seq(Dedup.nearDupLookup(text, idx, 8, 4, 3,
-        md5Keys = false)), Seq(reference(idx, md5Keys = false))),
-      ("near_dup_hit md5", Seq(Dedup.nearDupLookup(text, idxMd5, 8, 4, 3,
-        md5Keys = true)), Seq(reference(idxMd5, md5Keys = true))),
+    // (name, kernel columns, the chains they replaced); each side is its
+    // own projection and rows pair up by text
+    val pairs = families.map { case (md5Keys, idx) =>
+      (if (md5Keys) "near_dup_hit md5" else "near_dup_hit",
+        Seq(Dedup.nearDupLookup(text, idx, 8, 4, 3, md5Keys)),
+        Seq(reference(idx, md5Keys)))
+    } :+
       ("dsir_grams, dsir_log_weight",
         TextOps.dsirColumns(text, prof, 2, 4096, "dsir"),
         Seq(coalesce(dsir("n_grams"), lit(0L)),
-          round(dsir("sum").cast("double"), 6))))
+          round(dsir("sum").cast("double"), 6)))
     def sortedByText(rs: Array[org.apache.spark.sql.Row]) =
       rs.sortBy(r => (r.isNullAt(0), Option(r.getString(0)).getOrElse("")))
     // a projection over local rows is folded into the local relation at

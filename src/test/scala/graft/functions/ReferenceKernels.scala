@@ -9,11 +9,63 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The kernels the ingest screen's `near_dup_hit` and DSIR kernels
-  * replaced, kept as the references TextQualitySpec pins them against:
-  * `band_hit` over the band-key columns and the `dsir_sum` struct. */
+/** Formulations the engine's native kernels replaced, kept as the
+  * references the specs pin them against: the interpreted HOF MinHash
+  * signatures behind `minhash_sig`/`minhash_sig_md5` (TextDedupSpec),
+  * and `band_hit` over the band-key columns and the `dsir_sum` struct
+  * behind the ingest screen's `near_dup_hit` and DSIR kernels
+  * (TextQualitySpec). */
 object ReferenceKernels {
   import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+  import org.apache.spark.sql.functions._
+
+  /** MinHash signature as an array<long> of `numHashes` minima over word
+    * `shingleSize`-shingles. Hash family: xxhash64(shingle, seed_i),
+    * with each shingle hashed WITHOUT materializing its string: one
+    * multi-argument xxhash64 over the n tokens of each window.
+    *
+    * Single-pass formulation: one `aggregate` over the shingle array
+    * updating all minima via `zip_with`, so the shingle builder is
+    * evaluated once per row — NOT once per hash function. Every lambda
+    * reads ONLY its input elements: a lambda capturing an outer
+    * expression re-evaluates it per array element. */
+  def minHashSignature(text: Column, numHashes: Int = 32,
+                       shingleSize: Int = 3): Column = {
+    val toks = split(lower(trim(text)), "\\s+")
+    val rolled = (2 to shingleSize).foldLeft(transform(toks, t => xxhash64(t))) {
+      (acc, k) => zip_with(acc, slice(toks, k, 1 << 30),
+        (a, b) => xxhash64(a, b))
+    }
+    val shingles = array_distinct(slice(rolled, lit(1),
+      greatest(size(toks) - (shingleSize - 1), lit(0))))
+    val init = transform(sequence(lit(1), lit(numHashes)),
+      _ => lit(Long.MaxValue))
+    aggregate(shingles, init, (acc, s) =>
+      zip_with(acc,
+        transform(sequence(lit(0), lit(numHashes - 1)), i => xxhash64(s, i)),
+        (a, h) => least(a, h)))
+  }
+
+  /** md5-derived MinHash signature — cross-engine recomputable (any SQL
+    * engine with md5 can rebuild it, which is how the DuckDB oracle checks
+    * t03 end to end): x = first 32 bits of md5(shingle), then the classic
+    * universal family h_i(x) = (a_i*x + b_i) mod (2^31-1) with
+    * deterministic a_i = 2654435761*(i+1) mod p, b_i = 40503*(i+1) mod p.
+    * All arithmetic stays under 2^63 so Java long and SQL BIGINT agree. */
+  def minHashSignatureMd5(text: Column, numHashes: Int = 32,
+                          shingleSize: Int = 3): Column = {
+    val P = 2147483647L
+    val xs = transform(graft.ops.TextOps.wordShingles(text, shingleSize),
+      s => graft.ops.TextOps.md5U32(s))
+    val init = transform(sequence(lit(1), lit(numHashes)),
+      _ => lit(Long.MaxValue))
+    aggregate(xs, init, (acc, x) =>
+      zip_with(acc,
+        transform(sequence(lit(0), lit(numHashes - 1)), i =>
+          (((lit(2654435761L) * (i + 1)) % P) * x +
+            ((lit(40503L) * (i + 1)) % P)) % P),
+        (a, h) => least(a, h)))
+  }
 
   /** [[DsirSumExpr]]'s sum is typed as a SUM over decimal(27,12) terms. */
   final val DsirSumPrecision = 37
